@@ -85,6 +85,22 @@ def register(name: str, oracle: str | None = None) -> Callable[[QueryFn], QueryF
     return wrap
 
 
+def materialize(df: DataFrame, name: str) -> DataFrame:
+    """Compute ``df`` once and register it as temp view ``name``.
+
+    Spark inlines CTEs, so a WITH-subtree referenced N times runs N
+    times; self-joining pipelines (LSH bands, simhash chunks) would pay
+    the whole hash pipeline repeatedly. ``localCheckpoint`` materializes
+    the intermediate (GC-managed, no lingering cache entries), and a
+    temp view exposes it to the tail SQL. DuckDB materializes multiply-
+    referenced CTEs on its own, so oracles keep the single-statement
+    form. Returns the checkpointed frame.
+    """
+    out = df.localCheckpoint(eager=True)
+    out.createOrReplaceTempView(name)
+    return out
+
+
 def queries() -> dict[str, QueryFn]:
     return {q.name: q.fn for q in QUERIES.values()}
 

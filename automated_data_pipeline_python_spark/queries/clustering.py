@@ -24,8 +24,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from automated_data_pipeline_python_spark.queries.catalog import register
-from automated_data_pipeline_python_spark.tables import load_scaled
+from automated_data_pipeline_python_spark.queries.catalog import materialize, register
+from automated_data_pipeline_python_spark.tables import register_views
 
 _K = 8  # seed cells: embeddings of vec_id < _K (same seeding as IVF)
 
@@ -260,11 +260,9 @@ def kmeans_lloyd_refine(spark: SparkSession, sf_dir: str) -> DataFrame:
     (guide §5: cache only when recomputing costs more than the
     materialization).
     """
-    load_scaled(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
+    register_views(spark, sf_dir, scaled=("embeddings",))
     spark.sql(_SPARK_BASE_DERIVE).createOrReplaceTempView("km_base")
-    spark.sql(_SPARK_C1_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "km_c1"
-    )
+    materialize(spark.sql(_SPARK_C1_SQL), "km_c1")
     return spark.sql(_SPARK_SQL)
 
 
@@ -357,10 +355,8 @@ def embedding_power_iteration(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark inlines CTEs, so it is materialized once via localCheckpoint
     (DuckDB materializes shared CTEs itself — single-statement oracle).
     """
-    load_scaled(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
-    spark.sql(_PI_X_SPARK).localCheckpoint(eager=True).createOrReplaceTempView(
-        "pi_x"
-    )
+    register_views(spark, sf_dir, scaled=("embeddings",))
+    materialize(spark.sql(_PI_X_SPARK), "pi_x")
     return spark.sql(_power_iter_tail("pi_x"))
 
 
@@ -452,30 +448,34 @@ def selection_kcenter_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-executes the whole prefix exponentially (the BPE-rounds
     discipline).
     """
-    load_scaled(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
+    register_views(spark, sf_dir, scaled=("embeddings",))
     dot = lambda a, b: _SPARK_DOT.format(a=a, b=b)  # noqa: E731
     d2 = lambda bn, a, b, cn: _kc_d2(dot, bn, a, b, cn)  # noqa: E731
-    spark.sql(_SPARK_BASE_DERIVE).localCheckpoint(eager=True).createOrReplaceTempView(
-        "kc_base"
-    )
+    materialize(spark.sql(_SPARK_BASE_DERIVE), "kc_base")
     spark.sql(
         "SELECT vec_id, v, nrm2 FROM kc_base ORDER BY vec_id LIMIT 1"
     ).createOrReplaceTempView("kc_s0")
-    spark.sql(
-        "SELECT b.vec_id, b.v, b.nrm2, "
-        + d2("b.nrm2", "b.v", "s.v", "s.nrm2")
-        + " AS dmin FROM kc_base b CROSS JOIN kc_s0 s"
-    ).localCheckpoint(eager=True).createOrReplaceTempView("kc_d1")
+    materialize(
+        spark.sql(
+            "SELECT b.vec_id, b.v, b.nrm2, "
+            + d2("b.nrm2", "b.v", "s.v", "s.nrm2")
+            + " AS dmin FROM kc_base b CROSS JOIN kc_s0 s"
+        ),
+        "kc_d1",
+    )
     for r in range(1, _KC_ROUNDS + 1):
         spark.sql(
             f"SELECT vec_id, v, nrm2, dmin FROM kc_d{r}"
             f" ORDER BY dmin DESC, vec_id LIMIT 1"
         ).createOrReplaceTempView(f"kc_s{r}")
-        spark.sql(
-            f"SELECT d.vec_id, d.v, d.nrm2, "
-            f"least(d.dmin, {d2('d.nrm2', 'd.v', 's.v', 's.nrm2')}) AS dmin "
-            f"FROM kc_d{r} d CROSS JOIN kc_s{r} s"
-        ).localCheckpoint(eager=True).createOrReplaceTempView(f"kc_d{r + 1}")
+        materialize(
+            spark.sql(
+                f"SELECT d.vec_id, d.v, d.nrm2, "
+                f"least(d.dmin, {d2('d.nrm2', 'd.v', 's.v', 's.nrm2')}) AS dmin "
+                f"FROM kc_d{r} d CROSS JOIN kc_s{r} s"
+            ),
+            f"kc_d{r + 1}",
+        )
     picks = ["SELECT 0 AS round, vec_id, 0e0 AS sel_dist2 FROM kc_s0"] + [
         f"SELECT {r} AS round, vec_id, dmin AS sel_dist2 FROM kc_s{r}"
         for r in range(1, _KC_ROUNDS + 1)
@@ -624,10 +624,8 @@ def clustering_davies_bouldin(spark: SparkSession, sf_dir: str) -> DataFrame:
     mean member distance (exact scaled-integer sums), worst
     same-partner ratio, and the global index — the internal quality
     gate that scales where all-pairs silhouette cannot."""
-    load_scaled(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
-    spark.sql(_SPARK_BASE_DERIVE).localCheckpoint(eager=True).createOrReplaceTempView(
-        "km_base"
-    )
+    register_views(spark, sf_dir, scaled=("embeddings",))
+    materialize(spark.sql(_SPARK_BASE_DERIVE), "km_base")
     return spark.sql(_DB_SPARK_SQL)
 
 
@@ -736,10 +734,8 @@ def clustering_label_purity(spark: SparkSession, sf_dir: str) -> DataFrame:
     one-step Lloyd partition, with member-weighted overall purity —
     the external cluster-quality gate beside Davies-Bouldin's
     internal one."""
-    load_scaled(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
-    spark.sql(_SPARK_BASE_DERIVE).localCheckpoint(eager=True).createOrReplaceTempView(
-        "km_base"
-    )
+    register_views(spark, sf_dir, scaled=("embeddings",))
+    materialize(spark.sql(_SPARK_BASE_DERIVE), "km_base")
     return spark.sql(_PURITY_SPARK_SQL)
 
 
@@ -871,13 +867,9 @@ def clustering_adjusted_rand(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition and the ground-truth labels — the chance-corrected
     external gate purity cannot be (exact doubled DECIMAL pair sums;
     the contingency grid materializes once for its seven references)."""
-    load_scaled(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
-    spark.sql(_SPARK_BASE_DERIVE).localCheckpoint(eager=True).createOrReplaceTempView(
-        "km_base"
-    )
-    spark.sql(_ARI_GRID_SPARK_SQL).localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("ari_cl")
+    register_views(spark, sf_dir, scaled=("embeddings",))
+    materialize(spark.sql(_SPARK_BASE_DERIVE), "km_base")
+    materialize(spark.sql(_ARI_GRID_SPARK_SQL), "ari_cl")
     return spark.sql("WITH " + _ARI_TAIL.format(cl="ari_cl"))
 
 
@@ -1005,8 +997,6 @@ def clustering_silhouette_simplified(spark: SparkSession, sf_dir: str) -> DataFr
     partition — per-cell and overall means from snapped per-point
     scores, linear in members where all-pairs silhouette is
     quadratic."""
-    load_scaled(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
-    spark.sql(_SPARK_BASE_DERIVE).localCheckpoint(eager=True).createOrReplaceTempView(
-        "km_base"
-    )
+    register_views(spark, sf_dir, scaled=("embeddings",))
+    materialize(spark.sql(_SPARK_BASE_DERIVE), "km_base")
     return spark.sql(_SIL_SPARK_SQL)

@@ -25,7 +25,7 @@ from automated_data_pipeline_python_spark.functions.text import (
     spark_stopword_hits,
 )
 from automated_data_pipeline_python_spark.queries.catalog import register
-from automated_data_pipeline_python_spark.tables import load, load_scaled
+from automated_data_pipeline_python_spark.tables import register_views
 
 _S_TOK = SPARK_TOKENS.format(col="text")
 _D_TOK = DUCK_TOKENS.format(col="text")
@@ -36,7 +36,6 @@ _NORM_DUCK = "lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))"
 
 _MIN_TOKENS = 20
 _MIN_DISTINCT_RATIO = 0.2
-_KEEP_LANG = "en"
 
 
 _FUNNEL_SPARK_SQL = f"""
@@ -129,5 +128,5 @@ def corpus_curation_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc_id among docs that survived both gates, picked by a window over
     the content hash so no self-join or second scan is needed.
     """
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    register_views(spark, sf_dir, scaled=("documents",))
     return spark.sql(_FUNNEL_SPARK_SQL)

@@ -33,8 +33,8 @@ from automated_data_pipeline_python_spark.functions.text import (
     duck_stopword_hits,
     spark_stopword_hits,
 )
-from automated_data_pipeline_python_spark.queries.catalog import register
-from automated_data_pipeline_python_spark.tables import load_scaled
+from automated_data_pipeline_python_spark.queries.catalog import materialize, register
+from automated_data_pipeline_python_spark.tables import register_views
 
 _S_TOK = SPARK_TOKENS.format(col="text")
 _D_TOK = DUCK_TOKENS.format(col="text")
@@ -149,7 +149,7 @@ def quality_logistic_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     through; the expensive dedup/ANN stages downstream see only the
     kept fraction.
     """
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    register_views(spark, sf_dir, scaled=("documents",))
     return spark.sql(_QUALITY_SPARK_SQL)
 
 
@@ -210,14 +210,14 @@ def doc_unigram_surprisal(spark: SparkSession, sf_dir: str) -> DataFrame:
     construction. mean_surprisal sums ~100 ln() terms — accumulated
     cross-engine ulp error is ~1e-13, far inside the 1e-6 snap.
     """
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    spark.sql(
+    register_views(spark, sf_dir, scaled=("documents",))
+    materialize(spark.sql(
         f"""
         SELECT doc_id, token
         FROM (SELECT doc_id, {_S_TOK} AS w FROM documents)
         LATERAL VIEW explode(w) t AS token
         """
-    ).localCheckpoint(eager=True).createOrReplaceTempView("ug_tok")
+    ), "ug_tok")
     return spark.sql(
         "WITH tok AS (SELECT * FROM ug_tok),\n"
         + _surprisal_tail("CAST(({a}) DIV ({b}) AS BIGINT)")
@@ -287,14 +287,14 @@ WITH tok AS (
 def sample_importance_dsir(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DSIR importance weights: top-50 candidates by unigram
     log-likelihood ratio toward the 'src0' target distribution."""
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    spark.sql(
+    register_views(spark, sf_dir, scaled=("documents",))
+    materialize(spark.sql(
         f"""
         SELECT doc_id, source, token
         FROM (SELECT doc_id, source, {_S_TOK} AS w FROM documents)
         LATERAL VIEW explode(w) t AS token
         """
-    ).localCheckpoint(eager=True).createOrReplaceTempView("dsir_tok")
+    ), "dsir_tok")
     return spark.sql(f"WITH tok AS (SELECT * FROM dsir_tok),\n{_DSIR_TAIL}")
 
 
@@ -386,10 +386,8 @@ _GOPHER_DUCK_SQL = (
 @register("quality_gopher_rules", oracle=_GOPHER_DUCK_SQL)
 def quality_gopher_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-rule pass/fail census for a Gopher-style filter suite."""
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    spark.sql(_gopher_feats_sql(True)).localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("gopher_census")
+    register_views(spark, sf_dir, scaled=("documents",))
+    materialize(spark.sql(_gopher_feats_sql(True)), "gopher_census")
     return spark.sql(_GOPHER_TAIL.replace("{rel}", "gopher_census"))
 
 
@@ -453,11 +451,14 @@ _OOV_DUCK_SQL = (
 @register("vocab_coverage_oov_curve", oracle=_OOV_DUCK_SQL)
 def vocab_coverage_oov_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Held-out token coverage and OOV rate vs top-k training vocab."""
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    spark.sql(
-        f"SELECT source, tok AS term FROM "
-        f"(SELECT source, explode({_S_TOK}) AS tok FROM documents)"
-    ).localCheckpoint(eager=True).createOrReplaceTempView("oov_tok")
+    register_views(spark, sf_dir, scaled=("documents",))
+    materialize(
+        spark.sql(
+            f"SELECT source, tok AS term FROM "
+            f"(SELECT source, explode({_S_TOK}) AS tok FROM documents)"
+        ),
+        "oov_tok",
+    )
     return spark.sql(
         "WITH tok AS (SELECT * FROM oov_tok),\n"
         + _OOV_TAIL.replace(
@@ -588,7 +589,7 @@ def quality_calibration_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     ceil-division (no corpus-wide ntile window), and the output is
     ≤10 rows.
     """
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    register_views(spark, sf_dir, scaled=("documents",))
     return spark.sql(_CALIB_SPARK_SQL)
 
 
@@ -694,7 +695,7 @@ def quality_auc_rank(spark: SparkSession, sf_dir: str) -> DataFrame:
     anywhere; ties resolved by the average-rank convention in exact
     integers over histogram cells.
     """
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    register_views(spark, sf_dir, scaled=("documents",))
     return spark.sql(_AUC_SPARK_SQL)
 
 
@@ -830,7 +831,7 @@ def quality_brier_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     decomposed into reliability − resolution + uncertainty (+ honest
     within-bin residual). One map-only featurize pass; everything
     after the 10-bin rollup is scalar."""
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    register_views(spark, sf_dir, scaled=("documents",))
     return spark.sql(_BRIER_SPARK_SQL)
 
 
@@ -952,7 +953,7 @@ def quality_pr_auc(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Average precision (PR-AUC) and best-F1 operating point of the
     logistic score against Gopher-rule labels — per-distinct-score PR
     steps off the bounded score histogram, no per-row global rank."""
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    register_views(spark, sf_dir, scaled=("documents",))
     return spark.sql(_PR_SPARK_SQL)
 
 
@@ -1082,7 +1083,7 @@ def quality_auc_delong_ci(spark: SparkSession, sf_dir: str) -> DataFrame:
     off the bounded score histogram in exact integers (the mean
     placement IS the rank AUC, so the point estimate matches
     quality_auc_rank bit-for-bit)."""
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    register_views(spark, sf_dir, scaled=("documents",))
     return spark.sql(_DELONG_SPARK_SQL)
 
 
@@ -1180,7 +1181,7 @@ def quality_spiegelhalter_z(spark: SparkSession, sf_dir: str) -> DataFrame:
     the Gopher-rule labels: bin-free miscalibration hypothesis test
     with exact histogram-cell sums and the shared normal polynomial
     p-value."""
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    register_views(spark, sf_dir, scaled=("documents",))
     return spark.sql(_SPIEG_SPARK_SQL)
 
 
@@ -1270,7 +1271,7 @@ def quality_fairness_by_source(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source fairness audit of the logistic quality gate: keep
     rates, disparate-impact ratio vs the most-kept source (80% rule),
     and equalized-odds TPR/FPR against the Gopher-rule labels."""
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    register_views(spark, sf_dir, scaled=("documents",))
     return spark.sql(_FAIR_SPARK_SQL)
 
 
@@ -1371,7 +1372,7 @@ def quality_raters_kendall_tau(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kendall tau-b (full tie correction) and Goodman-Kruskal gamma
     between the logistic gate's score deciles and the Gopher verdict —
     the ordinal agreement question Cohen's kappa can't ask."""
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    register_views(spark, sf_dir, scaled=("documents",))
     return spark.sql(_TAU_SPARK_SQL)
 
 
@@ -1439,7 +1440,7 @@ def quality_mcc_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     verdict at the 0.5 shipping threshold: precision/recall/F1,
     balanced accuracy, informedness, and Matthews correlation — exact
     integer cells, DECIMAL cross products."""
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    register_views(spark, sf_dir, scaled=("documents",))
     return spark.sql(_MCC_SPARK_SQL)
 
 
@@ -1510,7 +1511,7 @@ def quality_log_loss(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mean log-loss of the logistic gate against the Gopher verdict
     (clamped-ln guard, per-row snap, exact-integer sum) with the Brier
     score and prevalence-entropy baseline beside it."""
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    register_views(spark, sf_dir, scaled=("documents",))
     return spark.sql(_LOGLOSS_SPARK_SQL)
 
 
@@ -1577,7 +1578,7 @@ def quality_ks_separation(spark: SparkSession, sf_dir: str) -> DataFrame:
     Gopher-positive and -negative score distributions, with the score
     where it occurs — exact integer cross-multiplied gaps off the
     shared snapped-score histogram."""
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    register_views(spark, sf_dir, scaled=("documents",))
     return spark.sql(_KSSEP_SPARK_SQL)
 
 
@@ -1648,7 +1649,7 @@ def quality_cumulative_gains(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cumulative gains and lift per score-descending population decile
     — the targeting table beside the qini/uplift family, off the
     distinct-score CDF ceil-division buckets."""
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    register_views(spark, sf_dir, scaled=("documents",))
     return spark.sql(
         _gains_sql(_FEATS_SPARK_HEADER, "CAST(({a}) DIV ({b}) AS BIGINT)")
     )

@@ -64,7 +64,7 @@ from automated_data_pipeline_python_spark.functions.text import (
     spark_word_shingles,
 )
 from automated_data_pipeline_python_spark.queries.catalog import register
-from automated_data_pipeline_python_spark.tables import load_scaled
+from automated_data_pipeline_python_spark.tables import register_views
 
 _S_TOK = SPARK_TOKENS.format(col="text")
 _D_TOK = DUCK_TOKENS.format(col="text")
@@ -153,7 +153,7 @@ def corpus_boilerplate_ngrams(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct on (doc, shingle), one df aggregation with map-side
     combine, one shingle-keyed join); never materializes doc pairs.
     """
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    register_views(spark, sf_dir, scaled=("documents",))
     return spark.sql(_BP_SPARK_SQL)
 
 
@@ -288,7 +288,7 @@ def quality_naive_bayes_gate(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary-sized (grows sublinearly) but carries no broadcast hint
     — AQE broadcasts it while small.
     """
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    register_views(spark, sf_dir, scaled=("documents",))
     return spark.sql(_nb_spark_sql())
 
 
@@ -350,7 +350,7 @@ def text_lexical_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one (source, token) group-by with map-side combine, then a
     source-level rollup; spectrum rows are vocabulary-sized.
     """
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    register_views(spark, sf_dir, scaled=("documents",))
     return spark.sql(_LD_SPARK_SQL)
 
 
@@ -469,7 +469,7 @@ def corpus_source_resemblance_kmv(spark: SparkSession, sf_dir: str) -> DataFrame
     signatures (sources² pairs, sources is a bounded domain); the exact
     path's self-join fans out by sources-per-shingle, a constant.
     """
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    register_views(spark, sf_dir, scaled=("documents",))
     return spark.sql(_kmv_spark_sql())
 
 
@@ -510,9 +510,7 @@ def dq_l_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one group-by on the QI key with a distinct-count, then a
     bounded rollup over l ≤ 5.
     """
-    from automated_data_pipeline_python_spark.tables import load
-
-    load(spark, sf_dir, "customer").createOrReplaceTempView("customer")
+    register_views(spark, sf_dir, "customer")
     return spark.sql(_LDIV_SQL)
 
 
@@ -565,7 +563,7 @@ def dq_dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one group-by plus a constant-time noise expression per
     group; group count is the bounded source domain.
     """
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    register_views(spark, sf_dir, scaled=("documents",))
     return spark.sql(_dp_sql(spark_hash60("concat('dp-', source)")))
 
 
@@ -670,7 +668,7 @@ def mixture_doremi_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     the stream (AQE-broadcast while small) + bounded source-level
     algebra — the same plan family as doc_unigram_surprisal.
     """
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    register_views(spark, sf_dir, scaled=("documents",))
     return spark.sql(_DOREMI_SPARK_SQL)
 
 
@@ -741,7 +739,7 @@ def corpus_source_ablation_loo(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one map-only featurize pass + one source group-by; every
     delta is moment subtraction, never a per-source re-scan.
     """
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    register_views(spark, sf_dir, scaled=("documents",))
     return spark.sql(_ABLATION_SPARK_SQL)
 
 
@@ -847,7 +845,5 @@ def mixture_unimax_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     3-epoch cap, the capped flag, the allocated tokens under a 2.9x-total
     budget, and realized epochs — equal shares with slack
     redistribution in one closed-form pass."""
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView(
-        "documents"
-    )
+    register_views(spark, sf_dir, scaled=("documents",))
     return spark.sql(_UNIMAX_SPARK_SQL)

@@ -35,8 +35,8 @@ from automated_data_pipeline_python_spark.functions.text import (
     spark_hash60,
     spark_word_shingles,
 )
-from automated_data_pipeline_python_spark.queries.catalog import register
-from automated_data_pipeline_python_spark.tables import load, load_scaled
+from automated_data_pipeline_python_spark.queries.catalog import materialize, register
+from automated_data_pipeline_python_spark.tables import load_scaled, register_views
 
 _S_TOK = SPARK_TOKENS.format(col="text")
 _D_TOK = DUCK_TOKENS.format(col="text")
@@ -51,30 +51,6 @@ _BAND = 4
 _PRIME = 2_147_483_647
 _B_MULT = 12_582_917
 _JACCARD_THRESHOLD = 0.5
-
-
-def _docs_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(sql)
-
-
-def _materialize_view(df: DataFrame, name: str) -> None:
-    """Compute once and register for reuse within a query.
-
-    Spark inlines CTEs, so a WITH-subtree referenced N times runs N
-    times; self-joining pipelines (LSH bands, simhash chunks) would pay
-    the whole hash pipeline repeatedly. ``localCheckpoint`` materializes
-    the intermediate (GC-managed, no lingering cache entries), and a
-    temp view exposes it to the tail SQL. DuckDB materializes multiply-
-    referenced CTEs on its own, so oracles keep the single-statement
-    form.
-    """
-    df.localCheckpoint(eager=True).createOrReplaceTempView(name)
-
-
-def _emb_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
-    load_scaled(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
-    return spark.sql(sql)
 
 
 # ---------------------------------------------------------------------------
@@ -113,7 +89,8 @@ def dedup_exact_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     mirrors the reference's cache key (sha256 of normalized content,
     reference pipeline/utils/cache.py:58-74).
     """
-    return _docs_sql(spark, sf_dir, _EXACT_SPARK_SQL)
+    register_views(spark, sf_dir, scaled=("documents",))
+    return spark.sql(_EXACT_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -301,8 +278,8 @@ def dedup_minhash_lsh_uncapped(spark: SparkSession, sf_dir: str) -> DataFrame:
     path. tests/test_mllib_parity.py measures the cap's recall delta
     against exact-Jaccard ground truth.
     """
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    _materialize_view(spark.sql(_MINHASH_SETS_SPARK), "mh_sets")
+    register_views(spark, sf_dir, scaled=("documents",))
+    materialize(spark.sql(_MINHASH_SETS_SPARK), "mh_sets")
     return spark.sql(_MINHASH_TAIL_SPARK)
 
 
@@ -432,7 +409,8 @@ _SIMHASH_DUCK_SQL = _SIMHASH_CORE_DUCK + "SELECT doc_id, simhash FROM sig"
 @register("dedup_simhash_signatures", oracle=_SIMHASH_DUCK_SQL)
 def dedup_simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
     """32-bit SimHash per document (sign of per-bit weighted token sums)."""
-    return _docs_sql(spark, sf_dir, _SIMHASH_SPARK_SQL)
+    register_views(spark, sf_dir, scaled=("documents",))
+    return spark.sql(_SIMHASH_SPARK_SQL)
 
 
 # Chunk-blocked near-dup pairs: 4 byte-chunks of the signature; pairs
@@ -501,9 +479,8 @@ def dedup_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     no DISTINCT exchange follows the join. Pigeonhole: hamming ≤ 3 over
     4 chunks guarantees ≥ 1 agreeing chunk, so blocking stays complete.
     """
-    _materialize_view(
-        _docs_sql(spark, sf_dir, _SIMHASH_SPARK_SQL), "simhash_sig"
-    )
+    register_views(spark, sf_dir, scaled=("documents",))
+    materialize(spark.sql(_SIMHASH_SPARK_SQL), "simhash_sig")
     return spark.sql(_SIMHASH_PAIRS_TAIL_SPARK)
 
 
@@ -615,8 +592,8 @@ def dedup_ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     DISTINCT exchange) and materialized once (referenced three times);
     discovery shuffles (doc_id, h) ints, never shingle strings.
     """
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    _materialize_view(spark.sql(_MINHASH_SETS_SPARK), "ng_sets")
+    register_views(spark, sf_dir, scaled=("documents",))
+    materialize(spark.sql(_MINHASH_SETS_SPARK), "ng_sets")
     return spark.sql(_NGRAM_SETS_TAIL_SPARK)
 
 
@@ -781,10 +758,10 @@ def dedup_ngram_jaccard_capped(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice); the cap's drop-hot-only-pairs semantics are enforced
     exactly on the threshold survivors via the full string sets.
     """
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    _materialize_view(spark.sql(_CAPPED_SETS_SPARK), "cp_sets")
-    _materialize_view(spark.sql(_CAPPED_HOT_SPARK), "cp_hot")
-    _materialize_view(spark.sql(_CAPPED_COLD_SPARK), "cp_cold")
+    register_views(spark, sf_dir, scaled=("documents",))
+    materialize(spark.sql(_CAPPED_SETS_SPARK), "cp_sets")
+    materialize(spark.sql(_CAPPED_HOT_SPARK), "cp_hot")
+    materialize(spark.sql(_CAPPED_COLD_SPARK), "cp_cold")
     return spark.sql(_NGRAM_CAPPED_TAIL_SPARK)
 
 
@@ -856,8 +833,8 @@ def dedup_minhash_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact-Jaccard ground truth is measured in
     tests/test_mllib_parity.py.
     """
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    _materialize_view(spark.sql(_MINHASH_SETS_SPARK), "mh_sets")
+    register_views(spark, sf_dir, scaled=("documents",))
+    materialize(spark.sql(_MINHASH_SETS_SPARK), "mh_sets")
     return spark.sql(_MINHASH_CAPPED_TAIL_SPARK)
 
 
@@ -913,7 +890,8 @@ def dedup_embedding_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     is Σ per-block² rather than global²; at 100 TB the block key comes
     from a coarse quantizer (IVF centroid), same plan shape.
     """
-    return _emb_sql(spark, sf_dir, _EMB_SPARK_SQL)
+    register_views(spark, sf_dir, scaled=("embeddings",))
+    return spark.sql(_EMB_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1015,7 +993,7 @@ def dedup_remove_near_duplicates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     docs = load_scaled(spark, sf_dir, "documents")
     docs.createOrReplaceTempView("documents")
-    _materialize_view(spark.sql(_MINHASH_SETS_SPARK), "ng_sets")
+    materialize(spark.sql(_MINHASH_SETS_SPARK), "ng_sets")
     pairs = spark.sql(_NGRAM_SETS_TAIL_SPARK).select("doc_a", "doc_b")
     dupes = (
         connected_components(pairs, src="doc_a", dst="doc_b")
@@ -1040,8 +1018,8 @@ def dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         connected_components,
     )
 
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    _materialize_view(spark.sql(_MINHASH_SETS_SPARK), "ng_sets")
+    register_views(spark, sf_dir, scaled=("documents",))
+    materialize(spark.sql(_MINHASH_SETS_SPARK), "ng_sets")
     pairs = spark.sql(_NGRAM_SETS_TAIL_SPARK).select("doc_a", "doc_b")
     return connected_components(pairs, src="doc_a", dst="doc_b").select(
         F.col("node").alias("doc_id"), "component"
@@ -1120,8 +1098,6 @@ SELECT s.vec_id, s.cell, (d.vec_id IS NULL) AS kept, d.dup_of
 FROM sd_asn s LEFT JOIN dups d ON s.vec_id = d.vec_id
 """
 
-_SD_DUCK_DOT_AB = "list_dot_product(va.v, vb.v)"
-
 _SEMDEDUP_DUCK_SQL = f"""
 WITH base AS (
     SELECT vec_id, embedding::DOUBLE[] AS v FROM embeddings
@@ -1177,8 +1153,8 @@ def semdedup_cluster_prune(spark: SparkSession, sf_dir: str) -> DataFrame:
     the final projection read it; Spark would otherwise inline the CTE
     three times).
     """
-    load_scaled(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
-    _materialize_view(spark.sql(_SD_ASSIGN_SPARK), "sd_asn")
+    register_views(spark, sf_dir, scaled=("embeddings",))
+    materialize(spark.sql(_SD_ASSIGN_SPARK), "sd_asn")
     return spark.sql(_SD_TAIL_SPARK)
 
 
@@ -1266,9 +1242,9 @@ def dedup_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     slice in production); the LSH side is the production pipeline
     unchanged. Both read the one materialized per-doc set relation.
     """
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    _materialize_view(spark.sql(_MINHASH_SETS_SPARK), "mh_sets")
-    _materialize_view(spark.sql(_LSH_EVAL_SPARK_TRUTH), "truth_pairs")
+    register_views(spark, sf_dir, scaled=("documents",))
+    materialize(spark.sql(_MINHASH_SETS_SPARK), "mh_sets")
+    materialize(spark.sql(_LSH_EVAL_SPARK_TRUTH), "truth_pairs")
     spark.sql(_MINHASH_TAIL_SPARK).createOrReplaceTempView("lsh_pairs")
     return spark.sql(_LSH_EVAL_TAIL_SPARK)
 
@@ -1392,8 +1368,8 @@ def dedup_incremental_minhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     not a corpus rescan. The per-doc set relation is materialized once
     (signature, probe, and verify stages read it).
     """
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    _materialize_view(spark.sql(_MINHASH_SETS_SPARK), "inc_sets")
+    register_views(spark, sf_dir, scaled=("documents",))
+    materialize(spark.sql(_MINHASH_SETS_SPARK), "inc_sets")
     return spark.sql(_INC_TAIL_SPARK)
 
 
@@ -1478,8 +1454,8 @@ WHERE CAST(isect AS DOUBLE) / least(na, nb) >= {_CONTAIN_THRESHOLD}
 @register("dedup_ngram_containment", oracle=_CONTAIN_DUCK_SQL)
 def dedup_ngram_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Shingle-containment pairs ≥ 0.8 with the jaccard contrast column."""
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    _materialize_view(spark.sql(_MINHASH_SETS_SPARK), "ct_sets")
+    register_views(spark, sf_dir, scaled=("documents",))
+    materialize(spark.sql(_MINHASH_SETS_SPARK), "ct_sets")
     return spark.sql(_CONTAIN_SETS_TAIL_SPARK)
 
 
@@ -1620,8 +1596,8 @@ ORDER BY doc_a
 @register("dedup_minhash_estimate_accuracy", oracle=_MH_EST_DUCK_SQL)
 def dedup_minhash_estimate_accuracy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Signature-agreement jaccard estimates vs exact, per sampled pair."""
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    _materialize_view(spark.sql(_MINHASH_SETS_SPARK), "est_sets")
+    register_views(spark, sf_dir, scaled=("documents",))
+    materialize(spark.sql(_MINHASH_SETS_SPARK), "est_sets")
     return spark.sql(_MH_EST_SETS_TAIL_SPARK)
 
 
@@ -1802,9 +1778,9 @@ def dedup_prefix_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     appear only in the map-side set materialization and the exact
     verification of the prefiltered survivors.
     """
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    _materialize_view(spark.sql(_SETS_SHS_ONLY_SPARK), "pf_sets")
-    _materialize_view(spark.sql(_PF_H_SPARK), "pf_h")
+    register_views(spark, sf_dir, scaled=("documents",))
+    materialize(spark.sql(_SETS_SHS_ONLY_SPARK), "pf_sets")
+    materialize(spark.sql(_PF_H_SPARK), "pf_h")
     return spark.sql(_PF_TAIL_SPARK)
 
 
@@ -1924,5 +1900,5 @@ starts AS (
 @register("dedup_cdc_chunks", oracle=_CDC_DUCK_SQL)
 def dedup_cdc_chunks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Content-defined chunk boundaries + chunk-hash dedup census."""
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    register_views(spark, sf_dir, scaled=("documents",))
     return spark.sql(_CDC_SPARK_SQL)

@@ -6,8 +6,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 
 from automated_data_pipeline_python_spark import quality as Q
-from automated_data_pipeline_python_spark.queries.catalog import register
-from automated_data_pipeline_python_spark.tables import load
+from automated_data_pipeline_python_spark.queries.catalog import materialize, register
+from automated_data_pipeline_python_spark.tables import load, register_views
 
 
 @register(
@@ -168,10 +168,8 @@ def profile_orders_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     each re-run the whole aggregation scan (5 corpus passes for a
     5-column profile).
     """
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    spark.sql(_profile_wide_sql(lambda e: e)).localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("profile_wide")
+    register_views(spark, sf_dir, "orders")
+    materialize(spark.sql(_profile_wide_sql(lambda e: e)), "profile_wide")
     return spark.sql(_profile_unpivot_sql())
 
 
@@ -247,14 +245,11 @@ def dq_key_skew_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     the top-10 rollup; Spark inlines CTEs, so each is materialized once
     via localCheckpoint (one fact-table scan per key column, not two).
     """
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    register_views(spark, sf_dir, "lineitem", "orders")
     branches = []
     for i, (table, col) in enumerate(_SKEW_COLS):
         view = f"skew_counts_{i}"
-        spark.sql(_skew_counts_sql(table, col)).localCheckpoint(
-            eager=True
-        ).createOrReplaceTempView(view)
+        materialize(spark.sql(_skew_counts_sql(table, col)), view)
         branches.append(_skew_branch_sql(table, col, view))
     return spark.sql("\nUNION ALL\n".join(branches))
 
@@ -303,7 +298,7 @@ ORDER BY c.digit
 @register("dq_benford_first_digit", oracle=_BENFORD_BODY)
 def dq_benford_first_digit(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-digit distribution of o_totalprice vs Benford expectation."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    register_views(spark, sf_dir, "orders")
     return spark.sql(_BENFORD_BODY)
 
 
@@ -368,8 +363,7 @@ def dq_k_anonymity(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast hint on either side (both scale with the corpus — AQE
     decides). The output is QI-domain-bounded, tiny at any SF.
     """
-    load(spark, sf_dir, "customer").createOrReplaceTempView("customer")
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    register_views(spark, sf_dir, "customer", "orders")
     return spark.sql(_KANON_BODY)
 
 
@@ -409,7 +403,7 @@ def dq_freshness_sla(spark: SparkSession, sf_dir: str) -> DataFrame:
     whole minutes, and a fresh/lagging/stale SLA verdict — all in
     integer microseconds (timestamps render as STRING per the
     cross-engine date discipline)."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(
         _freshness_sql("timestampdiff(MICROSECOND, p.last_ts, w.w)")
     )
@@ -475,8 +469,7 @@ def dq_functional_dependencies(spark: SparkSession, sf_dir: str) -> DataFrame:
     """g3-error profile of six candidate functional dependencies across
     part/orders/customer/lineitem: group counts, violation counts and
     rate, and whether the FD holds exactly."""
-    for t in ("part", "orders", "customer", "lineitem"):
-        load(spark, sf_dir, t).createOrReplaceTempView(t)
+    register_views(spark, sf_dir, "part", "orders", "customer", "lineitem")
     return spark.sql(_FD_SQL)
 
 
@@ -569,11 +562,8 @@ def dq_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
     inlines CTEs, so it is materialized once via localCheckpoint
     (DuckDB materializes shared CTEs itself — single-statement oracle).
     """
-    load(spark, sf_dir, "customer").createOrReplaceTempView("customer")
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    spark.sql(_TCLOSE_CELL).localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("tc_cell")
+    register_views(spark, sf_dir, "customer", "orders")
+    materialize(spark.sql(_TCLOSE_CELL), "tc_cell")
     return spark.sql("WITH " + _tclose_tail("tc_cell").lstrip())
 
 
@@ -639,7 +629,7 @@ def dq_tukey_fences(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact interpolated quartiles, snapped fences, per-group outlier
     counts and the worst high outlier — the third classic DQ screen
     beside MAD and Benford."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    register_views(spark, sf_dir, "orders")
     return spark.sql(
         _TUKEY_SQL
         .replace("{q1}", "percentile(o_totalprice, 0.25)")

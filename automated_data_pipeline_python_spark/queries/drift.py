@@ -32,15 +32,11 @@ from automated_data_pipeline_python_spark.functions.text import (
     DUCK_TOKENS,
     SPARK_TOKENS,
 )
-from automated_data_pipeline_python_spark.queries.catalog import register
-from automated_data_pipeline_python_spark.tables import load, load_scaled
+from automated_data_pipeline_python_spark.queries.catalog import materialize, register
+from automated_data_pipeline_python_spark.tables import register_views
 
 _S_TOK = SPARK_TOKENS.format(col="text")
 _D_TOK = DUCK_TOKENS.format(col="text")
-
-
-def _materialize_view(df: DataFrame, name: str) -> None:
-    df.localCheckpoint(eager=True).createOrReplaceTempView(name)
 
 
 # ---------------------------------------------------------------------------
@@ -85,8 +81,8 @@ _KL_DUCK_SQL = (
 @register("corpus_source_kl_divergence", oracle=_KL_DUCK_SQL)
 def corpus_source_kl_divergence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """KL(P_source || P_corpus) over token distributions, per source."""
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    _materialize_view(
+    register_views(spark, sf_dir, scaled=("documents",))
+    materialize(
         spark.sql(
             "SELECT source, tok AS term, count(*) AS c FROM "
             f"(SELECT source, explode({_S_TOK}) AS tok FROM documents) "
@@ -236,12 +232,11 @@ _MI_DUCK_SQL = (
 @register("dq_mutual_information", oracle=_MI_DUCK_SQL)
 def dq_mutual_information(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MI, entropies, and normalized MI for categorical column pairs."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
+    register_views(spark, sf_dir, "orders", "lineitem")
     rels = []
     for i, (t, x, y) in enumerate(_MI_PAIRS):
         view = f"mi_joint_{i}"
-        _materialize_view(spark.sql(_mi_joint_sql(t, x, y)), view)
+        materialize(spark.sql(_mi_joint_sql(t, x, y)), view)
         rels.append(view)
     return spark.sql(_mi_spark_sql(rels))
 
@@ -332,13 +327,13 @@ def events_psi_value_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     snapped cutoffs, so a value equal to a cutoff lands identically
     on both engines.
     """
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     valued = (
         _PSI_VALUED
         .replace("{us_since_t0}", "timestampdiff(MICROSECOND, b.t0, ts)")
         .replace("{us_span}", "timestampdiff(MICROSECOND, b.t0, b.t1)")
     )
-    _materialize_view(
+    materialize(
         spark.sql(
             _PSI_CELLS.replace("{valued}", valued).replace("{q}", "percentile")
         ),
@@ -399,8 +394,8 @@ _JS_DUCK_SQL = (
 @register("corpus_source_js_matrix", oracle=_JS_DUCK_SQL)
 def corpus_source_js_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise JS divergence between source token distributions."""
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    _materialize_view(
+    register_views(spark, sf_dir, scaled=("documents",))
+    materialize(
         spark.sql(
             "SELECT source, tok AS term, CAST(count(*) AS DOUBLE) AS c FROM "
             f"(SELECT source, explode({_S_TOK}) AS tok FROM documents) "
@@ -446,8 +441,8 @@ _SIMPSON_DUCK_SQL = (
 @register("corpus_simpson_diversity", oracle=_SIMPSON_DUCK_SQL)
 def corpus_simpson_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Simpson index and effective vocabulary size per source."""
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    _materialize_view(
+    register_views(spark, sf_dir, scaled=("documents",))
+    materialize(
         spark.sql(
             "SELECT source, tok AS term, CAST(count(*) AS DOUBLE) AS c FROM "
             f"(SELECT source, explode({_S_TOK}) AS tok FROM documents) "
@@ -523,12 +518,11 @@ _CHI2_DUCK_SQL = (
 @register("dq_chi2_independence", oracle=_CHI2_DUCK_SQL)
 def dq_chi2_independence(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Chi-square independence statistic, dof, and Cramér's V per pair."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
+    register_views(spark, sf_dir, "orders", "lineitem")
     rels = []
     for i, (t, x, y) in enumerate(_MI_PAIRS):
         view = f"chi2_joint_{i}"
-        _materialize_view(spark.sql(_mi_joint_sql(t, x, y)), view)
+        materialize(spark.sql(_mi_joint_sql(t, x, y)), view)
         rels.append(view)
     return spark.sql(_chi2_sql(rels))
 
@@ -606,7 +600,7 @@ def feature_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
     row_number), a distinct-value CDF, and a 1000-row broadcastable
     permille lookup — all-BIGINT arithmetic, no float boundary at all.
     """
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    register_views(spark, sf_dir, scaled=("documents",))
     return spark.sql(_QNORM_SPARK_SQL)
 
 
@@ -690,7 +684,7 @@ grid AS (
 def events_ks_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sample KS statistic, location, and asymptotic p-value for
     the click vs purchase value distributions."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_KS_SQL)
 
 
@@ -776,7 +770,7 @@ def events_mann_whitney_u(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann–Whitney U test of the click vs purchase value
     distributions: exact tie-corrected midranks off the distinct-cents
     grid, normal-approximation z, and two-sided p."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_MW_SQL)
 
 
@@ -841,7 +835,7 @@ def events_cramer_von_mises(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-sample Cramér–von Mises T for the click vs purchase value
     distributions — the integrated-squared-gap companion to the KS
     test, off the same snapped-cents histogram CDFs."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_CVM_SQL)
 
 
@@ -907,7 +901,7 @@ def events_kuiper_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kuiper V = D⁺ + D⁻ for the click vs purchase value
     distributions — the tail-sensitive completion of the KS/CvM eCDF
     family, off the same snapped-cents histogram CDFs."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_KUIPER_SQL)
 
 
@@ -986,7 +980,7 @@ def events_wasserstein_distance(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wasserstein-1 (earth mover's) distance in dollars between the
     click and purchase value distributions — exact integer transport
     mass off the snapped-cents histogram CDFs, one final division."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_WASSERSTEIN_SQL)
 
 
@@ -1039,8 +1033,8 @@ def corpus_source_hellinger_tv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pairwise Hellinger and total-variation distances between source
     token distributions — the metric companions to the JS matrix, off
     the same shared-vocabulary decomposition."""
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    _materialize_view(
+    register_views(spark, sf_dir, scaled=("documents",))
+    materialize(
         spark.sql(
             "SELECT source, tok AS term, CAST(count(*) AS DOUBLE) AS c FROM "
             f"(SELECT source, explode({_S_TOK}) AS tok FROM documents) "

@@ -20,8 +20,8 @@ from automated_data_pipeline_python_spark.functions.numeric import (
     sql_exact_sum,
     stable_round,
 )
-from automated_data_pipeline_python_spark.queries.catalog import register
-from automated_data_pipeline_python_spark.tables import load
+from automated_data_pipeline_python_spark.queries.catalog import materialize, register
+from automated_data_pipeline_python_spark.tables import load, register_views
 
 _TS_FMT = "yyyy-MM-dd HH:mm:ss"
 # events.value is 2dp — sums snap to the 1e-2 grid so totals are
@@ -332,7 +332,7 @@ def events_funnel_conversion(spark: SparkSession, sf_dir: str) -> DataFrame:
     — every shuffle keys on user_id, so AQE can reuse the exchange; no
     window sort over full event history is needed.
     """
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_FUNNEL_SQL)
 
 
@@ -388,7 +388,7 @@ GROUP BY event_type, 2
 @register("events_zscore_bands", oracle=_ZSCORE_SQL)
 def events_zscore_bands(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Histogram of per-type z-score bands (anomaly monitoring shape)."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_ZSCORE_SQL)
 
 
@@ -459,7 +459,7 @@ _PATHS_DUCK_SQL = _paths_sql(
 @register("events_path_patterns", oracle=_PATHS_DUCK_SQL)
 def events_path_patterns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 session-opening paths (first 3 events per 30-min session)."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(
         _paths_sql(
             "ts",
@@ -523,7 +523,7 @@ _OHLC_DUCK_SQL = _ohlc_sql(
 @register("events_ohlc_hourly", oracle=_OHLC_DUCK_SQL)
 def events_ohlc_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly OHLC bars per event type (open/high/low/close/count)."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_ohlc_sql("ts", "date_format(hr, 'yyyy-MM-dd HH:mm:ss')"))
 
 
@@ -561,7 +561,7 @@ _RETENTION_DUCK_SQL = _retention_sql(
 @register("events_retention_cohorts", oracle=_RETENTION_DUCK_SQL)
 def events_retention_cohorts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily retention matrix: first-seen cohort × day offset × users."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_retention_sql("ts", "datediff(a.day, c.cohort_day)"))
 
 
@@ -620,7 +620,7 @@ _TWAP_DUCK_SQL = _twap_sql(
 @register("events_twap_hourly", oracle=_TWAP_DUCK_SQL)
 def events_twap_hourly(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hourly time-weighted average value per event type (vs plain avg)."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(
         _twap_sql(
             "ts",
@@ -673,7 +673,7 @@ _WAU_DUCK_SQL = _wau_sql(
 @register("events_rolling_wau", oracle=_WAU_DUCK_SQL)
 def events_rolling_wau(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-day rolling 7-day distinct active users (explode + equi-join)."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(
         _wau_sql(
             "ts",
@@ -727,7 +727,7 @@ FROM counts c JOIN totals t ON c.from_type = t.from_type
 @register("events_markov_transitions", oracle=_markov_sql("CAST(ts AS TIMESTAMP)"))
 def events_markov_transitions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-order event-type transition matrix (counts + probabilities)."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_markov_sql("ts"))
 
 
@@ -785,7 +785,7 @@ _FUNNEL_TIMING_DUCK = _funnel_timing_sql(
 @register("events_funnel_timing", oracle=_FUNNEL_TIMING_DUCK)
 def events_funnel_timing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """First-view → first-purchase latency percentiles for converters."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(
         _funnel_timing_sql(
             "ts",
@@ -845,7 +845,7 @@ _STICKINESS_DUCK_SQL = _stickiness_sql(
 @register("events_dau_mau_stickiness", oracle=_STICKINESS_DUCK_SQL)
 def events_dau_mau_stickiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-day DAU, rolling-28-day MAU, and the stickiness ratio."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(
         _stickiness_sql(
             "ts",
@@ -912,7 +912,7 @@ def events_cep_absence_pattern(spark: SparkSession, sf_dir: str) -> DataFrame:
     the next-purchase pick is a min-aggregation, never an all-pairs
     product.
     """
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_CEP_SQL)
 
 
@@ -970,7 +970,7 @@ def events_trajectory_similarity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 users whose event-type trajectory is closest (edit
     distance) to the query user's — broadcast-one-path scoring, no
     pairwise product."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(
         _traj_sql("listagg(sym, '') WITHIN GROUP (ORDER BY ts, event_id)")
     )
@@ -1033,7 +1033,7 @@ def events_three_way_interval_join(
     """Per-day counts and view→purchase latency of every qualifying
     (view, click≤1h, purchase≤24h) triple — the multi-way interval
     join, all legs on one user_id partitioning."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(
         _THREE_WAY_SQL.replace(
             "{us_lat}", "timestampdiff(MICROSECOND, v.vts, p.pts)"
@@ -1121,10 +1121,8 @@ def events_markov_stationary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Three power-iteration rounds toward the stationary distribution
     of the event-type Markov chain (uniform start, snapped-grid
     iterates, pi2→pi3 delta as the convergence gauge)."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
-    spark.sql(_MKV_MAT_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "mkv_mat"
-    )
+    register_views(spark, sf_dir, "events")
+    materialize(spark.sql(_MKV_MAT_SQL), "mkv_mat")
     return spark.sql("WITH " + _mkv_tail("mkv_mat").lstrip())
 
 
@@ -1265,7 +1263,7 @@ def events_markov_removal_attribution(
     transition count; all 5 x 12 absorption rounds run on the bounded
     states² matrix relation.
     """
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_mre_sql("ts"))
 
 
@@ -1324,8 +1322,6 @@ def events_markov_entropy_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Entropy rate of the event-type chain: per-state conditional
     entropy (nats) and its stationary-weighted contribution — the
     journey-predictability drift gauge."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
-    spark.sql(_MKV_MAT_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "mkv_mat"
-    )
+    register_views(spark, sf_dir, "events")
+    materialize(spark.sql(_MKV_MAT_SQL), "mkv_mat")
     return spark.sql("WITH " + _entropy_rate_sql("mkv_mat").lstrip())

@@ -19,7 +19,7 @@ from automated_data_pipeline_python_spark.functions.text import (
     spark_hash28,
 )
 from automated_data_pipeline_python_spark.queries.catalog import register
-from automated_data_pipeline_python_spark.tables import load
+from automated_data_pipeline_python_spark.tables import register_views
 
 
 def _ab_sql(hash28: str) -> str:
@@ -80,7 +80,7 @@ FROM wide
 def events_ab_test_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hash-assigned A/B split with conversion lift and pooled
     two-proportion z-score."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_ab_sql(spark_hash28("CAST(user_id AS STRING)")))
 
 
@@ -172,7 +172,7 @@ FROM wide w CROSS JOIN theta t
 def events_cuped_adjustment(spark: SparkSession, sf_dir: str) -> DataFrame:
     """CUPED-adjusted lift: pre-period purchase counts as the covariate,
     variance reduction = corr², all from exact integer moment sums."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(
         _cuped_sql(
             spark_hash28("CAST(user_id AS STRING)"),
@@ -275,7 +275,7 @@ def events_cem_matching(spark: SparkSession, sf_dir: str) -> DataFrame:
     the USER relation (not events), one 15-cell rollup; integers until
     four snapped ratios per stratum.
     """
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(
         _cem_sql(spark_hash28("CAST(user_id AS STRING)"),
                  "CAST(({a}) DIV ({b}) AS BIGINT)")
@@ -340,5 +340,5 @@ def events_power_analysis(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-proportion sample size per arm (80% power, α=5%) at 2/5/10%
     relative MDE from the observed base rate, with a verdict on
     whether the current user count is already sufficient."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_power_sql())

@@ -36,8 +36,8 @@ from automated_data_pipeline_python_spark.functions.text import (
     duck_hash28,
     spark_hash28,
 )
-from automated_data_pipeline_python_spark.queries.catalog import register
-from automated_data_pipeline_python_spark.tables import load
+from automated_data_pipeline_python_spark.queries.catalog import materialize, register
+from automated_data_pipeline_python_spark.tables import register_views
 
 # ---------------------------------------------------------------------------
 # Offline UCB1 bandit replay
@@ -133,10 +133,8 @@ def events_ucb_bandit_replay(spark: SparkSession, sf_dir: str) -> DataFrame:
     fill join, and the cumulative windows; Spark inlines CTEs — four
     corpus scans at 100 TB — so it is materialized once via
     localCheckpoint (DuckDB materializes shared CTEs itself)."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
-    spark.sql(_UCB_DAILY_SQL).localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("ucb_daily")
+    register_views(spark, sf_dir, "events")
+    materialize(spark.sql(_UCB_DAILY_SQL), "ucb_daily")
     return spark.sql(_ucb_tail("date_format(d, 'yyyy-MM-dd')", "ucb_daily"))
 
 
@@ -197,7 +195,7 @@ ORDER BY day
 )
 def events_sprt_ab_trajectory(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SPRT cumulative log-likelihood trajectory with decision column."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(
         _SPRT_SQL.replace("{fmt_day}", "date_format(d, 'yyyy-MM-dd')")
     )
@@ -275,10 +273,8 @@ def events_crosscorr_lead_lag(spark: SparkSession, sf_dir: str) -> DataFrame:
     The bounded daily relation is joined to itself per lag; Spark
     inlines CTEs — two corpus scans — so it is materialized once via
     localCheckpoint (DuckDB materializes shared CTEs itself)."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
-    spark.sql(_XCORR_DAILY_SQL).localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("xc_daily")
+    register_views(spark, sf_dir, "events")
+    materialize(spark.sql(_XCORR_DAILY_SQL), "xc_daily")
     return spark.sql(
         _xcorr_tail(
             "CAST(datediff(d, DATE '1970-01-01') AS BIGINT)", "xc_daily"
@@ -386,7 +382,7 @@ FROM point p CROSS JOIN boot b
 def events_bootstrap_ci_mean(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Poisson-bootstrap 95% CI for the mean purchase value; B=40
     hash-seeded replicates in one map-only pass."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(
         _bootstrap_sql(
             "CAST(conv(substr(sha2(CAST(event_id AS STRING) || ':' "
@@ -491,7 +487,7 @@ def events_bh_fdr_screen(spark: SparkSession, sf_dir: str) -> DataFrame:
     """24 simultaneous hour-of-day mean-purchase-value z-tests with
     Benjamini–Hochberg FDR control at α=0.05: per-hour z, p, BH rank,
     step-up cutoff, and the reject decision."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_BH_SQL)
 
 
@@ -612,7 +608,7 @@ def events_shapley_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     non-purchase channels: per-channel Shapley credit and normalized
     share, coalition value = mean total purchase revenue of users
     exposed to exactly that pre-first-purchase channel set."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_shapley_sql())
 
 
@@ -697,7 +693,7 @@ def events_mcnemar_paired(spark: SparkSession, sf_dir: str) -> DataFrame:
     max-flags), then a single bounded aggregate — no windows, no
     self-joins.
     """
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(
         _mcnemar_sql("datediff(CAST(ts AS DATE), DATE '1970-01-01')")
     )
@@ -790,7 +786,7 @@ def events_diff_in_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     exposure flag joins a user-distinct relation that grows with the
     corpus, so it stays unhinted for AQE).
     """
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(
         _did_sql("datediff(CAST(ts AS DATE), DATE '1970-01-01')")
     )
@@ -885,7 +881,7 @@ def events_ipw_ate(spark: SparkSession, sf_dir: str) -> DataFrame:
     corrected: activity-bucket propensities, per-stratum IPW algebra,
     the naive difference next to the IPW ATE, and the positivity
     census."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_IPW_SQL)
 
 
@@ -980,7 +976,7 @@ def events_qini_uplift_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Qini uplift curve over activity-score deciles with a
     hash-randomized arm: per-decile arm counts/conversions and the
     cumulative incremental-responder statistic."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_QINI_SPARK_SQL)
 
 
@@ -1084,7 +1080,7 @@ def events_did_estimator(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Difference-in-differences on purchase value around the period
     midpoint with hash-randomized groups, plus the pre-period placebo
     contrast that falsifies parallel trends."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_DID_SPARK_SQL)
 
 
@@ -1191,7 +1187,7 @@ def events_interrupted_time_series(
     """Interrupted-time-series segmented regression on daily revenue:
     pre/post OLS around the midpoint cutoff with level-change and
     slope-change effects read off exact integer moments."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_ITS_SQL.format(days_diff="datediff(daily.d, t0.d0)"))
 
 
@@ -1292,7 +1288,7 @@ def events_switchback_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     from automated_data_pipeline_python_spark.functions.text import (
         spark_hash28,
     )
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_switchback_sql(
         spark_hash28("concat('sb', CAST(blk AS STRING))"),
         "date_trunc('hour', ts)",

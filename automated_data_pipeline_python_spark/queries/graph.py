@@ -23,9 +23,9 @@ from automated_data_pipeline_python_spark.functions.numeric import (
     sql_exact_sum,
     sql_stable_round,
 )
-from automated_data_pipeline_python_spark.queries.catalog import register
+from automated_data_pipeline_python_spark.queries.catalog import materialize, register
 from automated_data_pipeline_python_spark.session import recursion_limits
-from automated_data_pipeline_python_spark.tables import load
+from automated_data_pipeline_python_spark.tables import register_views
 
 # Distinct (order, brand) pairs → symmetric weighted edge list. The
 # self-join is bounded by basket size (brands per order), never by
@@ -107,11 +107,8 @@ def graph_brand_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized once via localCheckpoint (DuckDB materializes shared
     CTEs itself — single-statement oracle).
     """
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    load(spark, sf_dir, "part").createOrReplaceTempView("part")
-    spark.sql(_EDGES_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "pr_edges"
-    )
+    register_views(spark, sf_dir, "lineitem", "part")
+    materialize(spark.sql(_EDGES_SQL), "pr_edges")
     return spark.sql(_pagerank_tail("pr_edges"))
 
 
@@ -172,11 +169,8 @@ _TRIANGLES_DUCK = (
 @register("graph_brand_triangles", oracle=_TRIANGLES_DUCK)
 def graph_brand_triangles(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-brand triangle count and local clustering coefficient."""
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    load(spark, sf_dir, "part").createOrReplaceTempView("part")
-    spark.sql(_EDGES_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "tri_edges"
-    )
+    register_views(spark, sf_dir, "lineitem", "part")
+    materialize(spark.sql(_EDGES_SQL), "tri_edges")
     return spark.sql(_triangles_tail("tri_edges"))
 
 
@@ -223,11 +217,8 @@ ORDER BY hops, brand
 )
 def graph_brand_reachability(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Min-hop reachability from the first brand, depth <= 3."""
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    load(spark, sf_dir, "part").createOrReplaceTempView("part")
-    spark.sql(_EDGES_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "reach_edges"
-    )
+    register_views(spark, sf_dir, "lineitem", "part")
+    materialize(spark.sql(_EDGES_SQL), "reach_edges")
     with recursion_limits(spark):
         return spark.sql(
             "WITH RECURSIVE " + _reach_tail("reach_edges").lstrip()
@@ -291,8 +282,7 @@ def graph_link_prediction(spark: SparkSession, sf_dir: str) -> DataFrame:
     All integer counts until one snapped ratio; pair work is bounded by
     brands x top-k, never corpus size.
     """
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    load(spark, sf_dir, "part").createOrReplaceTempView("part")
+    register_views(spark, sf_dir, "lineitem", "part")
     return spark.sql(f"WITH edges AS ({_EDGES_SQL}), {_LINK_PRED_TAIL}")
 
 
@@ -362,11 +352,8 @@ def graph_weighted_sssp(spark: SparkSession, sf_dir: str) -> DataFrame:
     once; every round shuffles the vocabulary-sized vertex/edge
     relations by dst.
     """
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    load(spark, sf_dir, "part").createOrReplaceTempView("part")
-    spark.sql(_EDGES_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "sssp_edges"
-    )
+    register_views(spark, sf_dir, "lineitem", "part")
+    materialize(spark.sql(_EDGES_SQL), "sssp_edges")
     return spark.sql("WITH " + _sssp_tail("sssp_edges").lstrip())
 
 
@@ -389,7 +376,6 @@ from automated_data_pipeline_python_spark.functions.text import (  # noqa: E402
     duck_word_shingles,
     spark_word_shingles,
 )
-from automated_data_pipeline_python_spark.tables import load_scaled  # noqa: E402
 
 _TR_EDGES_SPARK = f"""
 WITH tok AS (
@@ -450,10 +436,8 @@ def text_textrank_keywords(spark: SparkSession, sf_dir: str) -> DataFrame:
     materialized once via localCheckpoint (DuckDB materializes shared
     CTEs itself — single-statement oracle).
     """
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    spark.sql(_TR_EDGES_SPARK).localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("tr_edges")
+    register_views(spark, sf_dir, scaled=("documents",))
+    materialize(spark.sql(_TR_EDGES_SPARK), "tr_edges")
     return spark.sql(
         _pagerank_tail("tr_edges", node="word", suffix=_TR_SUFFIX)
     )
@@ -532,11 +516,8 @@ def graph_brand_kcore(spark: SparkSession, sf_dir: str) -> DataFrame:
     The mutual graph feeds every peel round; the base edge list is
     materialized once via localCheckpoint against CTE inlining.
     """
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    load(spark, sf_dir, "part").createOrReplaceTempView("part")
-    spark.sql(_EDGES_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "kcore_edges"
-    )
+    register_views(spark, sf_dir, "lineitem", "part")
+    materialize(spark.sql(_EDGES_SQL), "kcore_edges")
     return spark.sql(_KCORE_SQL.format(edges="kcore_edges"))
 
 
@@ -610,11 +591,8 @@ def graph_brand_hits(spark: SparkSession, sf_dir: str) -> DataFrame:
     The edge relation feeds three matrix-product stages; Spark inlines
     CTEs, so it is materialized once via localCheckpoint.
     """
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    load(spark, sf_dir, "part").createOrReplaceTempView("part")
-    spark.sql(_EDGES_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "hits_edges"
-    )
+    register_views(spark, sf_dir, "lineitem", "part")
+    materialize(spark.sql(_EDGES_SQL), "hits_edges")
     return spark.sql("WITH " + _hits_tail("hits_edges").lstrip())
 
 
@@ -674,11 +652,8 @@ def graph_brand_modularity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-community Newman modularity contributions of the
     brand-family partition of the co-purchase graph — exact integer
     weights, two snapped divisions per community."""
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    load(spark, sf_dir, "part").createOrReplaceTempView("part")
-    spark.sql(_EDGES_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "mod_edges"
-    )
+    register_views(spark, sf_dir, "lineitem", "part")
+    materialize(spark.sql(_EDGES_SQL), "mod_edges")
     return spark.sql("WITH " + _modularity_tail("mod_edges").lstrip())
 
 
@@ -739,11 +714,8 @@ def graph_label_propagation(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two synchronous weighted label-propagation rounds on the brand
     co-purchase graph: per-node adopted label after each round
     (argmax incident weight, lexicographic tiebreak)."""
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    load(spark, sf_dir, "part").createOrReplaceTempView("part")
-    spark.sql(_EDGES_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "lp_edges"
-    )
+    register_views(spark, sf_dir, "lineitem", "part")
+    materialize(spark.sql(_EDGES_SQL), "lp_edges")
     return spark.sql("WITH " + _lp_tail("lp_edges").lstrip())
 
 
@@ -819,11 +791,8 @@ def graph_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Newman degree-assortativity coefficient of the brand
     co-purchase graph, plus degree summary stats — exact integer
     moment sums, one snapped Pearson expression."""
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    load(spark, sf_dir, "part").createOrReplaceTempView("part")
-    spark.sql(_EDGES_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "assort_edges"
-    )
+    register_views(spark, sf_dir, "lineitem", "part")
+    materialize(spark.sql(_EDGES_SQL), "assort_edges")
     return spark.sql("WITH " + _assort_tail("assort_edges").lstrip())
 
 
@@ -892,11 +861,8 @@ def graph_closeness_centrality(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the corpus pass is the one edge-list build; every BFS
     frontier is a join between brand-domain relations (≤ brands² rows).
     """
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    load(spark, sf_dir, "part").createOrReplaceTempView("part")
-    spark.sql(_EDGES_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "close_edges"
-    )
+    register_views(spark, sf_dir, "lineitem", "part")
+    materialize(spark.sql(_EDGES_SQL), "close_edges")
     return spark.sql("WITH e AS (SELECT * FROM close_edges),\n" + _CLOSE_TAIL.lstrip())
 
 
@@ -963,11 +929,8 @@ def graph_brand_ktruss(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the corpus pass is the one edge-list build; each peel round
     is a common-neighbor join between brand-domain relations.
     """
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    load(spark, sf_dir, "part").createOrReplaceTempView("part")
-    spark.sql(_EDGES_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "truss_edges"
-    )
+    register_views(spark, sf_dir, "lineitem", "part")
+    materialize(spark.sql(_EDGES_SQL), "truss_edges")
     return spark.sql(
         "WITH e AS (SELECT * FROM truss_edges),\n" + _TRUSS_TAIL.lstrip()
     )
@@ -1040,9 +1003,6 @@ def graph_personalized_pagerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Personalized PageRank (random walk with restart, 2 damped
     rounds) from the top-co-purchase-weight seed brand: the top-20
     related brands by walk proximity."""
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    load(spark, sf_dir, "part").createOrReplaceTempView("part")
-    spark.sql(_EDGES_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "ppr_edges"
-    )
+    register_views(spark, sf_dir, "lineitem", "part")
+    materialize(spark.sql(_EDGES_SQL), "ppr_edges")
     return spark.sql(_ppr_tail("ppr_edges"))

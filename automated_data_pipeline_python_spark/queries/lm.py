@@ -37,13 +37,8 @@ from automated_data_pipeline_python_spark.functions.text import (
     spark_hash60,
     spark_word_shingles,
 )
-from automated_data_pipeline_python_spark.queries.catalog import register
-from automated_data_pipeline_python_spark.tables import load_scaled
-
-def _docs_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(sql)
-
+from automated_data_pipeline_python_spark.queries.catalog import materialize, register
+from automated_data_pipeline_python_spark.tables import register_views
 
 # ---------------------------------------------------------------------------
 # Exact-substring duplication via rolling token windows
@@ -122,7 +117,7 @@ def dedup_substring_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
     twice (DuckDB materializes shared CTEs on its own; the oracle keeps
     the single-statement form).
     """
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    register_views(spark, sf_dir, scaled=("documents",))
     w = spark.sql(
         _substring_windows_sql(
             spark_word_shingles(SPARK_TOKENS.format(col="text"), _WIN),
@@ -130,7 +125,7 @@ def dedup_substring_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
             " LATERAL VIEW explode(sh) t AS s",
         )
     )
-    w.localCheckpoint(eager=True).createOrReplaceTempView("ssw_w")
+    materialize(w, "ssw_w")
     return spark.sql(_substring_tail_sql("ssw_w"))
 
 
@@ -196,7 +191,8 @@ _BIGRAM_DUCK_SQL = _bigram_sql(
 @register("lm_bigram_entropy", oracle=_BIGRAM_DUCK_SQL)
 def lm_bigram_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-50 bigram prefixes by frequency with conditional entropy."""
-    return _docs_sql(spark, sf_dir, _BIGRAM_SPARK_SQL)
+    register_views(spark, sf_dir, scaled=("documents",))
+    return spark.sql(_BIGRAM_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -258,7 +254,8 @@ _BPE_DUCK_SQL = _bpe_sql(
 @register("bpe_pair_merge_counts", oracle=_BPE_DUCK_SQL)
 def bpe_pair_merge_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-20 BPE merge candidates: char-pair counts weighted by word freq."""
-    return _docs_sql(spark, sf_dir, _BPE_SPARK_SQL)
+    register_views(spark, sf_dir, scaled=("documents",))
+    return spark.sql(_BPE_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -334,7 +331,8 @@ _ZIPF_DUCK_SQL = _zipf_sql(
 @register("text_zipf_slope", oracle=_ZIPF_DUCK_SQL)
 def text_zipf_slope(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Least-squares log-log slope of the top-200 term-frequency ranks."""
-    return _docs_sql(spark, sf_dir, _ZIPF_SPARK_SQL)
+    register_views(spark, sf_dir, scaled=("documents",))
+    return spark.sql(_ZIPF_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -408,13 +406,13 @@ WITH dt AS (
 @register("text_token_pmi", oracle=_PMI_DUCK_SQL)
 def text_token_pmi(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-50 PMI collocations among the 50 highest-df tokens."""
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    register_views(spark, sf_dir, scaled=("documents",))
     dt = spark.sql(
         "SELECT DISTINCT doc_id, w AS token"
         " FROM (SELECT doc_id, regexp_extract_all(text, '[a-z]+', 0) AS ws"
         "       FROM documents) LATERAL VIEW explode(ws) t AS w"
     )
-    dt.localCheckpoint(eager=True).createOrReplaceTempView("pmi_dt")
+    materialize(dt, "pmi_dt")
     return spark.sql(_pmi_tail_sql("pmi_dt"))
 
 
@@ -526,7 +524,7 @@ def bpe_train_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     (count, left, right). Spark materializes each round's corpus
     against CTE-inlining re-execution.
     """
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    register_views(spark, sf_dir, scaled=("documents",))
     # Unroll with per-round materialization: build each round's corpus
     # as a checkpointed view so every round scans the MATERIALIZED
     # predecessor exactly once, then union the per-round top picks.
@@ -536,13 +534,13 @@ def bpe_train_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
         "LATERAL VIEW explode(CASE WHEN size(a) >= 2 THEN "
         "sequence(1, size(a) - 1) ELSE array() END) t AS i"
     )
-    spark.sql(
+    materialize(spark.sql(
         """
         SELECT doc_id,
                concat_ws(' ', split(trim(lower(text)), '\\\\s+')) AS s
         FROM documents WHERE length(trim(text)) > 0
         """
-    ).localCheckpoint(eager=True).createOrReplaceTempView("bpe_corpus0")
+    ), "bpe_corpus0")
     picks = []
     for n in range(_BPE_ROUNDS):
         body = _bpe_round(n, elem, guard).format(split=split)
@@ -552,9 +550,7 @@ def bpe_train_merge_rounds(spark: SparkSession, sf_dir: str) -> DataFrame:
         nxt = spark.sql(
             sql + f"\nSELECT doc_id, s FROM corpus{n + 1}"
         )
-        nxt.localCheckpoint(eager=True).createOrReplaceTempView(
-            f"bpe_corpus{n + 1}"
-        )
+        materialize(nxt, f"bpe_corpus{n + 1}")
         picks.append(
             sql
             + f"\nSELECT {n + 1} AS round, l AS merge_left,"
@@ -660,13 +656,16 @@ def lm_kneser_ney_bigram(spark: SparkSession, sf_dir: str) -> DataFrame:
     continuation marginal, type total, final select); Spark inlines
     CTEs, so it is materialized once via localCheckpoint.
     """
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    spark.sql(
-        _kn_big_sql(
-            spark_word_shingles(SPARK_TOKENS.format(col="text"), 2),
-            " LATERAL VIEW explode(sh) t AS s",
-        )
-    ).localCheckpoint(eager=True).createOrReplaceTempView("kn_big")
+    register_views(spark, sf_dir, scaled=("documents",))
+    materialize(
+        spark.sql(
+            _kn_big_sql(
+                spark_word_shingles(SPARK_TOKENS.format(col="text"), 2),
+                " LATERAL VIEW explode(sh) t AS s",
+            )
+        ),
+        "kn_big",
+    )
     return spark.sql("WITH " + _kn_tail("kn_big").lstrip())
 
 
@@ -748,8 +747,8 @@ def lm_heldout_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     one per-doc rollup; the bigram relation is materialized once and
     read by both the train and eval sides.
     """
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    spark.sql(
+    register_views(spark, sf_dir, scaled=("documents",))
+    materialize(spark.sql(
         f"""
         SELECT doc_id, source, s AS bigram
         FROM (SELECT doc_id, source,
@@ -757,7 +756,7 @@ def lm_heldout_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
                          AS sh
               FROM documents) LATERAL VIEW explode(sh) t AS s
         """
-    ).localCheckpoint(eager=True).createOrReplaceTempView("ppl_bg")
+    ), "ppl_bg")
     return spark.sql("WITH " + _ppl_tail("ppl_bg").lstrip())
 
 
@@ -822,7 +821,7 @@ def bpe_compression_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus token count and symbol vocabulary after 0..3 BPE merge
     rounds — the compression/vocab trade curve, reusing the trained
     rounds' materialized corpora."""
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    register_views(spark, sf_dir, scaled=("documents",))
     split = "split(trim(s), ' ')"
     relem = "element_at(a, CAST({i} AS INT))"
     rguard = (
@@ -834,13 +833,13 @@ def bpe_compression_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
         "LATERAL VIEW explode(CASE WHEN size(a) >= 1 THEN "
         "sequence(1, size(a)) ELSE array() END) t AS i"
     )
-    spark.sql(
+    materialize(spark.sql(
         f"""
         SELECT doc_id,
                concat_ws(' ', split(trim(lower(text)), '\\\\s+')) AS s
         FROM documents WHERE length(trim(text)) > 0
         """
-    ).localCheckpoint(eager=True).createOrReplaceTempView("bpc_corpus0")
+    ), "bpc_corpus0")
     stats = []
     for n in range(_BPE_ROUNDS + 1):
         sql = "WITH corpus%d AS (SELECT * FROM bpc_corpus%d)" % (n, n)
@@ -849,9 +848,7 @@ def bpe_compression_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
             nxt = spark.sql(
                 sql + "," + body + f"\nSELECT doc_id, s FROM corpus{n + 1}"
             )
-            nxt.localCheckpoint(eager=True).createOrReplaceTempView(
-                f"bpc_corpus{n + 1}"
-            )
+            materialize(nxt, f"bpc_corpus{n + 1}")
         stats.append(
             "SELECT * FROM ("
             + sql
@@ -947,10 +944,8 @@ def text_token_llr(spark: SparkSession, sf_dir: str) -> DataFrame:
     The bigram relation feeds three marginal aggregations; Spark
     inlines CTEs, so it is materialized once via localCheckpoint.
     """
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    spark.sql(_LLR_PAIRS_SPARK).localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("llr_bigr")
+    register_views(spark, sf_dir, scaled=("documents",))
+    materialize(spark.sql(_LLR_PAIRS_SPARK), "llr_bigr")
     return spark.sql("WITH " + _llr_tail("llr_bigr").lstrip())
 
 
@@ -1231,7 +1226,7 @@ def lm_unigram_em_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     they are materialized once via localCheckpoint; everything after
     runs on vocabulary-bounded relations in one job.
     """
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    register_views(spark, sf_dir, scaled=("documents",))
     prefix = _unigram_sql(_UNIGRAM_GEN2_SPARK, "x", "tk").split("\nseg(")[0]
     prefix = prefix.rstrip().rstrip(",")
     head = (
@@ -1240,11 +1235,10 @@ def lm_unigram_em_round(spark: SparkSession, sf_dir: str) -> DataFrame:
         "FROM documents),"
         + prefix.lstrip()
     )
-    spark.sql(head + "\nSELECT w, wf FROM words").localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("uem_words")
-    spark.sql(head + f",\nvc AS ({_UNIGRAM_VC})\nSELECT * FROM vc"
-              ).localCheckpoint(eager=True).createOrReplaceTempView("uem_vc")
+    materialize(spark.sql(head + "\nSELECT w, wf FROM words"), "uem_words")
+    materialize(
+        spark.sql(head + f",\nvc AS ({_UNIGRAM_VC})\nSELECT * FROM vc"), "uem_vc"
+    )
     body = (
         "WITH "
         + _unigram_em_spark_best("uem_words", "uem_vc").lstrip()
@@ -1316,7 +1310,8 @@ def lm_negative_sampling_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-40 rows of the unigram^0.75 negative-sampling table with
     cumulative inverse-CDF boundaries — the skip-gram/contrastive
     trainer's sampling distribution, built exactly."""
-    return _docs_sql(spark, sf_dir, _NEG_SPARK_SQL)
+    register_views(spark, sf_dir, scaled=("documents",))
+    return spark.sql(_NEG_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -1413,7 +1408,7 @@ def lm_viterbi_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
     computed by the position-DP (Viterbi) recurrence — O(L x 4) per
     word vs the exhaustive E-step's O(2^(L-1)); identical minima
     (pinned against lm_unigram_em_round's enumeration in tests)."""
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    register_views(spark, sf_dir, scaled=("documents",))
     prefix = _unigram_sql(_UNIGRAM_GEN2_SPARK, "x", "tk").split("\nseg(")[0]
     prefix = prefix.rstrip().rstrip(",")
     head = (
@@ -1422,19 +1417,13 @@ def lm_viterbi_segmentation(spark: SparkSession, sf_dir: str) -> DataFrame:
         "FROM documents),"
         + prefix.lstrip()
     )
-    spark.sql(head + "\nSELECT w, wf FROM words").localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("vit_words")
-    spark.sql(head + "\n" + _VIT_PC_TAIL).localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("vit_pc")
+    materialize(spark.sql(head + "\nSELECT w, wf FROM words"), "vit_words")
+    materialize(spark.sql(head + "\n" + _VIT_PC_TAIL), "vit_pc")
     spark.sql(
         "SELECT w, wf, 0e0 AS cost FROM vit_words"
     ).createOrReplaceTempView("vit_bp0")
     for p in range(1, _VIT_MAXLEN + 1):
-        spark.sql(
-            _vit_level_sql(p, "vit_bp", "vit_pc")
-        ).localCheckpoint(eager=True).createOrReplaceTempView(f"vit_bp{p}")
+        materialize(spark.sql(_vit_level_sql(p, "vit_bp", "vit_pc")), f"vit_bp{p}")
     return spark.sql(_vit_done_sql("vit_bp"))
 
 
@@ -1546,7 +1535,7 @@ def lm_wordpiece_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-30 words under the unigram seed vocab: pieces-per-word
     fertility and the greedy path — one aggregate() fold per distinct
     word, corpus passes materialized once."""
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    register_views(spark, sf_dir, scaled=("documents",))
     prefix = _unigram_sql(_UNIGRAM_GEN2_SPARK, "x", "tk").split("\nseg(")[0]
     prefix = prefix.rstrip().rstrip(",")
     head = (
@@ -1555,10 +1544,9 @@ def lm_wordpiece_greedy(spark: SparkSession, sf_dir: str) -> DataFrame:
         "FROM documents),"
         + prefix.lstrip()
     )
-    spark.sql(head + "\nSELECT w, wf FROM words").localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("wp_words")
-    spark.sql(
-        head + "\nSELECT piece, CAST(len AS INT) AS len FROM vocab"
-    ).localCheckpoint(eager=True).createOrReplaceTempView("wp_vocab")
+    materialize(spark.sql(head + "\nSELECT w, wf FROM words"), "wp_words")
+    materialize(
+        spark.sql(head + "\nSELECT piece, CAST(len AS INT) AS len FROM vocab"),
+        "wp_vocab",
+    )
     return spark.sql("WITH " + _WP_SPARK_TAIL.lstrip())

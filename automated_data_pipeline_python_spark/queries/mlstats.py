@@ -31,7 +31,7 @@ from automated_data_pipeline_python_spark.functions.text import (
     duck_hash60,
     spark_hash60,
 )
-from automated_data_pipeline_python_spark.queries.catalog import register
+from automated_data_pipeline_python_spark.queries.catalog import materialize, register
 from automated_data_pipeline_python_spark.queries.curation2 import (
     _CALIB_DUCK_SQL,
     _CALIB_SPARK_SQL,
@@ -39,7 +39,7 @@ from automated_data_pipeline_python_spark.queries.curation2 import (
     _FEATS_SPARK_HEADER,
     _flagged_chain,
 )
-from automated_data_pipeline_python_spark.tables import load, load_scaled
+from automated_data_pipeline_python_spark.tables import register_views
 
 # ---------------------------------------------------------------------------
 # Isotonic recalibration of the reliability curve (PAVA via minimax)
@@ -118,12 +118,15 @@ def quality_isotonic_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     The bounded bin relation feeds five consumers; Spark inlines CTEs,
     so it is materialized once via localCheckpoint.
     """
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    spark.sql(
-        "SELECT decile, n_docs, n_gopher_pass FROM ("
-        + _CALIB_SPARK_SQL
-        + ") z"
-    ).localCheckpoint(eager=True).createOrReplaceTempView("iso_bins")
+    register_views(spark, sf_dir, scaled=("documents",))
+    materialize(
+        spark.sql(
+            "SELECT decile, n_docs, n_gopher_pass FROM ("
+            + _CALIB_SPARK_SQL
+            + ") z"
+        ),
+        "iso_bins",
+    )
     return spark.sql("WITH " + _iso_tail("iso_bins").lstrip())
 
 
@@ -210,12 +213,15 @@ def quality_conformal_interval(spark: SparkSession, sf_dir: str) -> DataFrame:
     The residual relation feeds both splits; Spark inlines CTEs, so it
     is materialized once via localCheckpoint.
     """
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    spark.sql(
-        _conformal_pred_sql("size(toks)").format(
-            tok="split(trim(text), '\\\\s+')"
-        )
-    ).localCheckpoint(eager=True).createOrReplaceTempView("conf_pred")
+    register_views(spark, sf_dir, scaled=("documents",))
+    materialize(
+        spark.sql(
+            _conformal_pred_sql("size(toks)").format(
+                tok="split(trim(text), '\\\\s+')"
+            )
+        ),
+        "conf_pred",
+    )
     return spark.sql(
         "WITH "
         + _conformal_tail(
@@ -320,10 +326,8 @@ def agg_spearman_rank_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     The projected row relation feeds three joint-histogram
     aggregations; Spark inlines CTEs, so it is materialized once.
     """
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    spark.sql(_SP_ROWS_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "sp_rows"
-    )
+    register_views(spark, sf_dir, "lineitem")
+    materialize(spark.sql(_SP_ROWS_SQL), "sp_rows")
     return spark.sql("WITH " + _spearman_tail("sp_rows").lstrip())
 
 
@@ -411,11 +415,8 @@ def dq_mahalanobis_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     The feature relation feeds the moment pass and the scorer; Spark
     inlines CTEs, so it is materialized once via localCheckpoint.
     """
-    load(spark, sf_dir, "customer").createOrReplaceTempView("customer")
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    spark.sql(_MAHA_FEATS_SQL).localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("maha_feats")
+    register_views(spark, sf_dir, "customer", "orders")
+    materialize(spark.sql(_MAHA_FEATS_SQL), "maha_feats")
     return spark.sql("WITH " + _maha_tail("maha_feats").lstrip())
 
 
@@ -480,7 +481,7 @@ def er_sorted_neighborhood(spark: SparkSession, sf_dir: str) -> DataFrame:
     (first word, second-word initial), sort by (name, key), pair each
     record with its next two neighbors, keep pairs within edit
     distance 3."""
-    load(spark, sf_dir, "part").createOrReplaceTempView("part")
+    register_views(spark, sf_dir, "part")
     return spark.sql(_SNM_SQL)
 
 
@@ -579,7 +580,7 @@ def er_fellegi_sunter(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Fellegi–Sunter match scores over the sorted-neighborhood
     candidate pairs: data-estimated u probabilities per field, fixed
     m=0.9, log2 agree/disagree weights, top-30 pairs."""
-    load(spark, sf_dir, "part").createOrReplaceTempView("part")
+    register_views(spark, sf_dir, "part")
     return spark.sql(_FS_SQL)
 
 
@@ -639,7 +640,7 @@ def quality_cohens_kappa(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cohen's kappa between the Gopher rule suite and the 0.5-
     thresholded logistic quality gate: 2x2 agreement table, observed
     and chance agreement, chance-corrected kappa."""
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    register_views(spark, sf_dir, scaled=("documents",))
     return spark.sql(_KAPPA_SPARK_SQL)
 
 
@@ -674,7 +675,7 @@ FROM bins
 def quality_ece_from_bins(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Expected / maximum calibration error of the logistic gate vs the
     Gopher verdicts, rolled up from the decile reliability bins."""
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    register_views(spark, sf_dir, scaled=("documents",))
     return spark.sql("WITH bins AS (" + _CALIB_SPARK_SQL + ")\n" + _ECE_TAIL)
 
 
@@ -787,10 +788,8 @@ def er_em_mu_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     candidate agrees on it; the classic linkage caveat that a blocking
     field carries no discriminating weight, surfaced rather than
     hidden."""
-    load(spark, sf_dir, "part").createOrReplaceTempView("part")
-    spark.sql(_em_head()).localCheckpoint(eager=True).createOrReplaceTempView(
-        "em_agg"
-    )
+    register_views(spark, sf_dir, "part")
+    materialize(spark.sql(_em_head()), "em_agg")
     return spark.sql(_em_tail("em_agg"))
 
 
@@ -860,7 +859,7 @@ def quality_krippendorff_alpha(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Krippendorff's alpha over three binary annotators (Gopher rules,
     logistic gate, lexical-diversity rule): observed vs chance pair
     disagreement from exact vote-count integers."""
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    register_views(spark, sf_dir, scaled=("documents",))
     return spark.sql(_ALPHA_SPARK_SQL)
 
 
@@ -924,7 +923,7 @@ def events_anova_f_oneway(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-way ANOVA of event value across the five event types:
     between/within sums of squares (re-expressed in currency² units),
     F statistic and η² — exact integer moments, snapped term sums."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_ANOVA_SQL)
 
 
@@ -1028,7 +1027,7 @@ def events_kruskal_wallis_h(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kruskal–Wallis rank test of event value across the five event
     types: per-type n / rank sum / mean rank with the tie-corrected H,
     Wilson–Hilferty z, and two-sided normal p."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_kw_sql())
 
 
@@ -1125,7 +1124,7 @@ def events_brown_forsythe_levene(spark: SparkSession, sf_dir: str) -> DataFrame:
     read, one more group-by of exact integer moments — no per-row
     ranks, no single-partition exchange.
     """
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_BF_SQL)
 
 
@@ -1224,7 +1223,7 @@ def mlstats_decision_stump(spark: SparkSession, sf_dir: str) -> DataFrame:
     all split search runs on ≤ 51-row per-feature histograms with
     PARTITIONED cumulative windows.
     """
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
+    register_views(spark, sf_dir, "lineitem")
     return spark.sql(_STUMP_SQL)
 
 
@@ -1324,7 +1323,7 @@ def mlstats_cv_ols_r2(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: exactly ONE corpus group-by (per-fold exact moments); all
     fold fitting and evaluation is constant-size algebra.
     """
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
+    register_views(spark, sf_dir, "lineitem")
     return spark.sql(_cv_ols_sql(f"pmod({spark_hash60(_CV_KEY_S)}, 5)"))
 
 
@@ -1385,7 +1384,7 @@ def er_levenshtein_blocked(spark: SparkSession, sf_dir: str) -> DataFrame:
     length band) blocking with a 40-row block cap, in-block Levenshtein
     scoring, snapped 1 − d/max_len similarity >= 0.6, top-50 totally
     ordered."""
-    load(spark, sf_dir, "part").createOrReplaceTempView("part")
+    register_views(spark, sf_dir, "part")
     return spark.sql(_LEV_SQL)
 
 
@@ -1471,14 +1470,15 @@ def quality_platt_scaling(spark: SparkSession, sf_dir: str) -> DataFrame:
     The bounded bin relation feeds every Newton step; Spark inlines
     CTEs, so it is materialized once via localCheckpoint.
     """
-    from automated_data_pipeline_python_spark.tables import load_scaled
-
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    spark.sql(
-        "SELECT decile, n_docs, n_gopher_pass FROM ("
-        + _CALIB_SPARK_SQL
-        + ") z"
-    ).localCheckpoint(eager=True).createOrReplaceTempView("platt_bins")
+    register_views(spark, sf_dir, scaled=("documents",))
+    materialize(
+        spark.sql(
+            "SELECT decile, n_docs, n_gopher_pass FROM ("
+            + _CALIB_SPARK_SQL
+            + ") z"
+        ),
+        "platt_bins",
+    )
     return spark.sql("WITH " + _platt_sql("platt_bins").lstrip())
 
 
@@ -1553,8 +1553,7 @@ def mlstats_eb_beta_shrinkage(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Empirical-Bayes Beta-Binomial shrinkage of per-brand return
     rates: method-of-moments prior across brands, posterior-mean rate
     per brand next to the raw rate."""
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    load(spark, sf_dir, "part").createOrReplaceTempView("part")
+    register_views(spark, sf_dir, "lineitem", "part")
     return spark.sql(_EB_SHRINK_SQL)
 
 
@@ -1641,7 +1640,7 @@ def events_effect_sizes(spark: SparkSession, sf_dir: str) -> DataFrame:
     from automated_data_pipeline_python_spark.functions.text import (
         spark_hash28,
     )
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(
         _effect_sql(spark_hash28("concat('fx', CAST(user_id AS STRING))"))
     )
@@ -1736,7 +1735,7 @@ def events_welch_ttest(spark: SparkSession, sf_dir: str) -> DataFrame:
     from automated_data_pipeline_python_spark.functions.text import (
         spark_hash28,
     )
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(
         _welch_sql(spark_hash28("concat('fx', CAST(user_id AS STRING))"))
     )

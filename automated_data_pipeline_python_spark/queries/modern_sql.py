@@ -26,7 +26,7 @@ from automated_data_pipeline_python_spark.functions.numeric import (
     sql_exact_sum,
 )
 from automated_data_pipeline_python_spark.queries.catalog import register
-from automated_data_pipeline_python_spark.tables import load, load_scaled
+from automated_data_pipeline_python_spark.tables import register_views
 
 # Shared gap-fill oracle: DuckDB builds the month spine with a recursive
 # CTE (cheap there — single-node iteration over 80 rows); the Spark side
@@ -73,7 +73,7 @@ def gapfill_monthly_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     recursive-CTE formulation (kept as the separate API-surface entry
     ``gapfill_recursive_spine``) which runs one Spark job per month.
     """
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders_gapfill")
+    register_views(spark, sf_dir, "orders")
     return spark.sql(
         f"""
         WITH months AS (
@@ -87,7 +87,7 @@ def gapfill_monthly_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
                    count(o_orderkey)                AS n_orders,
                    floor(({sql_exact_sum("o_totalprice", 2)}) * 1e2 + 0.5) / 1e2
                                                     AS total_price
-            FROM orders_gapfill
+            FROM orders
             GROUP BY date_trunc('month', o_orderdate)
         )
         SELECT date_format(m.month_start, 'yyyy-MM') AS month,
@@ -111,7 +111,7 @@ def gapfill_recursive_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequence() formulation avoids. This entry pins the recursive-CTE
     language surface itself.
     """
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders_gapfill_rec")
+    register_views(spark, sf_dir, "orders")
     return spark.sql(
         f"""
         WITH RECURSIVE months(month_start) AS (
@@ -125,7 +125,7 @@ def gapfill_recursive_spine(spark: SparkSession, sf_dir: str) -> DataFrame:
                coalesce(floor(({sql_exact_sum("o_totalprice", 2)}) * 1e2 + 0.5) / 1e2, 0.0)
                                                    AS total_price
         FROM months
-        LEFT JOIN orders_gapfill_rec ON date_trunc('month', o_orderdate) = month_start
+        LEFT JOIN orders ON date_trunc('month', o_orderdate) = month_start
         GROUP BY month
         ORDER BY month
         """
@@ -160,15 +160,14 @@ def lateral_top2_orders_per_customer(spark: SparkSession, sf_dir: str) -> DataFr
     custkey — one shuffle on the correlation key, no per-row subquery
     execution.
     """
-    load(spark, sf_dir, "customer").createOrReplaceTempView("customer_lat")
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders_lat")
+    register_views(spark, sf_dir, "customer", "orders")
     return spark.sql(
         """
         SELECT c_custkey, o_orderkey, o_totalprice
-        FROM customer_lat,
+        FROM customer,
         LATERAL (
             SELECT o_orderkey, o_totalprice
-            FROM orders_lat
+            FROM orders
             WHERE o_custkey = c_custkey
             ORDER BY o_totalprice DESC, o_orderkey
             LIMIT 2
@@ -213,11 +212,11 @@ def udtf_long_words(spark: SparkSession, sf_dir: str) -> DataFrame:
                     yield (w, i)
 
     spark.udtf.register("long_words_udtf", LongWords)
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents_udtf")
+    register_views(spark, sf_dir, scaled=("documents",))
     return spark.sql(
         """
         SELECT doc_id, word, pos
-        FROM documents_udtf, LATERAL long_words_udtf(text)
+        FROM documents, LATERAL long_words_udtf(text)
         ORDER BY doc_id, pos
         """
     )
@@ -256,7 +255,7 @@ def variant_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     binary storage beats per-query string parsing when many queries
     touch few fields; this plan parses once and aggregates map-side.
     """
-    load(spark, sf_dir, "events").createOrReplaceTempView("events_variant")
+    register_views(spark, sf_dir, "events")
     return spark.sql(
         """
         SELECT event_type,
@@ -268,7 +267,7 @@ def variant_props_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
         FROM (
             SELECT event_type,
                    variant_get(parse_json(props), '$.k', 'int') AS k
-            FROM events_variant
+            FROM events
         ) t
         GROUP BY event_type
         """
@@ -310,8 +309,7 @@ def pipe_syntax_nation_value(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast-hint invariant). Money sum via the exact-sum decimal
     grid, order-independent across partitions.
     """
-    for t in ("orders", "customer", "nation"):
-        load(spark, sf_dir, t).createOrReplaceTempView(t)
+    register_views(spark, sf_dir, "orders", "customer", "nation")
     return spark.sql(f"""
         FROM orders
         |> WHERE o_orderstatus = 'F'
@@ -367,7 +365,7 @@ LIMIT {_PARAM_TOP}
 def param_marker_priority_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Named-parameter-marker query: bindings passed via spark.sql(args=...),
     never interpolated into the statement text."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    register_views(spark, sf_dir, "orders")
     return spark.sql(
         _PARAM_MARKER_SQL,
         args={

@@ -30,8 +30,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from automated_data_pipeline_python_spark.queries.catalog import register
-from automated_data_pipeline_python_spark.tables import load, load_scaled
+from automated_data_pipeline_python_spark.queries.catalog import materialize, register
+from automated_data_pipeline_python_spark.tables import load_scaled, register_views
 
 
 @register(
@@ -58,11 +58,6 @@ def multimodal_media_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.sha2("text", 256).alias("content_sha"),
         F.length("text").alias("n_chars"),
     )
-
-
-def _docs_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(sql)
 
 
 # ---------------------------------------------------------------------------
@@ -149,7 +144,8 @@ def multimodal_frame_sample_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     the output plan is what ships to the Arrow-batched codec stage —
     decoded frames never cross a shuffle boundary.
     """
-    return _docs_sql(spark, sf_dir, _frame_plan_sql(_spark_dialect()))
+    register_views(spark, sf_dir, scaled=("documents",))
+    return spark.sql(_frame_plan_sql(_spark_dialect()))
 
 
 # ---------------------------------------------------------------------------
@@ -201,7 +197,8 @@ def multimodal_audio_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     locally in the codec stage — only the offset plan flows through
     the engine.
     """
-    return _docs_sql(spark, sf_dir, _audio_seg_sql(_spark_dialect()))
+    register_views(spark, sf_dir, scaled=("documents",))
+    return spark.sql(_audio_seg_sql(_spark_dialect()))
 
 
 # ---------------------------------------------------------------------------
@@ -250,7 +247,8 @@ def multimodal_image_tile_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     scale with total pixels / tile area, and pixels never cross the
     engine — the codec stage crops locally from (off_x, off_y, w, h).
     """
-    return _docs_sql(spark, sf_dir, _tile_plan_sql(_spark_dialect()))
+    register_views(spark, sf_dir, scaled=("documents",))
+    return spark.sql(_tile_plan_sql(_spark_dialect()))
 
 
 # ===========================================================================
@@ -325,7 +323,8 @@ def multimodal_modality_mix_report(spark: SparkSession, sf_dir: str) -> DataFram
     Scale: one hash aggregation to the 4-row modality relation; shares
     join against a one-row totals frame (planner-chosen tiny join).
     """
-    return _docs_sql(spark, sf_dir, _mix_sql(_spark_dialect()))
+    register_views(spark, sf_dir, scaled=("documents",))
+    return spark.sql(_mix_sql(_spark_dialect()))
 
 
 # ---------------------------------------------------------------------------
@@ -395,9 +394,8 @@ def multimodal_bitrate_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one corpus pass to snapped bitrates, exact quartiles per
     bounded fps group, one join back for the outlier count.
     """
-    return _docs_sql(
-        spark,
-        sf_dir,
+    register_views(spark, sf_dir, scaled=("documents",))
+    return spark.sql(
         _bitrate_sql(
             _spark_dialect(),
             "percentile(kbps, 0.25)",
@@ -504,10 +502,8 @@ def multimodal_frame_dedup_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     distinct); Spark inlines CTEs, so it is materialized once via
     localCheckpoint (DuckDB materializes shared CTEs itself).
     """
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    spark.sql(
-        _frames_sql(_spark_dialect(), spark_hash60)
-    ).localCheckpoint(eager=True).createOrReplaceTempView("mm_frames")
+    register_views(spark, sf_dir, scaled=("documents",))
+    materialize(spark.sql(_frames_sql(_spark_dialect(), spark_hash60)), "mm_frames")
     return spark.sql(_frame_dedup_tail("mm_frames"))
 
 
@@ -569,7 +565,7 @@ def multimodal_scene_cut_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the lag window is keyed by clip (constant 8 rows per
     partition); one corpus pass, one keyed aggregation, no pairs.
     """
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    register_views(spark, sf_dir, scaled=("documents",))
     return spark.sql(
         "WITH mm_frames AS ("
         + _frames_sql(_spark_dialect(), spark_hash60).strip()
@@ -687,10 +683,8 @@ def multimodal_vad_utterances(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregations, so Spark materializes it once (localCheckpoint;
     DuckDB materializes shared CTEs itself).
     """
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    spark.sql(
-        _vad_isl_sql(_spark_dialect(), spark_hash28)
-    ).localCheckpoint(eager=True).createOrReplaceTempView("mm_isl")
+    register_views(spark, sf_dir, scaled=("documents",))
+    materialize(spark.sql(_vad_isl_sql(_spark_dialect(), spark_hash28)), "mm_isl")
     return spark.sql(_vad_tail("mm_isl"))
 
 
@@ -702,8 +696,6 @@ def multimodal_vad_utterances(spark: SparkSession, sf_dir: str) -> DataFrame:
 # out = dim·target DIV long_side, exact on both engines), letterbox the
 # short side, flag upscales. Map-only explode over the 3-constant
 # target ladder; pixels never enter the engine.
-
-_TARGETS = (224, 336, 448)
 
 
 def _ladder_sql(d: dict[str, object], expl_targets: str) -> str:
@@ -746,9 +738,8 @@ def multimodal_resolution_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Map-only constant-3 explode; no shuffle at any SF.
     """
-    return _docs_sql(
-        spark,
-        sf_dir,
+    register_views(spark, sf_dir, scaled=("documents",))
+    return spark.sql(
         _ladder_sql(
             _spark_dialect(),
             "LATERAL VIEW explode(array(224, 336, 448)) t AS target",
@@ -810,4 +801,5 @@ def multimodal_shard_packing(spark: SparkSession, sf_dir: str) -> DataFrame:
     id-bucket bounds it), so the plan shuffles once on the bucket key
     and never builds a corpus-sized window partition.
     """
-    return _docs_sql(spark, sf_dir, _pack_sql(_spark_dialect()))
+    register_views(spark, sf_dir, scaled=("documents",))
+    return spark.sql(_pack_sql(_spark_dialect()))

@@ -24,21 +24,11 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
-from automated_data_pipeline_python_spark.queries.catalog import register
-from automated_data_pipeline_python_spark.tables import load, load_scaled
+from automated_data_pipeline_python_spark.queries.catalog import materialize, register
+from automated_data_pipeline_python_spark.tables import register_views
 
 _CHUNK = 160  # window (chars)
 _STRIDE = 120  # step (chars) -> 40-char overlap between neighbors
-
-
-def _docs_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(sql)
-
-
-def _emb_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
-    load_scaled(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
-    return spark.sql(sql)
 
 
 # ---------------------------------------------------------------------------
@@ -79,7 +69,8 @@ def chunk_documents_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     Map-only (no shuffle at any scale); chunk count scales with corpus
     chars, never quadratically.
     """
-    return _docs_sql(spark, sf_dir, _CHUNK_SPARK_SQL)
+    register_views(spark, sf_dir, scaled=("documents",))
+    return spark.sql(_CHUNK_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -132,7 +123,8 @@ def chunk_dedup_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Share of redundant chunks after overlap-window splitting: one
     hash-agg over chunk text (a 64-bit chunk hash at scale), exact
     integer counts + snapped ratio."""
-    return _docs_sql(spark, sf_dir, _CHUNK_DUP_SPARK_SQL)
+    register_views(spark, sf_dir, scaled=("documents",))
+    return spark.sql(_CHUNK_DUP_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -173,7 +165,8 @@ GROUP BY 1, 2
 def doc_length_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Equi-width (width=200) histogram of document lengths with
     per-bucket min/max/avg — integer bucketing, map-side-combined agg."""
-    return _docs_sql(spark, sf_dir, _HIST_SPARK_SQL)
+    register_views(spark, sf_dir, scaled=("documents",))
+    return spark.sql(_HIST_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -226,7 +219,8 @@ def embedding_quantize_int8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Symmetric per-vector int8 quantization (q = round(x/max|x|*127))
     exploded to scalar rows; double-promoted arithmetic keeps both
     engines bit-identical. Map-only."""
-    return _emb_sql(spark, sf_dir, _QUANT_SPARK_SQL)
+    register_views(spark, sf_dir, scaled=("embeddings",))
+    return spark.sql(_QUANT_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -337,15 +331,13 @@ def rag_mmr_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MMR-diversified top-5 from the top-12 cosine candidates of query
     vec 0: greedy lambda*rel - (1-lambda)*redundancy selection with
     snapped scores and vec_id tiebreaks."""
-    load_scaled(spark, sf_dir, "embeddings").createOrReplaceTempView(
-        "embeddings"
-    )
+    register_views(spark, sf_dir, scaled=("embeddings",))
     cands = spark.sql(
         f"WITH {_MMR_NORM_SPARK},\n"
         + _MMR_CANDS.format(dot=_MMR_DOT_SPARK, k=_MMR_K)
         + "\nSELECT * FROM cands"
     )
-    cands.localCheckpoint(eager=True).createOrReplaceTempView("mmr_cands")
+    materialize(cands, "mmr_cands")
     out = spark.sql("WITH " + _mmr_tail("mmr_cands", _MMR_DOT_SPARK))
     spark.catalog.dropTempView("mmr_cands")
     return out

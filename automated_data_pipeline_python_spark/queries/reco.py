@@ -32,8 +32,8 @@ from automated_data_pipeline_python_spark.functions.text import (
     duck_hash28,
     spark_hash28,
 )
-from automated_data_pipeline_python_spark.queries.catalog import register
-from automated_data_pipeline_python_spark.tables import load
+from automated_data_pipeline_python_spark.queries.catalog import materialize, register
+from automated_data_pipeline_python_spark.tables import register_views
 
 _CAPPED_SQL = """
 SELECT u, it FROM (
@@ -91,11 +91,8 @@ def reco_item_item_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     it is materialized once via localCheckpoint (DuckDB materializes
     shared CTEs itself — single-statement oracle).
     """
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    spark.sql(_CAPPED_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "reco_capped"
-    )
+    register_views(spark, sf_dir, "orders", "lineitem")
+    materialize(spark.sql(_CAPPED_SQL), "reco_capped")
     return spark.sql(_cosine_tail("reco_capped"))
 
 
@@ -199,15 +196,9 @@ def reco_als_rank1_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     Ratings feed three stages and the user factors two; Spark inlines
     CTEs, so both are materialized via localCheckpoint.
     """
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    load(spark, sf_dir, "part").createOrReplaceTempView("part")
-    spark.sql(_ALS_RATINGS_SQL).localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("als_ratings")
-    spark.sql(_ALS_UFAC_TPL.format(ratings="als_ratings")).localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("als_ufac")
+    register_views(spark, sf_dir, "orders", "lineitem", "part")
+    materialize(spark.sql(_ALS_RATINGS_SQL), "als_ratings")
+    materialize(spark.sql(_ALS_UFAC_TPL.format(ratings="als_ratings")), "als_ufac")
     return spark.sql("WITH " + _als_tail("als_ratings", "als_ufac").lstrip())
 
 
@@ -292,9 +283,7 @@ def reco_copurchase_hitrate_eval(
     """Time-split offline eval of the top-3 co-purchase recommender:
     per-brand held-out partner count, hits, and hit rate (train on the
     first half of the order history, test on the second)."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    load(spark, sf_dir, "part").createOrReplaceTempView("part")
+    register_views(spark, sf_dir, "orders", "lineitem", "part")
     return spark.sql(
         _RECO_EVAL_SQL.format(div=_RECO_EVAL_DIV.format(op="DIV"))
     )
@@ -400,11 +389,8 @@ def reco_coverage_diversity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Beyond-accuracy metrics of the top-3 co-purchase recommender:
     catalog coverage, mean intra-list (brand-family) diversity, and
     recommendation-frequency entropy."""
-    for t in ("lineitem", "part"):
-        load(spark, sf_dir, t).createOrReplaceTempView(t)
-    spark.sql(_RECO_EDGES_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "reco_edges"
-    )
+    register_views(spark, sf_dir, "lineitem", "part")
+    materialize(spark.sql(_RECO_EDGES_SQL), "reco_edges")
     return spark.sql("WITH " + _reco_div_tail("reco_edges").lstrip())
 
 
@@ -503,8 +489,7 @@ def reco_bradley_terry_round(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one (order, brand) aggregation, a basket-bounded pair join,
     then all iteration algebra on the brands² relation (bounded).
     """
-    for t in ("lineitem", "part"):
-        load(spark, sf_dir, t).createOrReplaceTempView(t)
+    register_views(spark, sf_dir, "lineitem", "part")
     return spark.sql(_BT_SQL)
 
 
@@ -591,8 +576,7 @@ def orders_sequential_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: one per-customer order window plus basket-bounded joins of
     consecutive baskets; rule scoring runs on the brands² relation.
     """
-    for t in ("orders", "lineitem", "part"):
-        load(spark, sf_dir, t).createOrReplaceTempView(t)
+    register_views(spark, sf_dir, "orders", "lineitem", "part")
     return spark.sql(_SEQ_RULES_SQL)
 
 
@@ -703,12 +687,10 @@ def reco_map_mrr_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     halves (4 references); Spark inlines CTEs, so it is materialized
     once via localCheckpoint (DuckDB materializes shared CTEs itself —
     single-statement oracle)."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    load(spark, sf_dir, "part").createOrReplaceTempView("part")
-    spark.sql(
-        _MAP_OB_SQL.format(div=_RECO_EVAL_DIV.format(op="DIV"))
-    ).localCheckpoint(eager=True).createOrReplaceTempView("mm_ob")
+    register_views(spark, sf_dir, "orders", "lineitem", "part")
+    materialize(
+        spark.sql(_MAP_OB_SQL.format(div=_RECO_EVAL_DIV.format(op="DIV"))), "mm_ob"
+    )
     return spark.sql(
         "WITH "
         + _MAP_TAIL.format(
@@ -821,10 +803,6 @@ def reco_slope_one_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     of the customer x brand quantity matrix: MAE and coverage — the
     rating-prediction baseline beside the item-item ranker. The rating
     split materializes once (localCheckpoint) for its six references."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    load(spark, sf_dir, "part").createOrReplaceTempView("part")
-    spark.sql(_slope_one_split_sql(spark_hash28)).localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("so_split")
+    register_views(spark, sf_dir, "orders", "lineitem", "part")
+    materialize(spark.sql(_slope_one_split_sql(spark_hash28)), "so_split")
     return spark.sql(_slope_one_tail_sql("so_split"))

@@ -33,7 +33,11 @@ from automated_data_pipeline_python_spark.functions.numeric import (
     stable_round,
 )
 from automated_data_pipeline_python_spark.queries.catalog import register
-from automated_data_pipeline_python_spark.tables import load, load_scaled
+from automated_data_pipeline_python_spark.tables import (
+    load,
+    load_scaled,
+    register_views,
+)
 
 # Money sums snap per-row to an integer grid before SUM so the total is
 # order-independent (see functions/numeric.py). Grid = decimal
@@ -330,11 +334,11 @@ def agg_cube_status_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def agg_grouping_sets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Explicit GROUPING SETS via SQL (Catalyst Expand operator)."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders_gs")
+    register_views(spark, sf_dir, "orders")
     return spark.sql(
         """
         SELECT o_orderstatus, o_orderpriority, count(*) AS cnt
-        FROM orders_gs
+        FROM orders
         GROUP BY GROUPING SETS ((o_orderstatus), (o_orderpriority))
         """
     )

@@ -18,7 +18,7 @@ from automated_data_pipeline_python_spark.functions.numeric import (
     stable_round,
 )
 from automated_data_pipeline_python_spark.queries.catalog import register
-from automated_data_pipeline_python_spark.tables import load
+from automated_data_pipeline_python_spark.tables import load, register_views
 
 
 # ---------------------------------------------------------------------------
@@ -346,12 +346,12 @@ def scalar_subquery_above_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the subquery is a one-row broadcast — Catalyst plans it as a
     subquery-reuse + broadcast, no per-row evaluation.
     """
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders_sq")
+    register_views(spark, sf_dir, "orders")
     return spark.sql(
         f"""
         SELECT o_orderkey, o_totalprice
-        FROM orders_sq
-        WHERE o_totalprice > 1.9 * (SELECT {sql_exact_avg("o_totalprice", 2)} FROM orders_sq)
+        FROM orders
+        WHERE o_totalprice > 1.9 * (SELECT {sql_exact_avg("o_totalprice", 2)} FROM orders)
         """
     )
 
@@ -368,14 +368,13 @@ def scalar_subquery_above_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
 )
 def in_subquery_hot_parts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IN-subquery (plans as left-semi join) + HAVING."""
-    load(spark, sf_dir, "part").createOrReplaceTempView("part_sq")
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_sq")
+    register_views(spark, sf_dir, "part", "lineitem")
     return spark.sql(
         """
         SELECT p_partkey, p_name
-        FROM part_sq
+        FROM part
         WHERE p_partkey IN (
-            SELECT l_partkey FROM lineitem_sq GROUP BY l_partkey HAVING count(*) > 40
+            SELECT l_partkey FROM lineitem GROUP BY l_partkey HAVING count(*) > 40
         )
         """
     )
@@ -397,11 +396,11 @@ def limit_offset_page2(spark: SparkSession, sf_dir: str) -> DataFrame:
     node — fine for UI pages, wrong for deep scans (use keyset
     pagination: WHERE (price, key) < last_seen ORDER BY ... LIMIT k).
     """
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders_lo")
+    register_views(spark, sf_dir, "orders")
     return spark.sql(
         """
         SELECT o_orderkey, o_totalprice
-        FROM orders_lo
+        FROM orders
         ORDER BY o_totalprice DESC, o_orderkey
         LIMIT 25 OFFSET 50
         """

@@ -13,7 +13,7 @@ from automated_data_pipeline_python_spark.functions.numeric import (
     stable_round,
 )
 from automated_data_pipeline_python_spark.queries.catalog import register
-from automated_data_pipeline_python_spark.tables import load
+from automated_data_pipeline_python_spark.tables import load, register_views
 
 
 def _corr_sql(table: str) -> str:
@@ -68,8 +68,8 @@ def agg_corr_regression(spark: SparkSession, sf_dir: str) -> DataFrame:
     see ``_corr_sql`` for why the moments formulation replaces the
     builtin corr/covar/regr_* accumulators.
     """
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_corr")
-    return spark.sql(_corr_sql("lineitem_corr"))
+    register_views(spark, sf_dir, "lineitem")
+    return spark.sql(_corr_sql("lineitem"))
 
 
 @register(
@@ -241,5 +241,5 @@ def lineitem_ols_two_factor(spark: SparkSession, sf_dir: str) -> DataFrame:
     One map-side-combinable aggregation (9 moments + count) at any SF;
     the solve itself is constant work on a single row.
     """
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
+    register_views(spark, sf_dir, "lineitem")
     return spark.sql(_ols2_sql("lineitem"))

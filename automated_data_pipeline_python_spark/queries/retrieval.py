@@ -33,7 +33,7 @@ from automated_data_pipeline_python_spark.functions.numeric import (
     sql_exact_sum,
 )
 from automated_data_pipeline_python_spark.queries.catalog import register
-from automated_data_pipeline_python_spark.tables import load_scaled
+from automated_data_pipeline_python_spark.tables import register_views
 
 _S_TOK = SPARK_TOKENS.format(col="text")
 _D_TOK = DUCK_TOKENS.format(col="text")
@@ -46,16 +46,6 @@ _TERMS_IN = ", ".join(f"'{t}'" for t in _QUERY_TERMS)
 _K1 = 1.2
 _B = 0.75
 _BM25_TOP = 20
-
-
-def _docs_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(sql)
-
-
-def _emb_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
-    load_scaled(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
-    return spark.sql(sql)
 
 
 # ---------------------------------------------------------------------------
@@ -147,7 +137,8 @@ def text_bm25_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     stats: 1 row) → global top-k (TakeOrderedAndProject). Total order
     via (snapped score DESC, doc_id).
     """
-    return _docs_sql(spark, sf_dir, _BM25_SPARK_SQL)
+    register_views(spark, sf_dir, scaled=("documents",))
+    return spark.sql(_BM25_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -210,7 +201,8 @@ def text_inverted_postings(spark: SparkSession, sf_dir: str) -> DataFrame:
     window partitioned by term with an rn<=8 cut before any list is
     built. A 100 TB hot term costs a rank-scan, never a giant array.
     """
-    return _docs_sql(spark, sf_dir, _POSTINGS_SPARK_SQL)
+    register_views(spark, sf_dir, scaled=("documents",))
+    return spark.sql(_POSTINGS_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -286,7 +278,8 @@ def embedding_hard_negatives(spark: SparkSession, sf_dir: str) -> DataFrame:
     final window. Cosines snap to the 1e-6 grid BEFORE ranking and the
     margin subtraction so both engines rank identical values.
     """
-    return _emb_sql(spark, sf_dir, _HARDNEG_SPARK_SQL)
+    register_views(spark, sf_dir, scaled=("embeddings",))
+    return spark.sql(_HARDNEG_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -378,10 +371,7 @@ def rag_reciprocal_rank_fusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: each leg reduces to a TakeOrdered top-k; ranks are assigned
     on the 20-row leg outputs; fusion joins two 20-row relations.
     """
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    load_scaled(spark, sf_dir, "embeddings").createOrReplaceTempView(
-        "embeddings"
-    )
+    register_views(spark, sf_dir, scaled=("documents", "embeddings"))
     return spark.sql(_RRF_SPARK_SQL)
 
 
@@ -448,7 +438,7 @@ _MAXSIM_DUCK_SQL = _maxsim_sql(
 @register("retrieval_maxsim_colbert", oracle=_MAXSIM_DUCK_SQL)
 def retrieval_maxsim_colbert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-10 docs by late-interaction MaxSim over hash token vectors."""
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    register_views(spark, sf_dir, scaled=("documents",))
     return spark.sql(
         _maxsim_sql(
             tok=f"explode({SPARK_TOKENS.format(col='text')})",
@@ -560,4 +550,5 @@ def text_ql_dirichlet_ranking(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Dirichlet-smoothed query-likelihood top-20 for the shared fixed
     query-term set (mu=2000) — the LM ranking next to BM25, with a
     map-only base term and a hits-only adjustment join."""
-    return _docs_sql(spark, sf_dir, _QL_SPARK_SQL)
+    register_views(spark, sf_dir, scaled=("documents",))
+    return spark.sql(_QL_SPARK_SQL)

@@ -27,25 +27,14 @@ from automated_data_pipeline_python_spark.functions.text import (
     duck_hash60,
     spark_hash60,
 )
-from automated_data_pipeline_python_spark.queries.catalog import register
-from automated_data_pipeline_python_spark.tables import load, load_scaled
+from automated_data_pipeline_python_spark.queries.catalog import materialize, register
+from automated_data_pipeline_python_spark.tables import register_views
 
 _DIMS = 64
 _N_PLANES = 3   # 8 buckets per table
 _N_TABLES = 4   # union of candidates across tables (recall knob)
 _N_QUERIES = 5  # query set: vec_id < 5
 _TOP_K = 10
-
-
-def _emb_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
-    load_scaled(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
-    return spark.sql(sql)
-
-
-def _materialize_view(df: DataFrame, name: str) -> None:
-    """Compute once, register for reuse (Spark inlines CTEs — a bucket
-    table referenced twice would run the whole LSH pipeline twice)."""
-    df.localCheckpoint(eager=True).createOrReplaceTempView(name)
 
 
 # ---------------------------------------------------------------------------
@@ -112,7 +101,8 @@ def knn_bruteforce_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     Norms come from the shared pre-normed relation (one pass per side),
     not per-pair recomputation.
     """
-    return _emb_sql(spark, sf_dir, _KNN_SPARK_SQL)
+    register_views(spark, sf_dir, scaled=("embeddings",))
+    return spark.sql(_KNN_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -212,7 +202,8 @@ FROM buckets GROUP BY t, bucket
 @register("ann_lsh_bucket_histogram", oracle=_BUCKETS_CORE_DUCK + _HIST_TAIL_DUCK)
 def ann_lsh_bucket_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hyperplane-LSH signature buckets + occupancy histogram."""
-    return _emb_sql(spark, sf_dir, _BUCKETS_CORE_SPARK + _HIST_TAIL)
+    register_views(spark, sf_dir, scaled=("embeddings",))
+    return spark.sql(_BUCKETS_CORE_SPARK + _HIST_TAIL)
 
 
 _ANN_TAIL = f"""
@@ -261,10 +252,8 @@ def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     pre-normed relation (one pass per side). More planes + multiple
     tables trade recall for cost — the plan shape is unchanged.
     """
-    _materialize_view(
-        _emb_sql(spark, sf_dir, _BUCKETS_CORE_SPARK + "SELECT * FROM buckets"),
-        "lsh_buckets",
-    )
+    register_views(spark, sf_dir, scaled=("embeddings",))
+    materialize(spark.sql(_BUCKETS_CORE_SPARK + "SELECT * FROM buckets"), "lsh_buckets")
     return spark.sql(_ANN_TAIL_SPARK)
 
 
@@ -305,7 +294,8 @@ FROM norms GROUP BY label
 @register("embedding_norm_stats", oracle=_NORM_DUCK_SQL)
 def embedding_norm_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label vector norm statistics."""
-    return _emb_sql(spark, sf_dir, _NORM_SPARK_SQL)
+    register_views(spark, sf_dir, scaled=("embeddings",))
+    return spark.sql(_NORM_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -419,7 +409,7 @@ def ann_ivf_cell_assignment(spark: SparkSession, sf_dir: str) -> DataFrame:
     Structure is additionally validated by tests/test_similarity.py
     (assignment total, cells balanced, IVF top-k recall vs brute force).
     """
-    load_scaled(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
+    register_views(spark, sf_dir, scaled=("embeddings",))
     return spark.sql(_CELL_ASSIGN_SPARK_SQL)
 
 
@@ -636,7 +626,8 @@ def ann_ivf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     because assignment is 1:1. Re-rank touches ~nprobe/cells of the
     data per query.
     """
-    return _emb_sql(spark, sf_dir, _IVF_SPARK_SQL)
+    register_views(spark, sf_dir, scaled=("embeddings",))
+    return spark.sql(_IVF_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -789,8 +780,8 @@ def ann_pq_adc_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     encode stage is one corpus pass per subspace. The subvector relation
     is materialized once (codebook, encode, and query stages share it).
     """
-    load_scaled(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
-    _materialize_view(spark.sql(_PQ_SUB_SPARK), "pq_sub")
+    register_views(spark, sf_dir, scaled=("embeddings",))
+    materialize(spark.sql(_PQ_SUB_SPARK), "pq_sub")
     return spark.sql(_PQ_TAIL_SPARK)
 
 
@@ -866,8 +857,8 @@ def ann_pq_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     a sample in production); the PQ side is the index pipeline
     unchanged. Both read the materialized subvector relation.
     """
-    load_scaled(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
-    _materialize_view(spark.sql(_PQ_SUB_SPARK), "pq_sub")
+    register_views(spark, sf_dir, scaled=("embeddings",))
+    materialize(spark.sql(_PQ_SUB_SPARK), "pq_sub")
     spark.sql(_PQ_TAIL_SPARK).createOrReplaceTempView("pq_topk")
     sql = (
         "WITH base AS (SELECT vec_id,"
@@ -1100,11 +1091,14 @@ def ann_pq_tuning_sweep(spark: SparkSession, sf_dir: str) -> DataFrame:
     plus the shared exact truth reads it, and Spark would otherwise
     re-derive the cast+scan ~11x across the five chains.
     """
-    load_scaled(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
-    spark.sql(
-        "SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS v"
-        " FROM embeddings"
-    ).localCheckpoint(eager=True).createOrReplaceTempView("pq_sweep_base")
+    register_views(spark, sf_dir, scaled=("embeddings",))
+    materialize(
+        spark.sql(
+            "SELECT vec_id, transform(embedding, x -> CAST(x AS DOUBLE)) AS v"
+            " FROM embeddings"
+        ),
+        "pq_sweep_base",
+    )
     return spark.sql(_PQ_SWEEP_SPARK_SQL)
 
 
@@ -1219,7 +1213,7 @@ _SEM_CONTAM_DUCK_SQL = (
 @register("contamination_semantic", oracle=_SEM_CONTAM_DUCK_SQL)
 def contamination_semantic(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label semantic-contamination report vs a broadcast eval set."""
-    load_scaled(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
+    register_views(spark, sf_dir, scaled=("embeddings",))
     sql = (
         f"WITH {_SPARK_EMB_N_CTE.replace('vec_id, embedding,', 'vec_id, label, embedding,')},\n"
         + _semantic_contam_tail(_SPARK_COS)
@@ -1315,7 +1309,8 @@ def _trunc_sql(spark_side: bool) -> str:
 def ann_dim_truncation_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     """recall@10 of dimension-truncated cosine (d=16, 32) vs full-dim
     truth — the Matryoshka serving trade-off, measured."""
-    return _emb_sql(spark, sf_dir, _trunc_sql(True))
+    register_views(spark, sf_dir, scaled=("embeddings",))
+    return spark.sql(_trunc_sql(True))
 
 
 # ---------------------------------------------------------------------------
@@ -1410,8 +1405,8 @@ def embedding_class_separability(spark: SparkSession, sf_dir: str) -> DataFrame:
     the corpus-sized work is the single exploded-moment aggregation,
     materialized once.
     """
-    load_scaled(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
-    _materialize_view(
+    register_views(spark, sf_dir, scaled=("embeddings",))
+    materialize(
         spark.sql(
             _SEP_MOMENTS.format(
                 pos="pos",
@@ -1503,12 +1498,11 @@ def ann_lsh_multiprobe_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     query-side only; the data bucketing and the (t, bucket) equi-join
     are unchanged from ann_lsh_topk.
     """
-    load_scaled(spark, sf_dir, "embeddings").createOrReplaceTempView(
-        "embeddings"
+    register_views(spark, sf_dir, scaled=("embeddings",))
+    materialize(
+        spark.sql(_BUCKETS_CORE_SPARK + "SELECT vec_id, t, bucket FROM buckets"),
+        "mp_lsh_buckets",
     )
-    spark.sql(
-        _BUCKETS_CORE_SPARK + "SELECT vec_id, t, bucket FROM buckets"
-    ).localCheckpoint(eager=True).createOrReplaceTempView("mp_lsh_buckets")
     return spark.sql(_MP_SPARK_TAIL)
 
 
@@ -1684,7 +1678,7 @@ def embedding_rocchio_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
     (bounded) and reduces per (vector, label) — no pairwise vector
     joins anywhere.
     """
-    load_scaled(spark, sf_dir, "embeddings").createOrReplaceTempView("embeddings")
+    register_views(spark, sf_dir, scaled=("embeddings",))
     return spark.sql(_rocchio_spark_sql())
 
 
@@ -1791,9 +1785,7 @@ def embedding_centroid_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label centroid cosine and norm ratio between the two
     vec_id-parity halves of the embedding corpus — the vector-space
     drift screen next to the scalar PSI/KS/W1 family."""
-    load_scaled(spark, sf_dir, "embeddings").createOrReplaceTempView(
-        "embeddings"
-    )
+    register_views(spark, sf_dir, scaled=("embeddings",))
     return spark.sql(_CENTROID_DRIFT_SPARK_SQL)
 
 
@@ -1882,7 +1874,5 @@ def embedding_mahalanobis_outliers(
     """Top-5 per-label embedding outliers by diagonal-covariance
     Mahalanobis distance — exact scaled-integer moments, scale-free
     per-dim ratios, integer-ranked with vec_id tie-breaks."""
-    load_scaled(spark, sf_dir, "embeddings").createOrReplaceTempView(
-        "embeddings"
-    )
+    register_views(spark, sf_dir, scaled=("embeddings",))
     return spark.sql(_MAHAL_SPARK_SQL)

@@ -27,16 +27,11 @@ from automated_data_pipeline_python_spark.functions.text import (
 from automated_data_pipeline_python_spark.functions.numeric import (
     sql_exact_sum,
 )
-from automated_data_pipeline_python_spark.queries.catalog import register
-from automated_data_pipeline_python_spark.tables import load, load_scaled
+from automated_data_pipeline_python_spark.queries.catalog import materialize, register
+from automated_data_pipeline_python_spark.tables import register_views
 
 _S_TOK = SPARK_TOKENS.format(col="text")
 _D_TOK = DUCK_TOKENS.format(col="text")
-
-
-def _docs_sql(spark: SparkSession, sf_dir: str, sql: str) -> DataFrame:
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(sql)
 
 
 # ---------------------------------------------------------------------------
@@ -72,7 +67,8 @@ FROM documents
 @register("text_token_counts", oracle=_TOKENS_DUCK_SQL)
 def text_token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Whitespace + regex token counts and a 4/3-heuristic BPE estimate."""
-    return _docs_sql(spark, sf_dir, _TOKENS_SPARK_SQL)
+    register_views(spark, sf_dir, scaled=("documents",))
+    return spark.sql(_TOKENS_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -137,7 +133,8 @@ FROM feats
 @register("text_quality_scores", oracle=_QUALITY_DUCK_SQL)
 def text_quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document quality features + composite score + flag."""
-    return _docs_sql(spark, sf_dir, _QUALITY_SPARK_SQL)
+    register_views(spark, sf_dir, scaled=("documents",))
+    return spark.sql(_QUALITY_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -185,7 +182,8 @@ FROM scored
 )
 def text_language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """N-gram/stopword-profile language ID with deterministic argmax."""
-    return _docs_sql(spark, sf_dir, _langid_sql(_S_TOK, spark_stopword_hits))
+    register_views(spark, sf_dir, scaled=("documents",))
+    return spark.sql(_langid_sql(_S_TOK, spark_stopword_hits))
 
 
 # ---------------------------------------------------------------------------
@@ -239,7 +237,8 @@ def text_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     keys (reference pipeline/utils/cache.py:58-74) reused for content
     addressing.
     """
-    return _docs_sql(spark, sf_dir, _FP_SPARK_SQL)
+    register_views(spark, sf_dir, scaled=("documents",))
+    return spark.sql(_FP_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -276,7 +275,8 @@ GROUP BY lang, source
 @register("text_corpus_stats", oracle=_STATS_DUCK_SQL)
 def text_corpus_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-level rollup by (lang, source)."""
-    return _docs_sql(spark, sf_dir, _STATS_SPARK_SQL)
+    register_views(spark, sf_dir, scaled=("documents",))
+    return spark.sql(_STATS_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -328,9 +328,8 @@ def text_hash_embedding(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle. The output feeds the cosine/ANN family wherever neural
     embeddings are absent.
     """
-    return _docs_sql(
-        spark,
-        sf_dir,
+    register_views(spark, sf_dir, scaled=("documents",))
+    return spark.sql(
         _hash_embed_sql(
             _S_TOK, " LATERAL VIEW explode(w) t AS token", spark_hash60
         ),
@@ -367,7 +366,8 @@ ORDER BY actual_lang, predicted_lang
 )
 def lang_id_confusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Language-ID confusion matrix with per-actual-language recall."""
-    return _docs_sql(spark, sf_dir, _lang_confusion_sql(_S_TOK, spark_stopword_hits))
+    register_views(spark, sf_dir, scaled=("documents",))
+    return spark.sql(_lang_confusion_sql(_S_TOK, spark_stopword_hits))
 
 
 # ---------------------------------------------------------------------------
@@ -416,9 +416,8 @@ ORDER BY term
 )
 def text_term_burstiness(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-term Church burstiness (cf/df) and variance-to-mean ratio."""
-    return _docs_sql(
-        spark,
-        sf_dir,
+    register_views(spark, sf_dir, scaled=("documents",))
+    return spark.sql(
         _burst_sql(f"SELECT doc_id, explode({_S_TOK}) AS tok FROM documents"),
     )
 
@@ -532,19 +531,15 @@ _HEAPS_DUCK_SQL = (
 @register("text_heaps_vocab_growth", oracle=_HEAPS_DUCK_SQL)
 def text_heaps_vocab_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Vocabulary-growth curve sample points + fitted Heaps k, β."""
-    from automated_data_pipeline_python_spark.queries.dedup import (
-        _materialize_view,
-    )
-
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    _materialize_view(
+    register_views(spark, sf_dir, scaled=("documents",))
+    materialize(
         spark.sql(
             f"SELECT doc_id, tok AS term FROM "
             f"(SELECT doc_id, explode({_S_TOK}) AS tok FROM documents)"
         ),
         "heaps_tok",
     )
-    _materialize_view(
+    materialize(
         spark.sql(
             "WITH "
             + _HEAPS_CURVE.replace("{tok}", "heaps_tok")
@@ -651,7 +646,8 @@ def text_rake_phrases(spark: SparkSession, sf_dir: str) -> DataFrame:
     One explode + one doc-keyed window + a vocabulary-sized stats join;
     no double is accumulated in engine-dependent order.
     """
-    return _docs_sql(spark, sf_dir, _rake_sql(_RAKE_SPARK))
+    register_views(spark, sf_dir, scaled=("documents",))
+    return spark.sql(_rake_sql(_RAKE_SPARK))
 
 
 # ---------------------------------------------------------------------------
@@ -755,15 +751,18 @@ def text_winnowing_fingerprints(spark: SparkSession, sf_dir: str) -> DataFrame:
     sides, per-doc sizes); Spark inlines CTEs, so it is materialized
     once via localCheckpoint.
     """
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    spark.sql(
-        _winnow_fp_sql(spark_hash60, " LATERAL VIEW explode(idx) t AS i").format(
-            seq=(
-                f"CASE WHEN length(s) >= {_WINNOW_K} THEN "
-                f"sequence(1, length(s) - {_WINNOW_K} + 1) ELSE array() END"
+    register_views(spark, sf_dir, scaled=("documents",))
+    materialize(
+        spark.sql(
+            _winnow_fp_sql(spark_hash60, " LATERAL VIEW explode(idx) t AS i").format(
+                seq=(
+                    f"CASE WHEN length(s) >= {_WINNOW_K} THEN "
+                    f"sequence(1, length(s) - {_WINNOW_K} + 1) ELSE array() END"
+                )
             )
-        )
-    ).localCheckpoint(eager=True).createOrReplaceTempView("win_fp")
+        ),
+        "win_fp",
+    )
     return spark.sql("WITH " + _winnow_tail("win_fp").lstrip())
 
 
@@ -823,7 +822,8 @@ def corpus_good_turing_chao1(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Good-Turing missing mass + bias-corrected Chao1 richness from
     the frequency-of-frequencies table — the corpus coverage
     diagnostics an LM-data pipeline reads before committing a crawl."""
-    return _docs_sql(spark, sf_dir, _GT_SPARK_SQL)
+    register_views(spark, sf_dir, scaled=("documents",))
+    return spark.sql(_GT_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -885,13 +885,16 @@ def corpus_trigram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document first-seen trigram fraction (novelty by doc_id
     order) — the crawl-saturation curve, computed by origin
     attribution instead of pair enumeration."""
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    spark.sql(
-        _novelty_grams_sql(
-            spark_word_shingles(_S_TOK, 3), spark_hash60,
-            " LATERAL VIEW explode(sh) t AS s",
-        )
-    ).localCheckpoint(eager=True).createOrReplaceTempView("nov_grams")
+    register_views(spark, sf_dir, scaled=("documents",))
+    materialize(
+        spark.sql(
+            _novelty_grams_sql(
+                spark_word_shingles(_S_TOK, 3), spark_hash60,
+                " LATERAL VIEW explode(sh) t AS s",
+            )
+        ),
+        "nov_grams",
+    )
     return spark.sql(_novelty_tail("nov_grams"))
 
 
@@ -1005,9 +1008,7 @@ def text_gini_token_concentration(
     """Gini coefficient and top-1%/top-10% Lorenz shares of the token
     frequency distribution — exact tied-block arithmetic off the
     distinct-count histogram, never a per-token rank."""
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView(
-        "documents"
-    )
+    register_views(spark, sf_dir, scaled=("documents",))
     return spark.sql(_GINI_SPARK_SQL)
 
 
@@ -1116,9 +1117,7 @@ def text_burrows_delta(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Burrows' Delta over the top-30 token z-score profiles: the 15
     most stylistically similar source pairs — the duplicate-generator
     screen that survives topic drift."""
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView(
-        "documents"
-    )
+    register_views(spark, sf_dir, scaled=("documents",))
     return spark.sql(_BD_SPARK_SQL)
 
 
@@ -1196,9 +1195,7 @@ def text_readability_flesch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-source Flesch reading-ease profile (vowel-group syllable
     proxy): words/sentence, syllables/word, exact-sum mean score, and
     the plain-English (>=60) census."""
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView(
-        "documents"
-    )
+    register_views(spark, sf_dir, scaled=("documents",))
     return spark.sql(_FLESCH_SPARK_SQL)
 
 
@@ -1253,7 +1250,8 @@ def text_yule_k_herdan(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Yule's characteristic K, Herdan's C, and the raw repeat rate
     from the frequency-of-frequencies table — corpus-level vocabulary
     concentration constants."""
-    return _docs_sql(spark, sf_dir, _yule_sql(
+    register_views(spark, sf_dir, scaled=("documents",))
+    return spark.sql(_yule_sql(
         "regexp_extract_all(text, '[a-z]+', 0)",
         " LATERAL VIEW explode(ws) t AS w",
     ))

@@ -25,9 +25,9 @@ from automated_data_pipeline_python_spark.functions.numeric import (
     sql_normal_two_sided_p,
     sql_stable_round,
 )
-from automated_data_pipeline_python_spark.queries.catalog import register
+from automated_data_pipeline_python_spark.queries.catalog import materialize, register
 from automated_data_pipeline_python_spark.session import recursion_limits
-from automated_data_pipeline_python_spark.tables import load
+from automated_data_pipeline_python_spark.tables import load, register_views
 
 # ---------------------------------------------------------------------------
 # EWMA of the daily event-count series (recursive CTE)
@@ -89,7 +89,7 @@ FROM ewma
 )
 def events_ewma_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-type daily event counts with an EWMA(0.2) smoothing column."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     with recursion_limits(spark):
         return spark.sql(
             _ewma_sql("date_format(d, 'yyyy-MM-dd')")
@@ -138,7 +138,7 @@ _STREAKS_DUCK = _streaks_sql("CAST(date_diff('day', DATE '1970-01-01', d) AS BIG
 @register("events_activity_streaks", oracle=_STREAKS_DUCK)
 def events_activity_streaks(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Histogram of each user's longest consecutive-active-day streak."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_streaks_sql("CAST(datediff(d, DATE '1970-01-01') AS BIGINT)"))
 
 
@@ -192,7 +192,7 @@ _INTERARRIVAL_DUCK = _interarrival_sql(
 def events_interarrival_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-type inter-arrival-time percentiles (same-user consecutive
     events)."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(
         _interarrival_sql("timestampdiff(MICROSECOND, prev_ts, ts)", "percentile")
     )
@@ -256,7 +256,7 @@ _ACF_DUCK = _acf_sql("SELECT CAST(range AS BIGINT) AS lag FROM range(1, 8)")
 @register("events_daily_acf", oracle=_ACF_DUCK)
 def events_daily_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Autocorrelation (lags 1-7) of each type's daily count series."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_acf_sql("SELECT CAST(id AS BIGINT) AS lag FROM range(1, 8)"))
 
 
@@ -384,7 +384,7 @@ def events_cusum_changepoints(spark: SparkSession, sf_dir: str) -> DataFrame:
     this module ~line 2120), which is the RETROSPECTIVE argmax-|S_k|
     changepoint localizer emitting one row per type; the near-identical
     names are historical — see COVERAGE.md's CUSUM note."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     with recursion_limits(spark):
         return spark.sql(
             _CUSUM_BODY.replace("{fmt_day}", "date_format(d, 'yyyy-MM-dd')")
@@ -450,7 +450,7 @@ ORDER BY event_type, day
 )
 def events_mad_outliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Median/MAD robust z-scores per (event_type, day) with |z|>3 flags."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_mad_sql("date_format(d, 'yyyy-MM-dd')", "percentile"))
 
 
@@ -517,7 +517,7 @@ ORDER BY w.wk
 )
 def events_bitmap_retention(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Week-over-week retention from per-user week bitmasks (bit_or)."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(
         _bitmap_retention_sql(
             "CAST(floor(datediff(CAST(e.ts AS DATE), b.d0) / 7) AS INT)"
@@ -558,7 +558,7 @@ ORDER BY dow, hour
 )
 def events_seasonality_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(day-of-week × hour) activity shares and seasonal indices."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_seasonality_sql("(dayofweek(ts) + 5) % 7", "hour(ts)"))
 
 
@@ -678,7 +678,7 @@ def events_holt_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Holt linear-trend smoothing of daily counts with 1/7-day
     forecasts. Spark executes the single-fold twin of the recursive
     oracle (one aggregate() lambda per type, not one job per day)."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(
         (_HOLT_SPARK_CTES + _HOLT_BODY[len(_HOLT_CTES):])
         .replace("{fmt_day}", "date_format(d, 'yyyy-MM-dd')")
@@ -737,7 +737,7 @@ def events_forecast_backtest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """One-step walk-forward MAE/MAPE of the Holt forecaster, per type.
     Spark replays the fold twin of the Holt recursion (no per-day
     jobs); the oracle keeps the recursive form."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(
         _HOLT_SPARK_CTES.rstrip()
         + _BACKTEST_TAIL
@@ -812,7 +812,7 @@ ORDER BY channel
 )
 def events_multi_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Linear and time-decay multi-touch revenue attribution per channel."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(
         _mta_sql("CAST(timestampdiff(MICROSECOND, t_ts, p_ts) AS DOUBLE) / 864e8")
     )
@@ -889,7 +889,7 @@ ORDER BY t.event_type
 )
 def events_theil_sen_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theil–Sen median-of-slopes trend per type, with the OLS contrast."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(
         _theil_sen_sql("percentile", "datediff(d, DATE '1970-01-01')")
     )
@@ -953,7 +953,7 @@ def _winsor_exact_avg(expr: str) -> str:
 )
 def events_winsorized_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Raw vs winsorized vs trimmed mean per type (p05/p95 bounds)."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_winsor_sql("percentile", _winsor_exact_avg))
 
 
@@ -1025,7 +1025,7 @@ ORDER BY entry_type
 )
 def events_session_bounce_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bounce rate and mean depth per session entry type (30-min gaps)."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_bounce_sql("timestampdiff(MICROSECOND, prev_ts, ts)"))
 
 
@@ -1108,7 +1108,7 @@ ORDER BY day
 )
 def events_peak_concurrency(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-day peak concurrent sessions (gap sessions, day-clipped sweep)."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(
         _concurrency_sql(
             "timestampdiff(MICROSECOND, prev_ts, ts)",
@@ -1168,7 +1168,7 @@ ORDER BY event_type, day
 )
 def events_lag_feature_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-(type, day) lag and trailing-window features for forecasting."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_lag_features_sql("date_format(d, 'yyyy-MM-dd')"))
 
 
@@ -1236,7 +1236,7 @@ ORDER BY day, hr
 )
 def events_seasonal_anomalies(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Poisson-style z vs (daily level × weekly hourly profile), flagged."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(
         _seasonal_resid_sql("(dayofweek(ts) + 5) % 7", "date_format(d, 'yyyy-MM-dd')")
     )
@@ -1306,7 +1306,7 @@ def events_latency_decade_histogram(spark: SparkSession, sf_dir: str) -> DataFra
     only corpus-sized stage is the lag window's user_id shuffle, and the
     histogram itself is (types x ~14 decades) — constant-sized at any SF.
     """
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_latency_decades_sql("timestampdiff(MICROSECOND, prev_ts, ts)"))
 
 
@@ -1366,7 +1366,7 @@ def events_hysteresis_alerts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user two-threshold (200/50) hysteresis alarm: episode
     counts and events-in-alarm, state carried by one LOCF window —
     no iteration, one user-keyed shuffle."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_hysteresis_sql("last_value({expr}, true)"))
 
 
@@ -1407,7 +1407,7 @@ def events_new_vs_returning_dau(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Daily actives split into first-ever-seen vs returning users —
     the growth-accounting series. Two user-keyed aggregations, no
     windows."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_NVR_SQL)
 
 
@@ -1499,7 +1499,7 @@ def events_holt_winters_weekly(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate() lambda per type carrying the (l, b, s1..s7) state and
     the per-day output trajectory — identical snapped recurrence, no
     per-day Spark jobs)."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_HW_SPARK_FOLD)
 
 
@@ -1753,7 +1753,7 @@ def events_kleinberg_bursts(spark: SparkSession, sf_dir: str) -> DataFrame:
     one aggregate() lambda over the calendar-bounded daily array —
     identical snapped algebra to the recursive-CTE oracle, without one
     Spark job per recursion step)."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_BURST_SPARK_FOLD)
 
 
@@ -1827,7 +1827,7 @@ def events_periodogram_periods(spark: SparkSession, sf_dir: str) -> DataFrame:
     """DFT power of the mean-centered daily purchase series at candidate
     periods 2..14 days, with each period's spectrum share — data-driven
     seasonality detection."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_PGRAM_SPARK_SQL)
 
 
@@ -1923,10 +1923,8 @@ def events_stl_decomposition(spark: SparkSession, sf_dir: str) -> DataFrame:
     7-day MA trend, day-of-week seasonal means of the detrended
     series, and the remainder (obs = trend + seasonal + remainder on
     the snapped grid)."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
-    spark.sql(_STL_DAILY_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "stl_daily"
-    )
+    register_views(spark, sf_dir, "events")
+    materialize(spark.sql(_STL_DAILY_SQL), "stl_daily")
     return spark.sql(
         "WITH "
         + _stl_sql(
@@ -2021,7 +2019,7 @@ def events_ar2_yule_walker(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the corpus pass is the daily-count aggregation; the lag
     self-join and solve run on the (types x days) relation.
     """
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_AR2_SQL)
 
 
@@ -2105,7 +2103,7 @@ def events_haar_wavelet_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: the corpus pass is the daily aggregation; all wavelet
     algebra runs on the calendar-bounded day-index relation.
     """
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_HAAR_SQL)
 
 
@@ -2194,7 +2192,7 @@ def events_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     ~line 375), the sequential two-sided Page ALARM emitting per-day
     S+/S- rows; the near-identical names are historical — see
     COVERAGE.md's CUSUM note."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_CUSUM_SQL)
 
 
@@ -2284,7 +2282,7 @@ def events_linear_interpolation(spark: SparkSession, sf_dir: str) -> DataFrame:
     over the days missing inside their activity span — prev/next
     neighbor scan plus the exact day-offset ratio, first 50 filled
     rows in (user, day) order."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_INTERP_SPARK)
 
 
@@ -2396,14 +2394,11 @@ def lineitem_croston_demand(spark: SparkSession, sf_dir: str) -> DataFrame:
     The (brand x demand-day) idx relation feeds both the fold input
     and the init row; Spark inlines CTEs, so it is materialized once
     via localCheckpoint (the corpus join runs exactly once)."""
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    load(spark, sf_dir, "part").createOrReplaceTempView("part")
+    register_views(spark, sf_dir, "lineitem", "part")
     head = _croston_daily_idx(
         "datediff(d, lag(d) OVER (PARTITION BY brand ORDER BY d))", ""
     )
-    spark.sql(head + "\nSELECT * FROM idx").localCheckpoint(
-        eager=True
-    ).createOrReplaceTempView("cro_idx")
+    materialize(spark.sql(head + "\nSELECT * FROM idx"), "cro_idx")
     tail = _CROSTON_SPARK.split(",\nxs AS (", 1)[1]
     return spark.sql(
         "WITH xs AS (" + tail.replace("FROM idx", "FROM cro_idx")
@@ -2476,7 +2471,7 @@ def events_mann_kendall_trend(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Mann–Kendall monotone-trend test per event type over the daily
     count series: exact integer S, tie-corrected variance, and the
     continuity-corrected z."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_MK_SQL)
 
 
@@ -2555,7 +2550,7 @@ def events_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wald–Wolfowitz runs test per event type on the above/below-
     median daily count sequence — the randomness member of the
     nonparametric battery (MW-U, KS, CvM, Kuiper, Mann-Kendall)."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_RUNS_SQL)
 
 
@@ -2663,7 +2658,7 @@ def events_page_hinkley_drift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Page-Hinkley upward-drift detector per event type: running-mean
     deviations accumulated in exact micro-units, PH statistic vs a
     3-sigma lambda, one (type, day) row each with the alarm flag."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_ph_sql("date_format(d, 'yyyy-MM-dd')"))
 
 
@@ -2744,8 +2739,7 @@ def lineitem_sbc_demand_classes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Syntetos-Boylan demand-pattern quadrants per brand: ADI and CV²
     from exact integer moments, classed at the standard 1.32/0.49
     cut-offs with the recommended forecasting method."""
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    load(spark, sf_dir, "part").createOrReplaceTempView("part")
+    register_views(spark, sf_dir, "lineitem", "part")
     return spark.sql(_sbc_sql("datediff({b}, {a})"))
 
 
@@ -2818,7 +2812,7 @@ def events_gumbel_block_maxima(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Gumbel EVT fit of the daily transaction-value maxima (method of
     moments) with 7/30/365-day return levels — the tail-risk number
     percentiles of the raw distribution understate."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_GUMBEL_SQL)
 
 
@@ -2920,7 +2914,7 @@ def events_ljung_box_acf(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Ljung-Box portmanteau Q over the daily event-count series for
     max-lags 1..7: textbook full-mean ACF, exact DECIMAL moments, and
     the chi-square(m) 0.95 reject decision on the snapped statistic."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_LJUNG_BOX_SQL)
 
 
@@ -2985,7 +2979,7 @@ def events_pettitt_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pettitt rank-based changepoint on daily revenue: max |U_t| split
     point, exact integer rank sums, and the standard two-sided
     significance approximation."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_PETTITT_SQL)
 
 
@@ -3051,7 +3045,7 @@ def events_var_cvar_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Historical-simulation VaR and CVaR (expected shortfall) of daily
     revenue at the 5/10/25% levels: k-smallest order statistics off a
     bounded lexicographic rank join, exact-cents tail means."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_var_cvar_sql("CAST(({num}) DIV ({den}) AS BIGINT)"))
 
 
@@ -3140,7 +3134,7 @@ def events_slo_burn_rate(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Multiwindow SLO error-budget burn rates (1d/7d/28d trailing)
     with the SRE-workbook page/ticket conjunction alerts, off one
     bounded gap join over the daily rollup."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_slo_sql("datediff(a.d, b.d)"))
 
 
@@ -3233,7 +3227,7 @@ def events_erlang_staffing(spark: SparkSession, sf_dir: str) -> DataFrame:
     utilization, wait probability, queue length, and expected wait
     per pool size (stable Erlang-B fold — no factorials), with a
     1-second wait SLO verdict."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_erlang_sql(
         "CAST(({num}) DIV ({den}) AS BIGINT)",
         ("aggregate(transform(sequence(1, CAST(c AS INT)),"
@@ -3300,7 +3294,7 @@ def events_spectral_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spectral entropy (raw + log-K-normalized) and spectral flatness
     of the daily purchase series over the periodogram's candidate
     periods — the scalar forecastability gate."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(
         _PGRAM_HEAD.replace(
             "{periods}", "SELECT explode(sequence(2, 14)) AS k"
@@ -3402,7 +3396,7 @@ def events_burstiness_memory(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Goh-Barabasi burstiness B and memory M of same-user inter-event
     gaps per type — the (B, M) phase-diagram coordinates of each event
     stream, from exact integer-microsecond moments."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(
         _burst_sql("timestampdiff(MICROSECOND, prev_ts, ts)")
     )
@@ -3485,7 +3479,7 @@ def events_forecast_mase_ladder(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Naive and seasonal-naive one-step baselines per event type with
     MAE, sMAPE, and Hyndman-Koehler MASE — the ladder any forecaster
     must beat; seasonal-naive MASE < 1 proves the weekly structure."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_mase_sql("date_add({d}, CAST({k} AS INT))"))
 
 
@@ -3541,10 +3535,8 @@ def events_seasonal_strength(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hyndman seasonal/trend strength of the STL decomposition
     (wrapped verbatim): the scalar forecastability features beside
     the periodogram's spectral entropy."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
-    spark.sql(_STL_DAILY_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "stl_daily"
-    )
+    register_views(spark, sf_dir, "events")
+    materialize(spark.sql(_STL_DAILY_SQL), "stl_daily")
     spark.sql(
         "WITH "
         + _stl_sql(
@@ -3639,7 +3631,7 @@ def events_jarque_bera(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Jarque-Bera moment test of daily-revenue normality: skewness,
     excess kurtosis, and the chi-square(2) verdict — exact shifted
     integer moments, one corpus pass."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_JB_SQL)
 
 
@@ -3725,7 +3717,7 @@ def events_anderson_darling(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Anderson-Darling normality test of daily revenue with the
     Stephens small-sample factor — tail-weighted ECDF distance via the
     shared A&S normal polynomial, snap-before-ln discipline."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_AD_SQL)
 
 
@@ -3816,7 +3808,7 @@ def events_durbin_watson(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Durbin-Watson test on OLS-detrended daily counts: DW statistic,
     the implied lag-1 residual correlation, and the 1.5 screening flag
     — exact integer OLS moments, snapped residuals."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_dw_sql("datediff(d, d0)"))
 
 
@@ -3925,7 +3917,7 @@ def events_hurst_rescaled_range(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hurst exponent of the daily count series by classic rescaled-
     range analysis over 8/16/32-day blocks — exact within-block integer
     cumulative deviations, log-log slope on the bounded ladder."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_hurst_sql("CAST(({a}) DIV ({b}) AS BIGINT)"))
 
 
@@ -4038,7 +4030,7 @@ def events_pacf_durbin_levinson(spark: SparkSession, sf_dir: str) -> DataFrame:
     """PACF at lags 1-3 by the Durbin-Levinson recursion over the same
     full-mean ACF as Ljung-Box, with the 1.96/sqrt(n) significance
     band — the AR-order diagnostic raw ACF cannot give."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_PACF_SQL)
 
 
@@ -4100,7 +4092,7 @@ def events_poisson_dispersion(spark: SparkSession, sf_dir: str) -> DataFrame:
     ratio, the chi-square D statistic, and the sqrt-2D normal
     approximation verdict — the Poisson-assumption gate for the
     staffing/alarm family."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_DISPERSION_SQL)
 
 
@@ -4205,7 +4197,7 @@ def events_theta_forecast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Theta(0,2) forecast of daily revenue — the average of a linear
     trend extrapolation and snapped-fold SES — backtested on a held-out
     final week with per-horizon MASE."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_theta_sql(
         "transform(array_sort(collect_list(named_struct('i', i,"
         " 'c', cents))), s -> CAST(s.c AS DOUBLE))",

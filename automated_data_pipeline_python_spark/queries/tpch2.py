@@ -32,7 +32,7 @@ from automated_data_pipeline_python_spark.functions.numeric import (
     stable_round,
 )
 from automated_data_pipeline_python_spark.queries.catalog import register
-from automated_data_pipeline_python_spark.tables import load
+from automated_data_pipeline_python_spark.tables import load, register_views
 
 
 def _ts(s: str) -> F.Column:
@@ -76,16 +76,15 @@ def q4_order_priority_check(spark: SparkSession, sf_dir: str) -> DataFrame:
     before the join, and only (orderkey, shipdate) columns of lineitem
     are read (column pruning).
     """
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders_q4")
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_q4")
+    register_views(spark, sf_dir, "orders", "lineitem")
     return spark.sql(
         """
         SELECT o_orderpriority, count(*) AS order_count
-        FROM orders_q4
+        FROM orders
         WHERE o_orderdate >= TIMESTAMP_NTZ '1998-04-01 00:00:00'
           AND o_orderdate <  TIMESTAMP_NTZ '1998-07-01 00:00:00'
           AND EXISTS (
-            SELECT 1 FROM lineitem_q4
+            SELECT 1 FROM lineitem
             WHERE l_orderkey = o_orderkey
               AND l_shipdate > o_orderdate + INTERVAL 60 DAY
           )
@@ -368,18 +367,18 @@ def q11_important_suppliers(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan — the fact table is read twice but shuffled only as one row
     per (partition × supplier).
     """
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_q11")
+    register_views(spark, sf_dir, "lineitem")
     return spark.sql(
         f"""
         SELECT l_suppkey,
                floor(({sql_exact_sum(_REV, 4)}) * 1e2 + 0.5) / 1e2
                    AS supplier_value
-        FROM lineitem_q11
+        FROM lineitem
         GROUP BY l_suppkey
         HAVING ({sql_exact_sum(_REV, 4)}) > (
             SELECT 1.02 * ({sql_exact_sum(_REV, 4)})
                    / count(DISTINCT l_suppkey)
-            FROM lineitem_q11
+            FROM lineitem
         )
         ORDER BY supplier_value DESC, l_suppkey
         """
@@ -524,19 +523,17 @@ def q16_part_supplier_relation(spark: SparkSession, sf_dir: str) -> DataFrame:
     which plans as a shuffleable regular anti join. count(DISTINCT)
     expands to a two-level aggregate — no driver-side distinct.
     """
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_q16")
-    load(spark, sf_dir, "part").createOrReplaceTempView("part_q16")
-    load(spark, sf_dir, "supplier").createOrReplaceTempView("supplier_q16")
+    register_views(spark, sf_dir, "lineitem", "part", "supplier")
     return spark.sql(
         """
         SELECT p_brand, p_type, p_size,
                count(DISTINCT l_suppkey) AS supplier_cnt
-        FROM lineitem_q16
-        JOIN part_q16 ON p_partkey = l_partkey
+        FROM lineitem
+        JOIN part ON p_partkey = l_partkey
         WHERE p_brand <> 'Brand#3'
           AND p_size IN (1, 9, 14, 19, 23, 36, 45, 49)
           AND l_suppkey NOT IN (
-            SELECT s_suppkey FROM supplier_q16 WHERE s_acctbal < 0
+            SELECT s_suppkey FROM supplier WHERE s_acctbal < 0
           )
         GROUP BY p_brand, p_type, p_size
         ORDER BY supplier_cnt DESC, p_brand, p_type, p_size
@@ -569,16 +566,15 @@ def q17_small_quantity_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     l_partkey — the per-part averages are a tiny side that broadcasts;
     no per-row subquery execution.
     """
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_q17")
-    load(spark, sf_dir, "part").createOrReplaceTempView("part_q17")
+    register_views(spark, sf_dir, "lineitem", "part")
     return spark.sql(
         f"""
         SELECT floor(({sql_exact_sum("l_extendedprice", 2)} / 7.0) * 1e2 + 0.5) / 1e2 AS avg_yearly
-        FROM lineitem_q17
-        JOIN part_q17 ON p_partkey = l_partkey
+        FROM lineitem
+        JOIN part ON p_partkey = l_partkey
         WHERE p_brand = 'Brand#23'
           AND l_quantity < (
-            SELECT 0.5 * avg(l_quantity) FROM lineitem_q17 l2
+            SELECT 0.5 * avg(l_quantity) FROM lineitem l2
             WHERE l2.l_partkey = p_partkey
           )
         """
@@ -614,17 +610,15 @@ def q20_excess_shippers(spark: SparkSession, sf_dir: str) -> DataFrame:
     supplier (tiny result, 100 keys) and semi-joins back to supplier as
     a broadcast.
     """
-    load(spark, sf_dir, "supplier").createOrReplaceTempView("supplier_q20")
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_q20")
-    load(spark, sf_dir, "part").createOrReplaceTempView("part_q20")
+    register_views(spark, sf_dir, "supplier", "lineitem", "part")
     return spark.sql(
         """
         SELECT s_suppkey, s_name, floor((s_acctbal) * 1e2 + 0.5) / 1e2 AS acctbal
-        FROM supplier_q20
+        FROM supplier
         WHERE s_suppkey IN (
             SELECT l_suppkey
-            FROM lineitem_q20
-            JOIN part_q20 ON p_partkey = l_partkey
+            FROM lineitem
+            JOIN part ON p_partkey = l_partkey
             WHERE p_name LIKE 'red%'
             GROUP BY l_suppkey
             HAVING sum(l_quantity) > 2000
@@ -682,17 +676,15 @@ def q21_sole_late_shipper(spark: SparkSession, sf_dir: str) -> DataFrame:
     l_orderkey. The DuckDB oracle keeps the textbook EXISTS form;
     equivalence is oracle-checked at every SF.
     """
-    load(spark, sf_dir, "supplier").createOrReplaceTempView("supplier_q21")
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem_q21")
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders_q21")
+    register_views(spark, sf_dir, "supplier", "lineitem", "orders")
     return spark.sql(
         """
         WITH fl AS (
             SELECT l_orderkey, l_suppkey,
                    CASE WHEN l_shipdate > o_orderdate + INTERVAL 90 DAY
                         THEN 1 ELSE 0 END AS late
-            FROM lineitem_q21
-            JOIN orders_q21 ON o_orderkey = l_orderkey
+            FROM lineitem
+            JOIN orders ON o_orderkey = l_orderkey
             WHERE o_orderstatus = 'F'
         ),
         flagged AS (
@@ -705,7 +697,7 @@ def q21_sole_late_shipper(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         SELECT s_name, count(*) AS numwait
         FROM flagged
-        JOIN supplier_q21 ON s_suppkey = l_suppkey
+        JOIN supplier ON s_suppkey = l_suppkey
         WHERE late = 1 AND n_supp > 1 AND n_late_supp = 1
         GROUP BY s_name
         ORDER BY numwait DESC, s_name
@@ -744,20 +736,18 @@ def q22_dormant_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     the correlated count decorrelates into a grouped-count left join on
     custkey.
     """
-    load(spark, sf_dir, "customer").createOrReplaceTempView("customer_q22")
-    load(spark, sf_dir, "nation").createOrReplaceTempView("nation_q22")
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders_q22")
+    register_views(spark, sf_dir, "customer", "nation", "orders")
     return spark.sql(
         f"""
         SELECT n_name,
                count(*) AS numcust,
                floor(({sql_exact_sum("c_acctbal", 2)}) * 1e2 + 0.5) / 1e2 AS totacctbal
-        FROM customer_q22
-        JOIN nation_q22 ON c_nationkey = n_nationkey
+        FROM customer
+        JOIN nation ON c_nationkey = n_nationkey
         WHERE c_acctbal > (
-            SELECT {sql_exact_avg("c_acctbal", 2)} FROM customer_q22 WHERE c_acctbal > 0.0
+            SELECT {sql_exact_avg("c_acctbal", 2)} FROM customer WHERE c_acctbal > 0.0
           )
-          AND (SELECT count(*) FROM orders_q22 WHERE o_custkey = c_custkey) <= 3
+          AND (SELECT count(*) FROM orders WHERE o_custkey = c_custkey) <= 3
         GROUP BY n_name
         ORDER BY n_name
         """

@@ -28,22 +28,11 @@ from automated_data_pipeline_python_spark.functions.text import (
     spark_hash60,
     spark_word_shingles,
 )
-from automated_data_pipeline_python_spark.queries.catalog import register
-from automated_data_pipeline_python_spark.tables import load, load_scaled
+from automated_data_pipeline_python_spark.queries.catalog import materialize, register
+from automated_data_pipeline_python_spark.tables import register_views
 
 _S_TOK = SPARK_TOKENS.format(col="text")
 _D_TOK = DUCK_TOKENS.format(col="text")
-
-
-def _docs_sql(
-    spark: SparkSession, sf_dir: str, sql: str, scaled: bool = False
-) -> DataFrame:
-    # scaled=True only for tokenize/shingle-heavy pipelines where per-row
-    # compute dominates; cheap scan+filter shapes (sampling, mixture)
-    # stay exchange-free (tests/test_plans.py pins that).
-    loader = load_scaled if scaled else load
-    loader(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    return spark.sql(sql)
 
 
 # ---------------------------------------------------------------------------
@@ -132,10 +121,8 @@ def contamination_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast and the only corpus exchange left is the per-doc count
     aggregation (map-side partials).
     """
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    spark.sql(_CONTAM_SETS_SPARK).localCheckpoint(eager=True).createOrReplaceTempView(
-        "ct_sets"
-    )
+    register_views(spark, sf_dir, scaled=("documents",))
+    materialize(spark.sql(_CONTAM_SETS_SPARK), "ct_sets")
     return spark.sql(_CONTAM_SPARK_SQL)
 
 
@@ -144,42 +131,9 @@ def contamination_ngram_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # Boilerplate and degenerate generations repeat tokens/n-grams far more
 # than natural text. Signals: distinct-token ratio, top-token share,
-# duplicate-trigram ratio. Two corpus scans (token stats, trigram
-# stats), both partial-aggregated map-side; no joins bigger than
-# doc-count rows.
-
-_REPEAT_SPARK_SQL = f"""
-WITH toks AS (
-    SELECT doc_id, {_S_TOK} AS w FROM documents
-),
-tok AS (
-    SELECT doc_id, token, count(*) AS cnt
-    FROM toks LATERAL VIEW explode(w) t AS token
-    GROUP BY doc_id, token
-),
-tokagg AS (
-    SELECT doc_id,
-           CAST(sum(cnt) AS BIGINT) AS n_tokens,
-           CAST(count(*) AS BIGINT) AS n_distinct,
-           CAST(max(cnt) AS BIGINT) AS top_cnt
-    FROM tok GROUP BY doc_id
-),
-tris AS (
-    SELECT doc_id,
-           CAST(count(*) AS BIGINT)                AS n_tri,
-           CAST(count(DISTINCT shingle) AS BIGINT) AS n_tri_distinct
-    FROM (SELECT doc_id, shingle
-          FROM toks LATERAL VIEW explode({spark_word_shingles('w', 3)}) t AS shingle)
-    GROUP BY doc_id
-)
-SELECT a.doc_id,
-       a.n_tokens,
-       floor((CAST(a.n_distinct AS DOUBLE) / a.n_tokens) * 1e6 + 0.5) / 1e6 AS distinct_token_ratio,
-       floor((CAST(a.top_cnt AS DOUBLE) / a.n_tokens) * 1e6 + 0.5) / 1e6    AS top_token_share,
-       coalesce(floor((1.0 - CAST(t.n_tri_distinct AS DOUBLE) / t.n_tri) * 1e6 + 0.5) / 1e6,
-                CAST(0 AS DOUBLE))                                          AS dup_trigram_ratio
-FROM tokagg a LEFT JOIN tris t ON a.doc_id = t.doc_id
-"""
+# duplicate-trigram ratio. The oracle counts with two corpus scans
+# (token stats, trigram stats); the Spark side is the map-only rewrite
+# below.
 
 _REPEAT_DUCK_SQL = f"""
 WITH toks AS (
@@ -266,7 +220,8 @@ def text_repetition_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     (full-width locally, no added shuffle at real scale), so the
     sort+fold compute stays embarrassingly parallel at 100 TB.
     """
-    return _docs_sql(spark, sf_dir, _REPEAT_SPARK_MAPONLY, scaled=True)
+    register_views(spark, sf_dir, scaled=("documents",))
+    return spark.sql(_REPEAT_SPARK_MAPONLY)
 
 
 # ---------------------------------------------------------------------------
@@ -313,7 +268,8 @@ def sample_stratified_deterministic(
     is identical across engines, retries, and partitionings — unlike
     rand()/TABLESAMPLE. Map-only: no shuffle.
     """
-    return _docs_sql(spark, sf_dir, _SAMPLE_SPARK_SQL)
+    register_views(spark, sf_dir, "documents")
+    return spark.sql(_SAMPLE_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -377,7 +333,8 @@ def pack_sequences_chunked(spark: SparkSession, sf_dir: str) -> DataFrame:
     a training loader needs. Deterministic (doc_id order), one window
     shuffle on source, emission fully codegen'd.
     """
-    return _docs_sql(spark, sf_dir, _PACK_SPARK_SQL)
+    register_views(spark, sf_dir, "documents")
+    return spark.sql(_PACK_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -435,7 +392,8 @@ FROM per CROSS JOIN tot
 def mixture_domain_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-language token shares + resampling weights toward a uniform
     target mixture (weight = target_share / actual_share)."""
-    return _docs_sql(spark, sf_dir, _MIX_SPARK_SQL)
+    register_views(spark, sf_dir, "documents")
+    return spark.sql(_MIX_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -487,7 +445,8 @@ FROM r WHERE rn <= {_GROUP_K}
 @register("sample_per_group_reservoir", oracle=_GROUP_SAMPLE_DUCK_SQL)
 def sample_per_group_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic k-per-stratum sample (hash-ranked reservoir)."""
-    return _docs_sql(spark, sf_dir, _GROUP_SAMPLE_SPARK_SQL)
+    register_views(spark, sf_dir, "documents")
+    return spark.sql(_GROUP_SAMPLE_SPARK_SQL)
 
 
 # ---------------------------------------------------------------------------
@@ -536,7 +495,8 @@ def corpus_shuffle_shards(spark: SparkSession, sf_dir: str) -> DataFrame:
     sort, no skew (hash keys are uniform). Deterministic across
     engines/runs via the portable SHA-derived key.
     """
-    return _docs_sql(spark, sf_dir, _shuffle_sql(spark_hash60, "STRING"))
+    register_views(spark, sf_dir, "documents")
+    return spark.sql(_shuffle_sql(spark_hash60, "STRING"))
 
 
 # ---------------------------------------------------------------------------
@@ -589,7 +549,8 @@ def sample_token_budget(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact) — no float discipline needed. The deterministic hash walk
     order makes the kept set reproducible across engines and runs.
     """
-    return _docs_sql(spark, sf_dir, _budget_sql(spark_hash60, _BUDGET_SPARK_TOK, "STRING"))
+    register_views(spark, sf_dir, "documents")
+    return spark.sql(_budget_sql(spark_hash60, _BUDGET_SPARK_TOK, "STRING"))
 
 
 # ---------------------------------------------------------------------------
@@ -641,7 +602,8 @@ WHERE rn <= {_WEIGHTED_K}
 )
 def sample_weighted_reservoir(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic weight-proportional k-per-language sample (A-ES)."""
-    return _docs_sql(spark, sf_dir, _weighted_sample_sql(spark_hash28, "STRING"))
+    register_views(spark, sf_dir, "documents")
+    return spark.sql(_weighted_sample_sql(spark_hash28, "STRING"))
 
 
 # ---------------------------------------------------------------------------
@@ -688,9 +650,8 @@ GROUP BY split, lang
 )
 def sample_train_val_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     """80/10/10 deterministic doc-level split report (per split × lang)."""
-    return _docs_sql(
-        spark,
-        sf_dir,
+    register_views(spark, sf_dir, "documents")
+    return spark.sql(
         _split_sql(
             spark_hash28,
             "STRING",
@@ -758,7 +719,7 @@ def mixture_temperature_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sampling weights ∝ token_share^τ for τ ∈ {0.3, 0.7} per
     language — the multilingual temperature-sampling table, with
     snapped-pow + exact-sum normalization."""
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    register_views(spark, sf_dir, scaled=("documents",))
     return spark.sql(_temp_mix_sql(f"size({_S_TOK})"))
 
 
@@ -815,7 +776,7 @@ def mixture_class_balanced_weights(spark: SparkSession, sf_dir: str) -> DataFram
     samples E_n = (1-beta^n)/(1-beta), beta = 0.999 — saturating
     re-balancing that neither over-corrects tiny sources (raw inverse
     frequency) nor ignores them (proportional)."""
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
+    register_views(spark, sf_dir, scaled=("documents",))
     return spark.sql(_cb_weights_sql())
 
 
@@ -876,8 +837,7 @@ def feature_target_encode_oof(spark: SparkSession, sf_dir: str) -> DataFrame:
     price: per (brand, fold) the leakage-free encoding value from
     total-minus-fold exact moment subtraction, next to the naive
     (leaky) all-rows mean."""
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    load(spark, sf_dir, "part").createOrReplaceTempView("part")
+    register_views(spark, sf_dir, "lineitem", "part")
     return spark.sql(_te_sql(spark_hash28, "STRING", "pmod"))
 
 
@@ -969,7 +929,7 @@ def feature_woe_iv(spark: SparkSession, sf_dir: str) -> DataFrame:
     of user activity as a conversion predictor — the keep/drop feature
     screen; quintiles off the distinct-value CDF, zero-cell buckets
     excluded from IV by the standard convention."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_woe_sql("({a}) DIV ({b})"))
 
 
@@ -1052,7 +1012,8 @@ def feature_hashing_collisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     vocabulary: used vs birthday-expected buckets, worst pile-up, and
     the occurrence-weighted collision mass — from the shared sha
     assignment a production featurizer would reuse."""
-    return _docs_sql(spark, sf_dir, _FEAT_HASH_SPARK, scaled=True)
+    register_views(spark, sf_dir, scaled=("documents",))
+    return spark.sql(_FEAT_HASH_SPARK)
 
 
 # ---------------------------------------------------------------------------
@@ -1156,7 +1117,7 @@ def sample_neyman_allocation(spark: SparkSession, sf_dir: str) -> DataFrame:
     event-type strata (n_h proportional to N_h*S_h from exact cents
     moments), integer-split by largest-remainder rounding with
     deterministic tie-breaks, vs the proportional design."""
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_neyman_sql())
 
 
@@ -1242,9 +1203,8 @@ def training_batch_padding_waste(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Windows are (bucket, id-sub-bucket)-partitioned (≤ 4096 rows each);
     output is bucket-count-bounded."""
-    return _docs_sql(
-        spark,
-        sf_dir,
+    register_views(spark, sf_dir, "documents")
+    return spark.sql(
         _padding_waste_sql(
             f"size({_S_TOK})", lambda a, b: f"(({a}) div ({b}))"
         ),

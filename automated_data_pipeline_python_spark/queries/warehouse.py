@@ -15,8 +15,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from automated_data_pipeline_python_spark.operators.scd import scd2_merge
-from automated_data_pipeline_python_spark.queries.catalog import register
-from automated_data_pipeline_python_spark.tables import load
+from automated_data_pipeline_python_spark.queries.catalog import materialize, register
+from automated_data_pipeline_python_spark.tables import load, register_views
 
 _T0 = "1992-01-01 00:00:00"
 _BATCH = "1998-01-01 00:00:00"
@@ -122,7 +122,7 @@ FROM diff WHERE op != 'unchanged'
 @register("cdc_snapshot_diff", oracle=_CDC_SQL)
 def cdc_snapshot_diff(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Insert/update/delete diff between two deterministic snapshots."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    register_views(spark, sf_dir, "orders")
     return spark.sql(_CDC_SQL)
 
 
@@ -199,7 +199,7 @@ _RFM_DUCK_SQL = _rfm_sql(
 @register("rfm_customer_segments", oracle=_RFM_DUCK_SQL)
 def rfm_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RFM quintile segmentation via broadcast quantile cutoffs."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    register_views(spark, sf_dir, "orders")
     return spark.sql(
         _rfm_sql(
             "percentile",
@@ -254,8 +254,7 @@ LIMIT 25
 @register("basket_brand_lift", oracle=_basket_sql())
 def basket_brand_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Top-25 brand pairs by basket lift (co-occurrence vs independence)."""
-    for t in ("lineitem", "part"):
-        load(spark, sf_dir, t).createOrReplaceTempView(t)
+    register_views(spark, sf_dir, "lineitem", "part")
     return spark.sql(_basket_sql())
 
 
@@ -322,7 +321,7 @@ FROM cum c JOIN cohort_sizes s ON c.cohort_m = s.cohort_m
 @register("orders_cohort_ltv", oracle=_LTV_SQL)
 def orders_cohort_ltv(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cumulative revenue per first-order cohort across month offsets."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    register_views(spark, sf_dir, "orders")
     return spark.sql(_LTV_SQL)
 
 
@@ -372,7 +371,7 @@ _INC_ORACLE = _inc_merge_sql("(" + _inc_partial_sql("true") + ") p")
 def warehouse_incremental_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Merge a stored historical aggregate with a delta-batch aggregate;
     must equal the full recompute (the oracle)."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    register_views(spark, sf_dir, "orders")
     old = _inc_partial_sql(f"o_orderdate < TIMESTAMP '{_INC_CUTOFF}'")
     delta = _inc_partial_sql(f"o_orderdate >= TIMESTAMP '{_INC_CUTOFF}'")
     return spark.sql(
@@ -469,7 +468,7 @@ def _pareto_sql(q: str, rev: str, rev_sum: str) -> str:
 )
 def orders_pareto_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucketed Lorenz curve of customer revenue + trapezoid Gini."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    register_views(spark, sf_dir, "orders")
     return spark.sql(
         _pareto_sql(
             "percentile",
@@ -566,7 +565,7 @@ ORDER BY gap_days
 def orders_interpurchase_survival(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Kaplan–Meier survival of customer inter-purchase gaps, with the
     last-order-to-horizon tail treated as censored."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    register_views(spark, sf_dir, "orders")
     return spark.sql(_km_sql("datediff({b}, {a})"))
 
 
@@ -657,8 +656,7 @@ def _hhi_sql() -> str:
 def orders_hhi_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-segment HHI of customer revenue shares + effective-competitor
     count."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
-    load(spark, sf_dir, "customer").createOrReplaceTempView("customer")
+    register_views(spark, sf_dir, "orders", "customer")
     return spark.sql(_hhi_sql())
 
 
@@ -735,7 +733,7 @@ def _abc_sql() -> str:
 )
 def lineitem_abc_classification(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A/B/C part classes by cumulative revenue share (bucket-edged)."""
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
+    register_views(spark, sf_dir, "lineitem")
     return spark.sql(_abc_sql().replace("{q}", "percentile"))
 
 
@@ -794,7 +792,7 @@ def warehouse_compaction_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
     One corpus-sized aggregation; the planning window runs over the
     per-day relation only (365 rows/year at any SF).
     """
-    load(spark, sf_dir, "events").createOrReplaceTempView("events")
+    register_views(spark, sf_dir, "events")
     return spark.sql(_COMPACTION_SQL)
 
 
@@ -859,7 +857,7 @@ def warehouse_zorder_clustering(spark: SparkSession, sf_dir: str) -> DataFrame:
     Map-only exact bit arithmetic; the zval projection pipelines into
     the clustered write's own exchange.
     """
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    register_views(spark, sf_dir, "orders")
     return spark.sql(
         _zorder_sql("datediff(o_orderdate, DATE '1992-01-01')", True)
     )
@@ -906,7 +904,7 @@ def warehouse_zone_map_skipping(spark: SparkSession, sf_dir: str) -> DataFrame:
     One aggregation over orders; the skip analysis windows over the
     tiny per-month relation.
     """
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    register_views(spark, sf_dir, "orders")
     return spark.sql(_ZONE_MAP_SQL)
 
 
@@ -969,7 +967,7 @@ def part_skyline_pareto(spark: SparkSession, sf_dir: str) -> DataFrame:
     partition where the naive dominance join is n^2; no doubles are
     computed (min/compare select stored values exactly).
     """
-    load(spark, sf_dir, "part").createOrReplaceTempView("part")
+    register_views(spark, sf_dir, "part")
     return spark.sql(_SKYLINE_SPARK_SQL)
 
 
@@ -1048,7 +1046,7 @@ def warehouse_deletion_vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale: DV rows are O(deletes/63) and join on co-partitioned
     (month, word); no file rewrite, no row-to-row self-join.
     """
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    register_views(spark, sf_dir, "orders")
     return spark.sql(_DV_SPARK_SQL)
 
 
@@ -1112,8 +1110,7 @@ def orders_association_rules(spark: SparkSession, sf_dir: str) -> DataFrame:
     min-support HAVING prunes before the rule fan-out; brand margins
     (nb) are vocabulary-sized joins.
     """
-    for t in ("lineitem", "part"):
-        load(spark, sf_dir, t).createOrReplaceTempView(t)
+    register_views(spark, sf_dir, "lineitem", "part")
     return spark.sql(_ASSOC_RULES_SQL)
 
 
@@ -1157,8 +1154,7 @@ def orders_ship_latency_percentiles(
 ) -> DataFrame:
     """Order-to-ship latency (integer days) min/p50/p90/max per order
     priority — the fulfillment SLA distribution."""
-    for t in ("orders", "lineitem"):
-        load(spark, sf_dir, t).createOrReplaceTempView(t)
+    register_views(spark, sf_dir, "orders", "lineitem")
     return spark.sql(
         _ship_latency_sql(
             "percentile",
@@ -1226,10 +1222,8 @@ def lineitem_price_index_laspeyres(
     """Monthly Laspeyres price index vs the first shipping month:
     base-quantity-weighted unit prices over the parts common to both
     months, with order-independent exact sums for the Σ p·q terms."""
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    spark.sql(_LASP_MP_SQL).localCheckpoint(eager=True).createOrReplaceTempView(
-        "lasp_mp"
-    )
+    register_views(spark, sf_dir, "lineitem")
+    materialize(spark.sql(_LASP_MP_SQL), "lasp_mp")
     return spark.sql("WITH " + _LASP_TAIL.format(mp="lasp_mp").lstrip())
 
 
@@ -1290,7 +1284,7 @@ ORDER BY o_orderstatus, o_orderpriority
 )
 def warehouse_merge_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MERGE (insert/update/delete) applied copy-on-write, rolled up."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    register_views(spark, sf_dir, "orders")
     return spark.sql(_MERGE_SQL.format(total=sql_exact_sum("tp", 2)))
 
 
@@ -1343,7 +1337,7 @@ def orders_nelson_aalen_hazard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Nelson–Aalen cumulative hazard of customer inter-purchase gaps
     (censored tails handled as in the KM twin) with the
     Fleming–Harrington survival exp(-H)."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    register_views(spark, sf_dir, "orders")
     return spark.sql(_na_sql("datediff({b}, {a})"))
 
 
@@ -1399,7 +1393,7 @@ def orders_theil_atkinson_inequality(
 ) -> DataFrame:
     """Theil T and Atkinson(1) inequality of per-customer revenue — the
     decomposable complements to the Lorenz/Gini concentration query."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    register_views(spark, sf_dir, "orders")
     return spark.sql(_THEIL_SQL)
 
 
@@ -1491,7 +1485,7 @@ def orders_rfm_migration_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spend-tercile migration matrix between the first and second half
     of the order history (0 = inactive in that half): transition counts
     and shares."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    register_views(spark, sf_dir, "orders")
     return spark.sql(
         _rfm_mig_sql(
             "percentile", lambda a, b: f"CAST(({a}) DIV ({b}) AS BIGINT)"
@@ -1618,8 +1612,7 @@ def orders_logrank_survival_test(spark: SparkSession, sf_dir: str) -> DataFrame:
     histogram group-by; all O-E accumulation runs on the bounded
     duration-grid relation with grp-partitioned cumulative windows.
     """
-    for t in ("orders", "customer"):
-        load(spark, sf_dir, t).createOrReplaceTempView(t)
+    register_views(spark, sf_dir, "orders", "customer")
     return spark.sql(_logrank_sql("datediff({b}, {a})"))
 
 
@@ -1687,8 +1680,7 @@ def lineitem_newsvendor_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-brand newsvendor stocking level at the 0.8 critical
     fractile, read off the distinct-demand CDF with integer
     cross-compares, next to the (under-stocking) mean."""
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    load(spark, sf_dir, "part").createOrReplaceTempView("part")
+    register_views(spark, sf_dir, "lineitem", "part")
     return spark.sql(_NEWSVENDOR_SQL)
 
 
@@ -1748,8 +1740,7 @@ def lineitem_eoq_reorder_point(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-brand EOQ, 95 %-service reorder point (7-day lead time), and
     order cadence from exact daily-demand moments — the steady-state
     replenishment pair next to the newsvendor fractile."""
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    load(spark, sf_dir, "part").createOrReplaceTempView("part")
+    register_views(spark, sf_dir, "lineitem", "part")
     return spark.sql(_EOQ_SQL)
 
 
@@ -1836,8 +1827,7 @@ def lineitem_abc_xyz_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ABC (revenue) x XYZ (demand-CV) segmentation per brand with
     exact integer class boundaries — the replenishment-policy routing
     matrix on top of the newsvendor/EOQ pair."""
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    load(spark, sf_dir, "part").createOrReplaceTempView("part")
+    register_views(spark, sf_dir, "lineitem", "part")
     return spark.sql(_ABC_XYZ_SQL)
 
 
@@ -1943,7 +1933,7 @@ def orders_weibull_interpurchase(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Weibull shape/scale of inter-purchase gaps by median-rank
     regression (Bernard's approximation, tied blocks at their mean
     order number), with fit R-squared and the implied median gap."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    register_views(spark, sf_dir, "orders")
     return spark.sql(_weibull_sql("datediff({b}, {a})"))
 
 
@@ -2073,7 +2063,7 @@ def orders_bass_diffusion(spark: SparkSession, sf_dir: str) -> DataFrame:
     discrete-form two-regressor OLS (Cramer), market size M from the
     implied quadratic, innovation/imitation rates, and the implied
     adoption peak."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    register_views(spark, sf_dir, "orders")
     return spark.sql(_bass_sql())
 
 
@@ -2144,8 +2134,7 @@ def lineitem_price_elasticity(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-brand price elasticity of demand: log-log OLS slope from
     snapped-term exact moments, with fit R-squared and the
     elastic/inelastic classification on the snapped estimate."""
-    load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-    load(spark, sf_dir, "part").createOrReplaceTempView("part")
+    register_views(spark, sf_dir, "lineitem", "part")
     return spark.sql(_elasticity_sql())
 
 
@@ -2206,7 +2195,7 @@ def orders_repeat_purchase_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Repeat-purchase depth curve: customers with >= k orders
     (k = 1..10), share of the base, and the conditional continuation
     rate — the retention ladder under every LTV assumption."""
-    load(spark, sf_dir, "orders").createOrReplaceTempView("orders")
+    register_views(spark, sf_dir, "orders")
     return spark.sql(_repeat_curve_sql(
         "SELECT CAST(kk AS BIGINT) AS k"
         " FROM (SELECT explode(sequence(1, 10)) AS kk)"

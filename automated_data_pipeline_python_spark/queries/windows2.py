@@ -16,8 +16,8 @@ from automated_data_pipeline_python_spark.functions.text import (
     DUCK_TOKENS,
     SPARK_TOKENS,
 )
-from automated_data_pipeline_python_spark.queries.catalog import register
-from automated_data_pipeline_python_spark.tables import load, load_scaled
+from automated_data_pipeline_python_spark.queries.catalog import materialize, register
+from automated_data_pipeline_python_spark.tables import load, register_views
 
 _S_TOK = SPARK_TOKENS.format(col="text")
 _D_TOK = DUCK_TOKENS.format(col="text")
@@ -142,15 +142,15 @@ def text_tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     read it, and Spark would otherwise inline the tokenize+explode+agg
     pipeline into each reference (2× the corpus work).
     """
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView("documents")
-    spark.sql(
+    register_views(spark, sf_dir, scaled=("documents",))
+    materialize(spark.sql(
         f"""
         SELECT doc_id, token, count(*) AS tf
         FROM (SELECT doc_id, {_S_TOK} AS w FROM documents)
         LATERAL VIEW explode(w) t AS token
         GROUP BY doc_id, token
         """
-    ).localCheckpoint(eager=True).createOrReplaceTempView("tfidf_tok")
+    ), "tfidf_tok")
     return spark.sql(
         """
         WITH tok AS (SELECT * FROM tfidf_tok),

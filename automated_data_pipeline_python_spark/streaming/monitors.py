@@ -417,7 +417,7 @@ def slo_burn_report(daily_counts: DataFrame) -> DataFrame:
     # The burn tail SELF-JOINS {daily}; a memory-sink view carries the
     # same attribute ids on both sides and Spark's self-join dedup
     # does not fire through MemoryPlan — materialize the (bounded,
-    # retention-days-sized) state first, the _materialize_view
+    # retention-days-sized) state first, the catalog.materialize
     # discipline.
     daily_counts.localCheckpoint(eager=True).createOrReplaceTempView(
         "slo_mon_daily"

@@ -158,11 +158,24 @@ def load_scaled(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     return df
 
 
-def load_all(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
-    return {name: load(spark, sf_dir, name) for name in TABLE_NAMES}
+def register_views(
+    spark: SparkSession,
+    sf_dir: str,
+    *names: str,
+    scaled: tuple[str, ...] = (),
+) -> None:
+    """Register tables as temp views under their own names for
+    spark.sql(...) queries.
 
-
-def register_views(spark: SparkSession, sf_dir: str) -> None:
-    """Register every table as a temp view for spark.sql(...) queries."""
-    for name in TABLE_NAMES:
+    ``names`` are read with :func:`load`, ``scaled`` with
+    :func:`load_scaled` — the fan-out stays an explicit per-table choice:
+    tokenize/hash/vector-heavy pipelines only, cheap scan+filter shapes
+    stay exchange-free (tests/test_plans.py pins that). With neither,
+    every table is registered with :func:`load`.
+    """
+    if not names and not scaled:
+        names = TABLE_NAMES
+    for name in names:
         load(spark, sf_dir, name).createOrReplaceTempView(name)
+    for name in scaled:
+        load_scaled(spark, sf_dir, name).createOrReplaceTempView(name)

@@ -77,7 +77,7 @@ def closeness_decomposition(spark, sf_dir: str) -> dict[str, float]:
         _CLOSE_TAIL,
         _EDGES_SQL,
     )
-    from automated_data_pipeline_python_spark.tables import load
+    from automated_data_pipeline_python_spark.tables import register_views
 
     if not all(
         os.path.exists(os.path.join(sf_dir, f"{t}.parquet"))
@@ -86,8 +86,7 @@ def closeness_decomposition(spark, sf_dir: str) -> dict[str, float]:
         return {}
     best_e, best_t, n_edges = float("inf"), float("inf"), 0
     for _ in range(REPEATS):
-        load(spark, sf_dir, "lineitem").createOrReplaceTempView("lineitem")
-        load(spark, sf_dir, "part").createOrReplaceTempView("part")
+        register_views(spark, sf_dir, "lineitem", "part")
         t0 = time.perf_counter()
         ck = spark.sql(_EDGES_SQL).localCheckpoint(eager=True)
         t1 = time.perf_counter()
@@ -124,14 +123,13 @@ def lsh_candidate_counts(spark, sf_dir: str) -> dict[str, float]:
     fixture), and real corpora grow such clusters with scale even
     though this derived corpus family does not."""
     import automated_data_pipeline_python_spark.queries.dedup as D
-    from automated_data_pipeline_python_spark.tables import load_scaled
+    from automated_data_pipeline_python_spark.queries.catalog import materialize
+    from automated_data_pipeline_python_spark.tables import register_views
 
     if not os.path.exists(os.path.join(sf_dir, "documents.parquet")):
         return {}
-    load_scaled(spark, sf_dir, "documents").createOrReplaceTempView(
-        "documents"
-    )
-    D._materialize_view(spark.sql(D._MINHASH_SETS_SPARK), "mh_sets")
+    register_views(spark, sf_dir, scaled=("documents",))
+    materialize(spark.sql(D._MINHASH_SETS_SPARK), "mh_sets")
 
     def cand_count(tail: str) -> int:
         sql = tail[: tail.index("-- verify")].rstrip().rstrip(",")

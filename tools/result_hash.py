@@ -1,8 +1,10 @@
 """Hash a query's full result set, canonicalized like verify_driver.
 
 Usage: python tools/result_hash.py <sf_dir> <query> [query ...]
+       python tools/result_hash.py <sf_dir> --all
 
-Prints one line per query: ``<name> <rowcount> <sha256[:16]>``. Used to
+Prints one line per query: ``<name> <rowcount> <sha256[:16]>``;
+``--all`` hashes every registered query in registry order. Used to
 prove a restructure byte-preserves the declared result (run before and
 after; hashes must match). Canonicalization matches verify_driver.py
 (%.17g floats), sorted columns + sorted rows.
@@ -32,7 +34,10 @@ def main() -> None:
     spark.sparkContext.setLogLevel("ERROR")
     from automated_data_pipeline_python_spark.queries import QUERIES
 
+    if names == ["--all"]:
+        names = list(QUERIES)
     for name in names:
+        # The registered fn drops the temp views its build created.
         df = QUERIES[name].fn(spark, sf)
         cols = sorted(df.columns)
         rows = sorted(
@@ -42,9 +47,6 @@ def main() -> None:
             ("|".join(cols) + "\n" + "\n".join(rows)).encode()
         ).hexdigest()[:16]
         print(f"{name} {len(rows)} {digest}", flush=True)
-        for t in spark.catalog.listTables():
-            if t.isTemporary:
-                spark.catalog.dropTempView(t.name)
     spark.stop()
 
 
