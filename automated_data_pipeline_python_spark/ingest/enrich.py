@@ -36,6 +36,37 @@ def enrichment_join(nfts: DataFrame, metadata: DataFrame, url_col: str = "metada
     return nfts.join(metadata, on=url_col, how="left")
 
 
+def _url_traits_schema(url_col: str) -> T.StructType:
+    """The ``(url, traits)`` table both fetch paths return."""
+    from automated_data_pipeline_python_spark.schemas import TRAIT_TYPE
+
+    return T.StructType(
+        [
+            T.StructField(url_col, T.StringType()),
+            T.StructField("traits", T.ArrayType(TRAIT_TYPE)),
+        ]
+    )
+
+
+async def _fetch_traits(fetcher, urls: list[str], payload_field: str) -> list[tuple]:
+    """``(url, payload[payload_field])`` per URL through ``fetcher``.
+
+    Error-isolating: a URL whose fetch fails (after the fetcher's own
+    retries) yields ``(url, None)`` and counts in ``fetcher.stats.errors``
+    instead of failing the whole batch.
+    """
+
+    async def one(u: str) -> tuple:
+        try:
+            payload = await fetcher.get(u)
+            return (u, payload.get(payload_field))
+        except Exception:
+            fetcher.stats.errors += 1
+            return (u, None)
+
+    return list(await asyncio.gather(*(one(u) for u in urls)))
+
+
 def fetch_distinct_urls(
     df: DataFrame,
     fetch: Callable[[str], Awaitable[dict]],
@@ -50,33 +81,14 @@ def fetch_distinct_urls(
     back via :func:`enrichment_join`.
     """
     from automated_data_pipeline_python_spark.ingest.fetcher import RetryingFetcher
-    from automated_data_pipeline_python_spark.schemas import TRAIT_TYPE
 
     urls = [
         r[0]
         for r in df.select(url_col).where(F.col(url_col).isNotNull() & (F.col(url_col) != "")).distinct().collect()
     ]
     fetcher = RetryingFetcher(fetch, max_concurrency=max_concurrency)
-
-    async def run() -> list[tuple]:
-        async def one(u: str) -> tuple:
-            try:
-                payload = await fetcher.get(u)
-                return (u, payload.get(payload_field))
-            except Exception:
-                fetcher.stats.errors += 1
-                return (u, None)
-
-        return list(await asyncio.gather(*(one(u) for u in urls)))
-
-    rows = asyncio.run(run())
-    schema = T.StructType(
-        [
-            T.StructField(url_col, T.StringType()),
-            T.StructField("traits", T.ArrayType(TRAIT_TYPE)),
-        ]
-    )
-    return df.sparkSession.createDataFrame(rows, schema=schema)
+    rows = asyncio.run(_fetch_traits(fetcher, urls, payload_field))
+    return df.sparkSession.createDataFrame(rows, schema=_url_traits_schema(url_col))
 
 
 def fetch_distinct_urls_auto(
@@ -167,19 +179,11 @@ def fetch_distinct_urls_distributed(
     (url, traits) rows — batch-columnar, never per-row Python in the
     surrounding plan.
     """
-    from automated_data_pipeline_python_spark.schemas import TRAIT_TYPE
-
     urls = df.select(url_col).where(
         F.col(url_col).isNotNull() & (F.col(url_col) != "")
     ).distinct()
     if partitions is not None:
         urls = urls.repartition(partitions)
-    schema = T.StructType(
-        [
-            T.StructField(url_col, T.StringType()),
-            T.StructField("traits", T.ArrayType(TRAIT_TYPE)),
-        ]
-    )
 
     def fetch_partition(batches):
         import pandas as pd
@@ -190,21 +194,11 @@ def fetch_distinct_urls_distributed(
 
         transport = transport_factory()
         fetcher = RetryingFetcher(transport, max_concurrency=max_concurrency)
-
-        async def fetch_all(urls_batch: list[str]) -> list[tuple]:
-            async def one(u: str) -> tuple:
-                try:
-                    payload = await fetcher.get(u)
-                    return (u, payload.get(payload_field))
-                except Exception:
-                    fetcher.stats.errors += 1
-                    return (u, None)
-
-            return list(await asyncio.gather(*(one(u) for u in urls_batch)))
-
         try:
             for pdf in batches:
-                rows = asyncio.run(fetch_all(pdf[url_col].tolist()))
+                rows = asyncio.run(
+                    _fetch_traits(fetcher, pdf[url_col].tolist(), payload_field)
+                )
                 yield pd.DataFrame(
                     {
                         url_col: [r[0] for r in rows],
@@ -216,4 +210,4 @@ def fetch_distinct_urls_distributed(
             if callable(close):
                 close()
 
-    return urls.mapInPandas(fetch_partition, schema=schema)
+    return urls.mapInPandas(fetch_partition, schema=_url_traits_schema(url_col))

@@ -12,18 +12,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 
-
-def to_parquet(
-    df: DataFrame,
-    path: str,
-    mode: str = "overwrite",
-    partition_by: list[str] | None = None,
-) -> None:
-    """Write a DataFrame as a parquet dataset (directory of part files)."""
-    writer = df.write.mode(mode)
-    if partition_by:
-        writer = writer.partitionBy(*partition_by)
-    writer.parquet(path)
+from automated_data_pipeline_python_spark.sources.files import write_parquet
 
 
 def write_tables(tables: dict[str, DataFrame], directory: str, prefix: str = "") -> None:
@@ -33,4 +22,4 @@ def write_tables(tables: dict[str, DataFrame], directory: str, prefix: str = "")
     directory-dataset layout instead of single files.
     """
     for name, df in tables.items():
-        to_parquet(df, f"{directory.rstrip('/')}/{prefix}{name}")
+        write_parquet(df, f"{directory.rstrip('/')}/{prefix}{name}")

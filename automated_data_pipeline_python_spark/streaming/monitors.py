@@ -409,6 +409,7 @@ def slo_burn_report(daily_counts: DataFrame) -> DataFrame:
     per-day counts — the catalog query's {daily}-parameterized tail
     (queries/timeseries.py _slo_tail) applied verbatim, so the
     streamed report equals events_slo_burn_rate row-for-row."""
+    from automated_data_pipeline_python_spark.queries.catalog import materialize
     from automated_data_pipeline_python_spark.queries.timeseries import (
         _slo_tail,
     )
@@ -417,11 +418,8 @@ def slo_burn_report(daily_counts: DataFrame) -> DataFrame:
     # The burn tail SELF-JOINS {daily}; a memory-sink view carries the
     # same attribute ids on both sides and Spark's self-join dedup
     # does not fire through MemoryPlan — materialize the (bounded,
-    # retention-days-sized) state first, the catalog.materialize
-    # discipline.
-    daily_counts.localCheckpoint(eager=True).createOrReplaceTempView(
-        "slo_mon_daily"
-    )
+    # retention-days-sized) state first.
+    materialize(daily_counts, "slo_mon_daily")
     return spark.sql(
         "WITH "
         + _slo_tail("datediff(a.d, b.d)").format(daily="slo_mon_daily")

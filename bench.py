@@ -1,19 +1,35 @@
-"""Benchmark harness: headline queries at $SPARK_GRAFT_SF_DIR.
+"""Benchmark harness: one timing method, three modes.
 
-Prints ONE JSON line:
-``{"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}``
+``python bench.py``
+    Headline queries at ``$SPARK_GRAFT_SF_DIR``. Prints ONE JSON line:
+    ``{"metric": "...", "value": N, "unit": "sec", "queries": {...}, "sf": ...}``
+
+``python bench.py --point SF_DIR QUERY...``
+    The named queries in this process (hence one fresh JVM). Prints one
+    JSON line: ``rev``, ``sf_dir``, ``cpus``, ``repeats``, per-cycle
+    ``walls`` and their ``min``, each keyed by query.
+
+``python bench.py --ab TREE SF_DIR QUERY...``
+    For each query, ``TREE/bench.py --point`` (before) and this tree's
+    ``--point`` (after) as adjacent subprocesses, alternating which side
+    goes first. Prints one JSON line per pair with the before/after ratio.
 
 Each query executes its full plan via a noop sink (no driver collect
-bottleneck, no disk write in the measurement).
+bottleneck, no disk write in the measurement). Repeats come from
+``$SPARK_GRAFT_BENCH_REPEATS`` (default 5), cores from
+``$SPARK_GRAFT_CPUS``.
 """
 
 from __future__ import annotations
 
+import hashlib
 import json
 import os
 import re
+import subprocess
 import sys
 import time
+from collections.abc import Callable
 
 REPO_ROOT = os.path.dirname(os.path.abspath(__file__))
 sys.path.insert(0, REPO_ROOT)
@@ -59,16 +75,89 @@ HEADLINE = [
 # correctness in the driver gate.
 
 
-def main() -> None:
-    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4)))
-    m = re.search(r"sf([0-9.]+)", sf_dir)
-    sf = float(m.group(1)) if m else -1.0
+def time_queries(
+    run: Callable[[str], None],
+    names: list[str],
+    repeats: int,
+    gc: Callable[[], None],
+) -> dict[str, list[float]]:
+    """Wall seconds of ``run(name)`` for each name, one entry per cycle.
 
+    The method (the r10 root-cause study, commit 1def362, proved the old
+    fixed-order back-to-back harness manufactures phantom per-query
+    deltas):
+      1. One UNTIMED warm-up cycle: the cold cycle's JIT/codegen/first
+         -scan penalty otherwise lands on the queries in list order and
+         survives min-of-N (the r9 "LSH cap overhead" was exactly this
+         first-slot penalty).
+      2. Round-robin cycles with a deterministic md5-keyed
+         RE-PERMUTATION per cycle: a fixed order gives each query the
+         same predecessor every cycle, and a predecessor with heavy
+         async cleanup (checkpoint blocks draining via the
+         ContextCleaner) taxes the same victim in every repeat —
+         measured ~0.5-1.0 s predecessor tax that min-of-N cannot shed.
+         The keys depend only on the cycle index, so cycles 0-2 of any
+         run are the cycles a min-of-3 run executes.
+      3. ``gc()`` after every query, outside the timed region: a driver
+         GC frees unpinned localCheckpoint blocks so one query's cleanup
+         backlog does not bill the next. (The ``register`` wrapper drops
+         the temp views each build creates.)
+    """
+    for name in names:
+        run(name)
+        gc()
+    walls: dict[str, list[float]] = {name: [] for name in names}
+    for r in range(repeats):
+        order = sorted(
+            names, key=lambda n: hashlib.md5(f"{r}:{n}".encode()).hexdigest()
+        )
+        for name in order:
+            t0 = time.perf_counter()
+            run(name)
+            walls[name].append(time.perf_counter() - t0)
+            gc()
+    return walls
+
+
+def _cpus() -> int:
+    return int(os.environ.get("SPARK_GRAFT_CPUS", str(os.cpu_count() or 4)))
+
+
+def _repeats() -> int:
+    # Default 5 since r12 (VERDICT r11 task 4: the min-of-3 estimator's
+    # noise floor surfaced in the scaling artifact).
+    return max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "5")))
+
+
+def _session(cpus: int):
     spark = get_spark(
         app_name="bench", master=f"local[{cpus}]", shuffle_partitions=max(cpus, 8)
     )
     spark.sparkContext.setLogLevel("ERROR")
+    return spark
+
+
+def _noop(df) -> None:
+    df.write.format("noop").mode("overwrite").save()
+
+
+def _time_catalog(spark, sf_dir: str, names: list[str], repeats: int):
+    from automated_data_pipeline_python_spark.queries import QUERIES
+
+    return time_queries(
+        lambda name: _noop(QUERIES[name].fn(spark, sf_dir)),
+        names,
+        repeats,
+        spark.sparkContext._jvm.System.gc,
+    )
+
+
+def main() -> None:
+    sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
+    m = re.search(r"sf([0-9.]+)", sf_dir)
+    sf = float(m.group(1)) if m else -1.0
+
+    spark = _session(_cpus())
 
     from automated_data_pipeline_python_spark.queries import QUERIES
 
@@ -77,76 +166,17 @@ def main() -> None:
     # parquet footer reads, or Arrow worker spawn (TPC-style warm runs).
     from automated_data_pipeline_python_spark.tables import load
 
-    warm = spark.range(1_000_000).selectExpr("id", "id % 7 AS k")
-    warm.groupBy("k").count().write.format("noop").mode("overwrite").save()
+    _noop(spark.range(1_000_000).selectExpr("id", "id % 7 AS k").groupBy("k").count())
     for t in [
         "lineitem", "orders", "customer", "supplier", "part", "nation",
         "region", "events", "documents", "embeddings",
     ]:
-        load(spark, sf_dir, t).write.format("noop").mode("overwrite").save()
-    spark.range(64).repartition(8).mapInPandas(
-        lambda it: it, "id long"
-    ).write.format("noop").mode("overwrite").save()
+        _noop(load(spark, sf_dir, t))
+    _noop(spark.range(64).repartition(8).mapInPandas(lambda it: it, "id long"))
 
-    # Measurement discipline ported from tools/bench_dedup_scaling.py
-    # (VERDICT r10 task 3 — the r10 root-cause study, commit 1def362,
-    # proved the old fixed-order back-to-back harness manufactures
-    # phantom per-query deltas):
-    #   1. One UNTIMED warm-up cycle: the cold cycle's JIT/codegen/first
-    #      -scan penalty otherwise lands on the queries in list order
-    #      and survives min-of-N (the r9 "LSH cap overhead" was exactly
-    #      this first-slot penalty).
-    #   2. Round-robin cycles with a deterministic hash-keyed
-    #      RE-PERMUTATION per repeat: a fixed order gives each query the
-    #      same predecessor every cycle, and a predecessor with heavy
-    #      async cleanup (checkpoint blocks draining via the
-    #      ContextCleaner) taxes the same victim in every repeat —
-    #      measured ~0.5-1.0 s predecessor tax that min-of-N cannot
-    #      shed. Three different predecessor patterns per query can.
-    #   3. Driver GC between queries (outside the timed region): frees
-    #      unpinned localCheckpoint blocks so one query's cleanup
-    #      backlog does not bill the next.
-    # Each per-query number is the minimum over `repeats` warm cycles.
-    # Default 5 since r12 (VERDICT r11 task 4: the min-of-3 estimator's
-    # noise floor surfaced in the scaling artifact; 28 queries x ~1 s x
-    # 2 extra cycles is cheap). The permutation keys depend only on the
-    # cycle index, so cycles 0-2 of a min-of-5 run are IDENTICAL to a
-    # min-of-3 run — `queries_min_of_3` below preserves the
-    # level-comparable view against BENCH_r11.
-    repeats = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPEATS", "5")))
+    repeats = _repeats()
     runnable = [n for n in HEADLINE if n in QUERIES]
-
-    def drop_views_and_gc() -> None:
-        # Temp views registered by a query keep their plans — and any
-        # localCheckpoint blocks inside them — reachable for the rest
-        # of the run; heap pressure then inflates LATER queries'
-        # numbers (measured: multi-second swings on the dedup family).
-        for t in spark.catalog.listTables():
-            if t.isTemporary:
-                spark.catalog.dropTempView(t.name)
-        spark.sparkContext._jvm.System.gc()
-
-    import hashlib
-
-    for name in runnable:  # untimed warm-up cycle
-        QUERIES[name].fn(spark, sf_dir).write.format("noop").mode(
-            "overwrite"
-        ).save()
-        drop_views_and_gc()
-
-    cycle_times: dict[str, list[float]] = {name: [] for name in runnable}
-    for r in range(repeats):
-        order = sorted(
-            runnable,
-            key=lambda n: hashlib.md5(f"{r}:{n}".encode()).hexdigest(),
-        )
-        for name in order:
-            t0 = time.perf_counter()
-            QUERIES[name].fn(spark, sf_dir).write.format("noop").mode(
-                "overwrite"
-            ).save()
-            cycle_times[name].append(time.perf_counter() - t0)
-            drop_views_and_gc()
+    cycle_times = _time_catalog(spark, sf_dir, runnable, repeats)
     timings = {name: round(min(ts), 3) for name, ts in cycle_times.items()}
     # Level-comparable view vs BENCH_r11 (min-of-3): min over the first
     # three cycles only — identical permutations, identical warm-up.
@@ -164,9 +194,7 @@ def main() -> None:
                 "queries": timings,
                 "sf": sf,
                 # Self-describing methodology (VERDICT r9 task 5 /
-                # r10 task 3): min over `repeats` re-permuted warm
-                # round-robin cycles after one untimed warm-up cycle,
-                # driver GC between queries.
+                # r10 task 3): see time_queries.
                 "method": f"min-of-{repeats}-repermuted-warm",
                 "repeats": repeats,
                 # min over cycles 0-2 only (same permutations a
@@ -197,5 +225,99 @@ def main() -> None:
     spark.stop()
 
 
+def _rev() -> str | None:
+    proc = subprocess.run(
+        ["git", "-C", REPO_ROOT, "describe", "--always", "--dirty"],
+        capture_output=True,
+        text=True,
+    )
+    return proc.stdout.strip() or None
+
+
+def point(sf_dir: str, names: list[str]) -> None:
+    """``--point``: time ``names`` in this process's (fresh) JVM.
+
+    One process per point because a same-process get_spark() after
+    spark.stop() reuses the py4j gateway JVM, so JIT/heap state would
+    leak across points. Levels also depend on the co-resident query set
+    (r12: one 100x query moved 16.6 -> 39.0 s when its set grew 3 -> 5),
+    so rows compared across rounds are one query per point.
+    """
+    from automated_data_pipeline_python_spark.queries import QUERIES
+
+    unknown = [n for n in names if n not in QUERIES]
+    if unknown:
+        sys.exit(f"unknown queries: {' '.join(unknown)}")
+    # 100x points need the heap; an explicit setting still wins.
+    os.environ.setdefault("SPARK_DRIVER_MEMORY", "48g")
+    cpus, repeats = _cpus(), _repeats()
+    spark = _session(cpus)
+    walls = _time_catalog(spark, sf_dir, names, repeats)
+    spark.stop()
+    print(
+        json.dumps(
+            {
+                "rev": _rev(),
+                "sf_dir": sf_dir,
+                "cpus": cpus,
+                "repeats": repeats,
+                "walls": {n: [round(w, 3) for w in ws] for n, ws in walls.items()},
+                "min": {n: round(min(ws), 3) for n, ws in walls.items()},
+            }
+        )
+    )
+
+
+def _run_point(tree: str, sf_dir: str, name: str) -> dict:
+    proc = subprocess.run(
+        [sys.executable, os.path.join(tree, "bench.py"), "--point", sf_dir, name],
+        stdout=subprocess.PIPE,
+        text=True,
+        check=True,
+        cwd=tree,
+    )
+    return json.loads(proc.stdout.strip().splitlines()[-1])
+
+
+def ab(before_tree: str, sf_dir: str, names: list[str]) -> None:
+    """``--ab``: adjacent before/after ``--point`` pairs, one per query.
+
+    100x levels are machine-state-bound (the same point measured 46.2
+    then 7.1 s minutes apart), so the claim is the ratio of ADJACENT
+    runs; alternating which side goes first keeps a drift in machine
+    state from favouring one side.
+    """
+    sides = {"before": os.path.abspath(before_tree), "after": REPO_ROOT}
+    sf_dir = os.path.abspath(sf_dir)  # each side runs in its own tree
+    for i, name in enumerate(names):
+        order = ["before", "after"] if i % 2 == 0 else ["after", "before"]
+        rec = {side: _run_point(sides[side], sf_dir, name) for side in order}
+        b, a = rec["before"]["min"][name], rec["after"]["min"][name]
+        print(
+            json.dumps(
+                {
+                    "query": name,
+                    "sf_dir": sf_dir,
+                    "first": order[0],
+                    "before": rec["before"],
+                    "after": rec["after"],
+                    "ratio": round(b / a, 3),
+                }
+            ),
+            flush=True,
+        )
+
+
 if __name__ == "__main__":
-    main()
+    args = sys.argv[1:]
+    if not args:
+        main()
+    elif args[0] == "--point" and len(args) >= 3:
+        point(args[1], args[2:])
+    elif args[0] == "--ab" and len(args) >= 4:
+        ab(args[1], args[2], args[3:])
+    else:
+        sys.exit(
+            "usage: bench.py | bench.py --point SF_DIR QUERY... | "
+            "bench.py --ab TREE SF_DIR QUERY..."
+        )

@@ -30,7 +30,8 @@ from automated_data_pipeline_python_spark.ingest.normalize import (
     from_records,
     normalize_nfts,
 )
-from automated_data_pipeline_python_spark.ingest.store import to_parquet, write_tables
+from automated_data_pipeline_python_spark.ingest.store import write_tables
+from automated_data_pipeline_python_spark.sources.files import write_parquet
 
 RAW_RECORDS = [
     {
@@ -104,7 +105,7 @@ class TestStore:
         # we persist schema-preserving empty datasets.
         empty = normalize_nfts(from_records(spark, []))["nfts"]
         path = str(tmp_path / "empty_nfts")
-        to_parquet(empty, path)
+        write_parquet(empty, path)
         back = spark.read.parquet(path)
         assert back.count() == 0
         assert back.columns == empty.columns

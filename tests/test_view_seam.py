@@ -1,4 +1,5 @@
-"""Query modules register views only through the two shared seams.
+"""Query and streaming modules register views only through the two
+shared seams.
 
 A table is exposed to spark.sql(...) with ``tables.register_views`` and
 a computed-once intermediate with ``catalog.materialize``; each seam is
@@ -16,11 +17,11 @@ from __future__ import annotations
 import ast
 import pathlib
 
-QUERIES = (
+PACKAGE = (
     pathlib.Path(__file__).resolve().parent.parent
     / "automated_data_pipeline_python_spark"
-    / "queries"
 )
+SEAM_USERS = ("queries", "streaming")
 LOADERS = {"load", "load_scaled"}
 
 
@@ -42,12 +43,14 @@ def _hand_written_view(node: ast.AST) -> str | None:
 
 def test_no_hand_written_table_or_checkpoint_views():
     offenders = []
-    for mod in sorted(QUERIES.rglob("*.py")):
+    mods = sorted(m for d in SEAM_USERS for m in (PACKAGE / d).rglob("*.py"))
+    assert mods
+    for mod in mods:
         for node in ast.walk(ast.parse(mod.read_text())):
             what = _hand_written_view(node)
             if what is not None:
                 offenders.append(
-                    f"{mod.relative_to(QUERIES.parent)}:{node.lineno}"
+                    f"{mod.relative_to(PACKAGE)}:{node.lineno}"
                     f" {what}.createOrReplaceTempView"
                 )
     assert offenders == [], (

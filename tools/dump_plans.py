@@ -49,10 +49,6 @@ def main() -> None:
             f.write(f"# {name} @ {SF} ({suffix})\n")
             f.write(buf.getvalue())
         print(path)
-        # Temp views registered by one query must not leak into the next.
-        for t in spark.catalog.listTables():
-            if t.isTemporary:
-                spark.catalog.dropTempView(t.name)
     spark.stop()
 
 
