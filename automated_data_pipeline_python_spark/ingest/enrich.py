@@ -12,6 +12,10 @@ absorb duplicate URLs. Relationally that is a LEFT JOIN against a
    (:func:`fetch_distinct_urls_distributed`, ``mapInPandas`` over URL
    partitions) for large fan-out with zero driver-side collect,
 3. broadcast/left-join the fetched table back.
+
+The streaming shape (``fetcher.collect_with_enrichment``) gets the same
+property another way: items that share a URL share one in-run fetch.
+Either shape fetches each distinct URL once per call.
 """
 
 from __future__ import annotations

@@ -39,19 +39,24 @@ from automated_data_pipeline_python_spark.ingest.normalize import (
 from automated_data_pipeline_python_spark.ingest.store import write_tables
 from automated_data_pipeline_python_spark.session import get_spark
 
+LIST_CONCURRENCY = 2  # reference api_clients.py:10
+ENRICH_CONCURRENCY = 15  # reference api_clients.py:17
+
 
 def make_env_keyed_transport():
     """Env-keyed client factory (reference api_clients.py:4-17):
     ``OPENSEA_API_KEY`` — when set — rides every request as the
     ``X-API-KEY`` header; the metadata/enrichment side needs no key.
     The reference loads it via dotenv (main.py:16); any env loader
-    works — only ``os.getenv`` is assumed here.
+    works — only ``os.getenv`` is assumed here. One pool serves both
+    fetchers, so it holds a connection for each request either may
+    have in flight.
     """
     from automated_data_pipeline_python_spark.ingest.transport import make_transport
 
     api_key = os.getenv("OPENSEA_API_KEY")
     headers = {"X-API-KEY": api_key} if api_key else {}
-    return make_transport(headers=headers)
+    return make_transport(headers=headers, max_connections=LIST_CONCURRENCY + ENRICH_CONCURRENCY)
 
 
 def demo_transport(n_pages: int = 5, per_page: int = 200):
@@ -129,10 +134,12 @@ def serve_demo_api(n_pages: int = 5, per_page: int = 200):
 
 
 def run_pipeline(spark, output_dir: str, transport=None, first_url=None) -> dict:
+    """Run the four stages; ``transport`` is closed after COLLECT when it
+    has ``close``."""
     transport = transport or demo_transport()
     first_url = first_url or "api://collection/page/0"
-    list_fetcher = RetryingFetcher(transport, max_concurrency=2)  # reference api_clients.py:10
-    enrich_fetcher = RetryingFetcher(transport, max_concurrency=15)  # :17
+    list_fetcher = RetryingFetcher(transport, max_concurrency=LIST_CONCURRENCY)
+    enrich_fetcher = RetryingFetcher(transport, max_concurrency=ENRICH_CONCURRENCY)
 
     # COLLECT (reference main.py:38-49), with the live status line the
     # reference runs at 1 Hz (api.py:80-108)
@@ -147,19 +154,24 @@ def run_pipeline(spark, output_dir: str, transport=None, first_url=None) -> dict
         }
         return merged
 
-    with ConsoleStatus(counters):
-        records = asyncio.run(
-            collect_with_enrichment(
-                list_fetcher,
-                enrich_fetcher,
-                first_url,
-                next_url=lambda page, _u: page.get("next"),
-                enrich_url=lambda item: item.get("metadata_url"),
-                apply_enrichment=lambda item, extra: {**item, "traits": extra["attributes"]},
-                queue_size=500,  # reference nft.py:63
-                workers=15,  # reference nft.py:83
+    try:
+        with ConsoleStatus(counters):
+            records = asyncio.run(
+                collect_with_enrichment(
+                    list_fetcher,
+                    enrich_fetcher,
+                    first_url,
+                    next_url=lambda page, _u: page.get("next"),
+                    enrich_url=lambda item: item.get("metadata_url"),
+                    apply_enrichment=lambda item, extra: {**item, "traits": extra["attributes"]},
+                    queue_size=500,  # reference nft.py:63
+                    workers=15,  # reference nft.py:83
+                )
             )
-        )
+    finally:
+        close = getattr(transport, "close", None)
+        if callable(close):
+            close()
 
     # TRANSFORM (reference main.py:51-67)
     tables = normalize_nfts(from_records(spark, records))

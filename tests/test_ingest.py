@@ -217,6 +217,86 @@ class TestFetcher:
         assert len(bare) == 2  # meta/2 items survive bare
         assert ef.stats.errors == 2
 
+    @staticmethod
+    def _collect(lf, ef, first_url, workers, enrich_url=lambda it: it.get("metadata_url")):
+        return collect_with_enrichment(
+            lf,
+            ef,
+            first_url,
+            _next_url,
+            enrich_url=enrich_url,
+            apply_enrichment=lambda item, extra: {**item, "traits": extra["attributes"]},
+            workers=workers,
+        )
+
+    def test_pipeline_fetches_each_enrichment_url_once(self):
+        inner = _paged_api(6, 20)  # 120 items over 3 distinct meta URLs
+        calls: list[str] = []
+
+        async def fetch(url: str) -> dict:
+            calls.append(url)
+            await asyncio.sleep(0)  # let the other workers interleave
+            return await inner(url)
+
+        ef = RetryingFetcher(fetch, wait_initial=0.001)
+        collect = self._collect(RetryingFetcher(fetch), ef, "http://api/page/0", workers=16)
+        out = asyncio.run(asyncio.wait_for(collect, 10))
+        assert len(calls) == 6 + 3
+        assert sorted(u for u in calls if u.startswith("http://meta/")) == [f"http://meta/{k}" for k in range(3)]
+        assert len(out) == 120 and all("traits" in o for o in out)
+        assert ef.stats.enriched == 120
+
+    def test_workers_share_an_in_flight_enrichment_fetch(self):
+        meta = "http://meta/0"
+        calls: list[str] = []
+        asked: list[str] = []
+
+        async def scenario():
+            started, gate = asyncio.Event(), asyncio.Event()
+
+            async def fetch(url: str) -> dict:
+                calls.append(url)
+                if url == "http://api/page/0":
+                    return {"items": [{"identifier": "0", "metadata_url": meta}], "next": "http://api/page/1"}
+                if url == "http://api/page/1":
+                    await started.wait()  # the second item arrives mid-fetch
+                    return {"items": [{"identifier": "1", "metadata_url": meta}], "next": None}
+                started.set()
+                await gate.wait()
+                return {"attributes": [{"trait_type": "mod", "value": "0"}]}
+
+            def enrich_url(item: dict) -> str:
+                asked.append(item["identifier"])
+                if len(asked) == 2:  # release the fetch once both items want it
+                    asyncio.get_running_loop().call_soon(gate.set)
+                return item["metadata_url"]
+
+            lf, ef = RetryingFetcher(fetch), RetryingFetcher(fetch)
+            out = await asyncio.wait_for(self._collect(lf, ef, "http://api/page/0", 2, enrich_url), 10)
+            return out, ef
+
+        out, ef = asyncio.run(scenario())
+        assert calls.count(meta) == 1
+        assert len(out) == 2 and all("traits" in o for o in out)
+        assert ef.stats.enriched == 2 and ef.stats.errors == 0
+
+    def test_failed_enrichment_fetch_is_not_memoized(self):
+        # items 0..3 use meta/0, 1, 2, 0; the first meta/0 exchange fails
+        inner = _paged_api(1, 4, fail_urls={"http://meta/0": 1})
+        calls: list[str] = []
+
+        async def fetch(url: str) -> dict:
+            calls.append(url)
+            return await inner(url)
+
+        ef = RetryingFetcher(fetch, max_attempts=1, wait_initial=0.001)
+        out = asyncio.run(self._collect(RetryingFetcher(fetch), ef, "http://api/page/0", workers=1))
+        by_id = {o["identifier"]: o for o in out}
+        assert "traits" not in by_id["0"]  # kept bare
+        assert by_id["3"]["traits"] == [{"trait_type": "mod", "value": "0"}]  # refetched
+        assert calls.count("http://meta/0") == 2
+        assert (ef.stats.enriched, ef.stats.errors) == (3, 1)
+
 
 class TestEnrichmentJoin:
     def test_distinct_url_fetch_then_left_join(self, spark):

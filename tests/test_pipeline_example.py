@@ -10,7 +10,17 @@ from nft_pipeline import demo_transport, run_pipeline  # noqa: E402
 
 
 def test_pipeline_end_to_end(spark, tmp_path):
-    result = run_pipeline(spark, str(tmp_path), transport=demo_transport(3, 50))
+    inner = demo_transport(3, 50)
+    calls: list[str] = []
+
+    async def transport(url: str) -> dict:
+        calls.append(url)
+        return await inner(url)
+
+    result = run_pipeline(spark, str(tmp_path), transport=transport)
+    # one request per page and one per distinct metadata URL
+    assert sum(u.startswith("api://collection/page/") for u in calls) == 3
+    assert sum(u.startswith("api://meta/") for u in calls) == 40
     assert result["n_records"] == 150
     assert result["enriched"] == 150
     top = result["top_traits"]
