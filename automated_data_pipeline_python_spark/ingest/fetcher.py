@@ -10,9 +10,8 @@ Re-expresses the reference's collector architecture
 - sentinel shutdown (reference nft.py:89-96)
 - retry with exponential backoff (reference api.py:154,23)
 - bounded concurrency semaphore (reference api.py:54,176)
-- one fetch per distinct enrichment URL within a collect
-  (:class:`SingleFlight`), the in-run effect of the reference's Redis
-  response cache (api.py:174-221)
+- one fetch per distinct enrichment URL within a collect, the in-run
+  effect of the reference's Redis response cache (api.py:174-221)
 
 The transport is injected (``fetch: Callable[[str], Awaitable[dict]]``)
 so tests run hermetically and the engine has no HTTP dependency; wire in
@@ -95,46 +94,6 @@ class RetryingFetcher:
         raise AssertionError("unreachable")
 
 
-class SingleFlight:
-    """One shared fetch per URL: concurrent callers await the same task.
-
-    ``get(url)`` starts ``fetch(url)`` only when no task for ``url`` is
-    held, and otherwise awaits the held one. With ``memoize`` a task that
-    succeeded stays held, so later callers reuse its result; without it
-    an entry covers only the fetch in flight. A fetch that raises is
-    always dropped: every caller already waiting on it gets the error,
-    and the next caller fetches again.
-    """
-
-    def __init__(self, fetch: FetchFn, memoize: bool) -> None:
-        self._fetch = fetch
-        self._memoize = memoize
-        self._tasks: dict[str, asyncio.Task] = {}
-
-    def task(self, url: str) -> asyncio.Task:
-        """The held fetch of ``url``, started if there is none."""
-        task = self._tasks.get(url)
-        if task is None:
-            task = self._tasks[url] = asyncio.create_task(self._fetch_once(url))
-        return task
-
-    async def get(self, url: str) -> dict:
-        # shield: a cancelled caller must not cancel the fetch others share
-        return await asyncio.shield(self.task(url))
-
-    async def _fetch_once(self, url: str) -> dict:
-        # The entry goes before the task finishes, so no caller can pick
-        # up a failed fetch after it failed.
-        try:
-            result = await self._fetch(url)
-        except BaseException:
-            del self._tasks[url]
-            raise
-        if not self._memoize:
-            del self._tasks[url]
-        return result
-
-
 async def paginate(
     fetcher: RetryingFetcher,
     first_url: str,
@@ -180,9 +139,8 @@ async def collect_with_enrichment(
 
     Each distinct enrichment URL is fetched once per call, the way the
     reference's response cache serves repeats: items sharing a URL await
-    one :class:`SingleFlight` fetch and ``apply_enrichment`` gets the
-    same decoded payload for each of them, so it must treat the payload
-    as read-only. A fetch that fails after its retries is not kept: each
+    one shared fetch task and ``apply_enrichment`` gets the same decoded
+    payload for each of them, so it must treat the payload as read-only. A fetch that fails after its retries is not kept: each
     item that waited on it stays bare and counts in ``stats.errors``,
     and a later item with that URL fetches it again. ``stats.enriched``
     still counts items, not fetches.
@@ -190,7 +148,21 @@ async def collect_with_enrichment(
     queue: asyncio.Queue[dict | None] = asyncio.Queue(maxsize=queue_size)
     out: list[dict] = []
     stats = enrich_fetcher.stats
-    enrich = SingleFlight(enrich_fetcher.get, memoize=True)
+    fetches: dict[str, asyncio.Task] = {}  # url -> its one fetch this call
+
+    async def enrich(url: str) -> dict:
+        task = fetches.get(url)
+        if task is None:
+            task = fetches[url] = asyncio.create_task(enrich_fetcher.get(url))
+
+            def drop_if_failed(done: asyncio.Task) -> None:
+                # a failed or cancelled fetch is not kept: a later item refetches
+                if done.cancelled() or done.exception() is not None:
+                    del fetches[url]
+
+            task.add_done_callback(drop_if_failed)
+        # shield: a cancelled item must not cancel the fetch others share
+        return await asyncio.shield(task)
 
     async def producer() -> None:
         url: str | None = first_url
@@ -213,7 +185,7 @@ async def collect_with_enrichment(
                     out.append(item)
                     continue
                 try:
-                    extra = await enrich.get(url)
+                    extra = await enrich(url)
                     out.append(apply_enrichment(item, extra))
                     stats.enriched += 1
                 except Exception:

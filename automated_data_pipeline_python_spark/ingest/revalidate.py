@@ -11,9 +11,6 @@ on the engine's bronze-layer model:
 - 200 replaces the entry; ``no-store`` responses are never cached
 - ``stale-while-revalidate`` serves the stale body immediately and
   revalidates in a background task
-- concurrent gets of one URL share one network exchange (cold miss,
-  refetch or revalidation alike), so a burst on an uncached or stale
-  URL makes one request, not one per caller
 
 The transport is injected (``fetch(url, headers) -> (status, headers,
 body)``) so tests run hermetically and the engine carries no HTTP
@@ -36,7 +33,6 @@ from dataclasses import dataclass, field
 from automated_data_pipeline_python_spark.ingest.fetcher import (
     FetchStats,
     RetryingFetcher,
-    SingleFlight,
 )
 
 # (status, response headers, parsed body)
@@ -104,8 +100,6 @@ class ConditionalFetcher:
             stats=self.stats,
             **retry_kwargs,
         )
-        # in-flight exchanges only: ``store`` is the durable cache
-        self._inflight = SingleFlight(self._retry.get, memoize=False)
 
     async def _exchange(self, url: str) -> dict:
         """One conditional request: build validators, interpret 304/200."""
@@ -150,7 +144,7 @@ class ConditionalFetcher:
     async def get(self, url: str) -> dict:
         cached = self.store.get(url)
         if cached is None:
-            return await self._inflight.get(url)
+            return await self._retry.get(url)
         self.stats.cache_hits += 1
         cc = cached.cache_control or ""
         stale = not cached.is_fresh(self._clock())
@@ -160,16 +154,14 @@ class ConditionalFetcher:
         if not needs_revalidation:
             return cached.body
         if not (cached.etag or cached.last_modified):
-            return await self._inflight.get(url)  # unconditional refetch
+            return await self._retry.get(url)  # unconditional refetch
         if re.search(r"stale-while-revalidate", cc, re.IGNORECASE):
-            # serve stale now, revalidate in the background (joining a
-            # revalidation already in flight)
-            task = self._inflight.task(url)
-            if task not in self._background:
-                self._background.add(task)
-                task.add_done_callback(self._background.discard)
+            # serve stale now, revalidate in the background
+            task = asyncio.create_task(self._retry.get(url))
+            self._background.add(task)
+            task.add_done_callback(self._background.discard)
             return cached.body
-        return await self._inflight.get(url)
+        return await self._retry.get(url)
 
     async def drain_background(self) -> None:
         """Await outstanding stale-while-revalidate tasks (tests/shutdown)."""

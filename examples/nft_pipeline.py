@@ -135,7 +135,7 @@ def serve_demo_api(n_pages: int = 5, per_page: int = 200):
 
 def run_pipeline(spark, output_dir: str, transport=None, first_url=None) -> dict:
     """Run the four stages; ``transport`` is closed after COLLECT when it
-    has ``close``."""
+    has ``aclose`` or ``close``."""
     transport = transport or demo_transport()
     first_url = first_url or "api://collection/page/0"
     list_fetcher = RetryingFetcher(transport, max_concurrency=LIST_CONCURRENCY)
@@ -154,24 +154,27 @@ def run_pipeline(spark, output_dir: str, transport=None, first_url=None) -> dict
         }
         return merged
 
-    try:
-        with ConsoleStatus(counters):
-            records = asyncio.run(
-                collect_with_enrichment(
-                    list_fetcher,
-                    enrich_fetcher,
-                    first_url,
-                    next_url=lambda page, _u: page.get("next"),
-                    enrich_url=lambda item: item.get("metadata_url"),
-                    apply_enrichment=lambda item, extra: {**item, "traits": extra["attributes"]},
-                    queue_size=500,  # reference nft.py:63
-                    workers=15,  # reference nft.py:83
-                )
+    async def collect():
+        try:
+            return await collect_with_enrichment(
+                list_fetcher,
+                enrich_fetcher,
+                first_url,
+                next_url=lambda page, _u: page.get("next"),
+                enrich_url=lambda item: item.get("metadata_url"),
+                apply_enrichment=lambda item, extra: {**item, "traits": extra["attributes"]},
+                queue_size=500,  # reference nft.py:63
+                workers=15,  # reference nft.py:83
             )
-    finally:
-        close = getattr(transport, "close", None)
-        if callable(close):
-            close()
+        finally:
+            # close inside the loop: an async client must not outlive it
+            if hasattr(transport, "aclose"):
+                await transport.aclose()
+            elif hasattr(transport, "close"):
+                transport.close()
+
+    with ConsoleStatus(counters):
+        records = asyncio.run(collect())
 
     # TRANSFORM (reference main.py:51-67)
     tables = normalize_nfts(from_records(spark, records))

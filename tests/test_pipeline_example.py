@@ -13,11 +13,19 @@ def test_pipeline_end_to_end(spark, tmp_path):
     inner = demo_transport(3, 50)
     calls: list[str] = []
 
-    async def transport(url: str) -> dict:
-        calls.append(url)
-        return await inner(url)
+    class Transport:
+        closed = False
 
+        async def __call__(self, url: str) -> dict:
+            calls.append(url)
+            return await inner(url)
+
+        async def aclose(self) -> None:
+            self.closed = True
+
+    transport = Transport()
     result = run_pipeline(spark, str(tmp_path), transport=transport)
+    assert transport.closed  # an async client is closed inside the loop
     # one request per page and one per distinct metadata URL
     assert sum(u.startswith("api://collection/page/") for u in calls) == 3
     assert sum(u.startswith("api://meta/") for u in calls) == 40
