@@ -4,14 +4,13 @@ The reference (HunterX405/automated-data-pipeline-python) is an
 asyncio extract→transform→load pipeline; this package re-expresses each
 stage idiomatically:
 
+- ``fetcher``    — paginated producer/consumer fetch with retry,
+                   bounded concurrency, error isolation, and one fetch
+                   per distinct enrichment URL within a collect
+                   (reference pipeline/collectors/nft.py, utils/api.py)
+- ``transport``  — pooled HTTP clients for the fetcher's injectable
+                   fetch seam (reference utils/api.py:33-46)
 - ``normalize``  — schema application, cast, projections, trait explode
                    (reference pipeline/transform/normalize.py)
 - ``store``      — parquet sink (reference pipeline/load/store.py)
-- ``cachekeys``  — canonical URL / header / cache-key functions
-                   (reference pipeline/utils/cache.py:29-74)
-- ``fetcher``    — paginated producer/consumer fetch with retry,
-                   bounded concurrency, and error isolation
-                   (reference pipeline/collectors/nft.py, utils/api.py)
-- ``enrich``     — distinct-URL batch enrichment join replacing the
-                   reference's per-row fetch (nft.py:15-23)
 """

@@ -20,11 +20,6 @@ record list ready for ``spark.createDataFrame``. Within one collect,
 repeated enrichment URLs are coalesced onto one fetch; across runs,
 re-runs read bronze parquet instead of refetching. Together these
 replace the reference's Redis response cache (SURVEY.md §4.3).
-
-At scale: run this driver-side for small collections; for large fetch
-fan-out, partition a DataFrame of page cursors / URLs and run the same
-coroutine per partition inside ``mapInPandas`` with a per-partition
-client (bounded concurrency per executor).
 """
 
 from __future__ import annotations
@@ -33,7 +28,7 @@ import asyncio
 import logging
 import random
 from collections.abc import Awaitable, Callable
-from dataclasses import dataclass, field
+from dataclasses import dataclass
 
 logger = logging.getLogger(__name__)
 
@@ -49,7 +44,6 @@ class FetchStats:
     enriched: int = 0
     errors: int = 0
     retries: int = 0
-    skipped: list[str] = field(default_factory=list)
 
 
 class RetryingFetcher:
@@ -94,29 +88,6 @@ class RetryingFetcher:
         raise AssertionError("unreachable")
 
 
-async def paginate(
-    fetcher: RetryingFetcher,
-    first_url: str,
-    next_url: Callable[[dict, str], str | None],
-    items_key: str = "items",
-) -> list[dict]:
-    """Follow a cursor-paginated endpoint to exhaustion.
-
-    ``next_url(page_json, current_url)`` returns the next URL or None
-    (reference nft.py:25-45: OpenSea ``next`` cursor loop).
-    """
-    url: str | None = first_url
-    items: list[dict] = []
-    while url:
-        page = await fetcher.get(url)
-        batch = page.get(items_key, [])
-        items.extend(batch)
-        fetcher.stats.pages += 1
-        fetcher.stats.items += len(batch)
-        url = next_url(page, url)
-    return items
-
-
 async def collect_with_enrichment(
     list_fetcher: RetryingFetcher,
     enrich_fetcher: RetryingFetcher,
@@ -130,7 +101,9 @@ async def collect_with_enrichment(
 ) -> list[dict]:
     """Producer→queue→worker-pool pipeline with per-item error isolation.
 
-    Reference parity (nft.py:47-99): the producer pushes items onto a
+    Reference parity (nft.py:47-99): the producer follows the page
+    cursor (``next_url(page_json, current_url)`` returns the next URL or
+    None, nft.py:25-45) and pushes items onto a
     bounded queue while ``workers`` consumers enrich concurrently;
     enrichment failures are logged and the bare item kept (nft.py:76-77
     isolates per-NFT exceptions); items without an enrichment URL pass

@@ -11,11 +11,11 @@ module provides the real bindings:
   ship httpx.
 - :class:`PooledHttpTransport` — urllib3 ``PoolManager`` binding
   (pooled keep-alive HTTP/1.1, stdlib-adjacent, present everywhere
-  Spark's Python is). Sync client bridged onto the event loop with
-  ``asyncio.to_thread`` so the async fetcher pipeline
-  (``RetryingFetcher`` / ``collect_with_enrichment``) drives it
-  unchanged; the fetcher's BoundedSemaphore caps the number of
-  concurrent threads at ``max_concurrency``.
+  Spark's Python is). Sync client bridged onto the event loop through
+  the transport's own ``maxsize``-thread executor so the async fetcher
+  pipeline (``RetryingFetcher`` / ``collect_with_enrichment``) drives
+  it unchanged; requests in flight are bounded by the smaller of
+  ``maxsize`` and the fetcher's ``max_concurrency``.
 
 Transport contract (what ``RetryingFetcher`` expects):
 - return the decoded JSON dict on 2xx,
@@ -31,6 +31,7 @@ from __future__ import annotations
 
 import asyncio
 import json
+from concurrent.futures import ThreadPoolExecutor
 from typing import Any
 
 __all__ = [
@@ -56,7 +57,9 @@ class PooledHttpTransport:
     One ``PoolManager`` per transport instance = one connection pool
     shared across all fetches, mirroring the reference's single shared
     client (api.py:33-46). ``num_pools``/``maxsize`` bound sockets the
-    way httpx's ``Limits(max_connections=...)`` does.
+    way httpx's ``Limits(max_connections=...)`` does. Requests run on a
+    ``maxsize``-thread executor owned by the transport, so every pooled
+    connection can be in use at once.
     """
 
     def __init__(
@@ -68,6 +71,7 @@ class PooledHttpTransport:
     ) -> None:
         import urllib3
 
+        self._threads = ThreadPoolExecutor(max_workers=maxsize, thread_name_prefix="http")
         self._http = urllib3.PoolManager(
             num_pools=num_pools,
             maxsize=maxsize,
@@ -93,11 +97,13 @@ class PooledHttpTransport:
         return json.loads(resp.data.decode("utf-8"))
 
     async def __call__(self, url: str) -> dict[str, Any]:
-        # Bridge the sync pool onto the loop; concurrency is bounded by
-        # the fetcher's semaphore, so at most max_concurrency threads.
-        return await asyncio.to_thread(self.fetch_sync, url)
+        # Not asyncio.to_thread: the loop's default executor holds
+        # min(32, cpus + 4) threads, fewer than maxsize on small hosts.
+        loop = asyncio.get_running_loop()
+        return await loop.run_in_executor(self._threads, self.fetch_sync, url)
 
     def close(self) -> None:
+        self._threads.shutdown()
         self._http.clear()
 
     def __enter__(self) -> "PooledHttpTransport":

@@ -1,4 +1,4 @@
-"""Ingest-boundary tests: normalize/store/cachekeys/fetcher/enrich.
+"""Ingest-boundary tests: normalize/store/fetcher.
 
 Fixtures model the reference's data shapes (FIXTURES.md §A), including
 the documented edge rows: missing metadata_url, null/empty traits,
@@ -11,20 +11,9 @@ import asyncio
 
 import pytest
 
-from automated_data_pipeline_python_spark.ingest.cachekeys import (
-    build_cache_key,
-    filter_headers,
-    normalize_url,
-)
-from automated_data_pipeline_python_spark.ingest.enrich import (
-    enrichment_join,
-    fetch_distinct_urls,
-)
 from automated_data_pipeline_python_spark.ingest.fetcher import (
-    FetchStats,
     RetryingFetcher,
     collect_with_enrichment,
-    paginate,
 )
 from automated_data_pipeline_python_spark.ingest.normalize import (
     from_records,
@@ -119,27 +108,6 @@ class TestStore:
         assert traits.count() == 2
 
 
-class TestCacheKeys:
-    def test_url_normalization(self):
-        # Reference cache.py:29-39: lowercase scheme/host, sorted query,
-        # fragment dropped.
-        a = normalize_url("HTTP://Api.Example.com/v2/x?b=2&a=1#frag")
-        b = normalize_url("http://api.example.com/v2/x?a=1&b=2")
-        assert a == b
-
-    def test_header_allowlist(self):
-        assert filter_headers(
-            {"Accept": "application/json", "X-Api-Key": "secret", "content-type": "a"}
-        ) == {"accept": "application/json", "content-type": "a"}
-
-    def test_cache_key_deterministic_and_namespaced(self):
-        k1 = build_cache_key("http://x/y?b=2&a=1", {"Accept": "json"})
-        k2 = build_cache_key("HTTP://X/y?a=1&b=2", {"accept": "json", "X-Other": "z"})
-        assert k1 == k2
-        assert k1.startswith("ingest:v1:")
-        assert k1 != build_cache_key("http://x/y?a=1&b=3")
-
-
 def _paged_api(n_pages: int, per_page: int, fail_urls: dict[str, int] | None = None):
     """Fake cursor-paginated endpoint; fail_urls[url] = #failures before ok."""
     remaining = dict(fail_urls or {})
@@ -168,24 +136,24 @@ def _next_url(page: dict, _cur: str) -> str | None:
 
 
 class TestFetcher:
-    def test_paginate_exhausts_cursor(self):
+    def test_collect_exhausts_cursor(self):
         fetcher = RetryingFetcher(_paged_api(3, 4), wait_initial=0.001)
-        items = asyncio.run(paginate(fetcher, "http://api/page/0", _next_url))
-        assert len(items) == 12
-        assert fetcher.stats.pages == 3
+        out = asyncio.run(self._collect(fetcher, fetcher, "http://api/page/0", 2, enrich_url=lambda it: None))
+        assert sorted(int(o["identifier"]) for o in out) == list(range(12))
+        assert (fetcher.stats.pages, fetcher.stats.items) == (3, 12)
 
     def test_retry_with_backoff_recovers(self):
         fetch = _paged_api(2, 2, fail_urls={"http://api/page/1": 2})
         fetcher = RetryingFetcher(fetch, wait_initial=0.001)
-        items = asyncio.run(paginate(fetcher, "http://api/page/0", _next_url))
-        assert len(items) == 4
+        page = asyncio.run(fetcher.get("http://api/page/1"))
+        assert len(page["items"]) == 2
         assert fetcher.stats.retries == 2
 
     def test_retry_gives_up_after_max_attempts(self):
         fetch = _paged_api(1, 1, fail_urls={"http://api/page/0": 99})
         fetcher = RetryingFetcher(fetch, max_attempts=3, wait_initial=0.001)
         with pytest.raises(ConnectionError):
-            asyncio.run(paginate(fetcher, "http://api/page/0", _next_url))
+            asyncio.run(fetcher.get("http://api/page/0"))
         assert fetcher.stats.retries == 2
 
     def test_pipeline_enriches_and_isolates_errors(self):
@@ -296,102 +264,3 @@ class TestFetcher:
         assert by_id["3"]["traits"] == [{"trait_type": "mod", "value": "0"}]  # refetched
         assert calls.count("http://meta/0") == 2
         assert (ef.stats.enriched, ef.stats.errors) == (3, 1)
-
-
-class TestEnrichmentJoin:
-    def test_distinct_url_fetch_then_left_join(self, spark):
-        calls: list[str] = []
-
-        async def fetch(url: str) -> dict:
-            calls.append(url)
-            return {"attributes": [{"trait_type": "mod", "value": url[-1]}]}
-
-        raw = from_records(spark, RAW_RECORDS).drop("traits")
-        meta = fetch_distinct_urls(raw, fetch)
-        # Duplicate URL fetched once (subsumes the reference's response
-        # cache within a run).
-        assert calls == ["http://meta/1"]
-        joined = enrichment_join(raw, meta)
-        rows = {r.name: r for r in joined.collect()}
-        assert rows["one"].traits[0].value == "1"
-        assert rows["bad id"].traits == rows["one"].traits
-        assert rows[None].traits is None  # null URL passes through
-
-
-class TestIncrementalRefresh:
-    def _api(self, upto: int):
-        """Server holding records seq 0..upto-1, paginated by 5, with a
-        since-cursor endpoint."""
-
-        async def fetch(url: str) -> dict:
-            since = int(url.rsplit("=", 1)[1])
-            start = since + 1
-            items = [
-                {"seq": s, "payload": f"rec{s}"}
-                for s in range(start, min(start + 5, upto))
-            ]
-            nxt = (
-                f"http://api/records?since={items[-1]['seq']}"
-                if items and items[-1]["seq"] + 1 < upto
-                else None
-            )
-            return {"items": items, "next": nxt}
-
-        return fetch
-
-    @staticmethod
-    def _url_for(hwm):
-        return f"http://api/records?since={-1 if hwm is None else hwm}"
-
-    def test_first_run_lands_everything_then_only_new(self, spark, tmp_path):
-        from automated_data_pipeline_python_spark.ingest.incremental import (
-            incremental_refresh,
-        )
-
-        bronze = str(tmp_path / "bronze")
-        schema = "seq long, payload string"
-        r1 = incremental_refresh(
-            spark, bronze, self._api(12), self._url_for,
-            lambda page, _u: page.get("next"), batch_id="b1", schema=schema,
-        )
-        assert (r1.new_rows, r1.high_water_mark) == (12, 11)
-
-        # No new data upstream -> nothing fetched past the mark.
-        r2 = incremental_refresh(
-            spark, bronze, self._api(12), self._url_for,
-            lambda page, _u: page.get("next"), batch_id="b2", schema=schema,
-        )
-        assert r2.new_rows == 0
-
-        # Upstream grows -> only the delta lands, in a fresh partition.
-        r3 = incremental_refresh(
-            spark, bronze, self._api(20), self._url_for,
-            lambda page, _u: page.get("next"), batch_id="b3", schema=schema,
-        )
-        assert (r3.new_rows, r3.high_water_mark) == (8, 19)
-        total = spark.read.parquet(bronze)
-        assert total.count() == 20
-        assert total.select("seq").distinct().count() == 20
-
-    def test_rerun_same_batch_is_idempotent(self, spark, tmp_path):
-        from automated_data_pipeline_python_spark.ingest.incremental import (
-            incremental_refresh,
-        )
-
-        bronze = str(tmp_path / "bronze2")
-        schema = "seq long, payload string"
-        incremental_refresh(
-            spark, bronze, self._api(7), self._url_for,
-            lambda page, _u: page.get("next"), batch_id="b1", schema=schema,
-        )
-        # Simulate a retry of the same batch against a server that still
-        # reports the same data: partition overwritten, no duplicates...
-        import shutil as _sh
-
-        _sh.rmtree(f"{bronze}/batch=b1")  # lost partition -> hwm resets
-        r = incremental_refresh(
-            spark, bronze, self._api(7), self._url_for,
-            lambda page, _u: page.get("next"), batch_id="b1", schema=schema,
-        )
-        assert r.new_rows == 7
-        assert spark.read.parquet(bronze).count() == 7

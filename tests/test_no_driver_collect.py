@@ -4,9 +4,7 @@ An operator that iterates `.collect()` results is not distributed; a
 `.toPandas()` in a query path drags the corpus through the driver. The
 catalog's contract is that every query returns a lazy DataFrame and
 every streaming monitor stays inside the engine, so the gate is
-zero-exemption: the only sanctioned driver-side collect in the whole
-package is the ingest enrichment auto-route (distinct-URL lists,
-`ingest/enrich.py` — documented, bounded, and outside this walk).
+zero-exemption.
 
 AST-based, not grep: SQL strings like `collect_list(...)` and comments
 must not trip it, and `F.count`/`GroupedData.count` aggregations make

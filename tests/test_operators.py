@@ -1,4 +1,4 @@
-"""Unit tests: skew-salted join, connected components, observability, logs."""
+"""Unit tests: skew-salted join, connected components, logs."""
 
 from __future__ import annotations
 
@@ -6,10 +6,6 @@ import logging
 
 from pyspark.sql import functions as F
 
-from automated_data_pipeline_python_spark.observability import (
-    observe_counters,
-    observed,
-)
 from automated_data_pipeline_python_spark.operators.clusters import (
     connected_components,
 )
@@ -77,32 +73,6 @@ class TestConnectedComponents:
         edges = spark.createDataFrame([(1, 2), (2, 3), (5, 4), (4, 3)], ["src", "dst"])
         comps = {r.node: r.component for r in connected_components(edges).collect()}
         assert set(comps.values()) == {1}
-
-
-class TestObservability:
-    def test_observed_row_and_null_counts(self, spark):
-        df, obs = observed(
-            load(spark, SF, "customer").withColumn(
-                "c_custkey", F.when(F.col("c_custkey") % 10 == 0, None).otherwise(F.col("c_custkey"))
-            )
-        )
-        n = df.count()
-        assert obs.get["rows"] == n
-        assert obs.get["null_c_custkey"] == 15
-
-    def test_observe_counters_custom(self, spark):
-        df, obs = observe_counters(
-            load(spark, SF, "orders"),
-            "order_metrics",
-            n=F.count(F.lit(1)),
-            total=F.sum("o_totalprice"),
-            open_orders=F.count(F.when(F.col("o_orderstatus") == "O", 1)),
-        )
-        df.write.format("noop").mode("overwrite").save()
-        m = obs.get
-        assert m["n"] == 1500
-        assert m["open_orders"] > 0
-        assert m["total"] > 0
 
 
 class TestLogs:

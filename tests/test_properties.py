@@ -15,10 +15,6 @@ from hypothesis import given, settings
 from hypothesis import strategies as st
 
 from automated_data_pipeline_python_spark.functions.numeric import sql_stable_round
-from automated_data_pipeline_python_spark.ingest.cachekeys import (
-    build_cache_key,
-    normalize_url,
-)
 
 
 @pytest.fixture(scope="module")
@@ -57,36 +53,6 @@ class TestStableRound:
         x = n + 0.5
         got = duck.execute(f"SELECT {sql_stable_round(str(x), 0)}").fetchone()[0]
         assert got == n + 1
-
-
-_url_path = st.text(
-    alphabet="abcdefghij/", min_size=0, max_size=20
-).map(lambda s: "/" + s.strip("/"))
-_params = st.lists(
-    st.tuples(
-        st.text(alphabet="abcxyz", min_size=1, max_size=5),
-        st.text(alphabet="0123456789", min_size=0, max_size=5),
-    ),
-    max_size=5,
-)
-
-
-class TestCacheKeyProperties:
-    @given(host=st.sampled_from(["API.Example.com", "api.example.com"]), path=_url_path, params=_params)
-    @settings(max_examples=100, deadline=None)
-    def test_key_invariant_under_param_order_and_case(self, host, path, params):
-        qs1 = "&".join(f"{k}={v}" for k, v in params)
-        qs2 = "&".join(f"{k}={v}" for k, v in reversed(params))
-        u1 = f"http://{host}{path}?{qs1}#frag"
-        u2 = f"http://{host.lower()}{path}?{qs2}"
-        assert build_cache_key(u1) == build_cache_key(u2)
-
-    @given(path=_url_path)
-    @settings(max_examples=50, deadline=None)
-    def test_normalization_idempotent(self, path):
-        u = f"HTTP://Host.X{path}?b=2&a=1"
-        once = normalize_url(u)
-        assert normalize_url(once) == once
 
 
 class TestPortableHash:

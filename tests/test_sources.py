@@ -70,50 +70,6 @@ def test_timestamp_roundtrip_csv(spark, tmp_path):
     assert _sorted(back) == _sorted(df)
 
 
-class TestPaginatedRestDataSource:
-    def test_distributed_fetch_reads_all_pages(self, spark):
-        from automated_data_pipeline_python_spark.sources import rest
-
-        rest.register(spark)
-        df = (
-            spark.read.format("paginated_rest")
-            .option(
-                "transport",
-                "automated_data_pipeline_python_spark.sources.transports_testing:fake_pages_of_ten",
-            )
-            .option("pages", 7)
-            .option("pagesPerPartition", 2)
-            .load()
-        )
-        assert df.rdd.getNumPartitions() == 4  # ceil(7/2) page ranges
-        rows = df.collect()
-        assert len(rows) == 70
-        import json as _json
-
-        ids = sorted(int(_json.loads(r.record)["identifier"]) for r in rows)
-        assert ids == list(range(70))
-
-    def test_records_parse_into_typed_bronze(self, spark):
-        from pyspark.sql import functions as F
-        from automated_data_pipeline_python_spark.sources import rest
-
-        rest.register(spark)
-        df = (
-            spark.read.format("paginated_rest")
-            .option(
-                "transport",
-                "automated_data_pipeline_python_spark.sources.transports_testing:fake_single_item",
-            )
-            .option("pages", 3)
-            .load()
-        )
-        typed = df.select(
-            F.get_json_object("record", "$.identifier").cast("int").alias("identifier"),
-            F.get_json_object("record", "$.name").alias("name"),
-        )
-        assert sorted(map(tuple, typed.collect())) == [(0, "n0"), (1, "n1"), (2, "n2")]
-
-
 class TestPermissiveReads:
     def test_csv_quarantines_malformed_rows(self, spark, tmp_path):
         from pyspark.sql import types as T
@@ -252,99 +208,3 @@ def test_parquet_schema_evolution_merge(spark, tmp_path):
     b = spark.createDataFrame([(2, "b", 1.0)], "id long, name string, score double")
     u = a.unionByName(b, allowMissingColumns=True)
     assert {r.id: r.score for r in u.collect()} == {1: None, 2: 1.0}
-
-
-class TestPaginatedRestStreamSource:
-    """Streaming twin of the REST source: page-number offsets give the
-    Kafka replayable-cursor contract — each page lands exactly once."""
-
-    def _start(self, spark, tmp_path, name):
-        from automated_data_pipeline_python_spark.sources import rest
-
-        rest.register(spark)
-        stream = (
-            spark.readStream.format("paginated_rest")
-            .option(
-                "transport",
-                "automated_data_pipeline_python_spark.sources."
-                "transports_testing:fake_bounded_feed",
-            )
-            .option("pagesPerBatch", 3)
-            .option("pageSize", 5)
-            .load()
-        )
-        return (
-            stream.writeStream.format("memory")
-            .queryName(name)
-            .option("checkpointLocation", str(tmp_path / name))
-            .trigger(processingTime="50 milliseconds")
-            .start()
-        )
-
-    def test_stream_drains_feed_exactly_once(self, spark, tmp_path):
-        import json as _json
-        import time
-
-        q = self._start(spark, tmp_path, "rest_stream_drain")
-        try:
-            deadline = time.time() + 60
-            while time.time() < deadline:
-                if spark.sql("SELECT count(*) c FROM rest_stream_drain").first().c >= 35:
-                    break
-                time.sleep(0.2)
-            # a few more triggers against the drained feed must add nothing
-            time.sleep(1.0)
-            rows = spark.sql("SELECT * FROM rest_stream_drain").collect()
-        finally:
-            q.stop()
-        assert len(rows) == 35  # 7 pages x 5 items, no page twice
-        ids = sorted(int(_json.loads(r.record)["identifier"]) for r in rows)
-        assert ids == list(range(35))
-        assert {r.page for r in rows} == set(range(7))
-
-    def test_recovery_replay_is_deterministic(self):
-        """readBetweenOffsets (the restart-recovery path) must re-produce
-        exactly the rows read() reported for the same offset range."""
-        from automated_data_pipeline_python_spark.sources.rest import (
-            PaginatedRestStreamReader,
-        )
-
-        r = PaginatedRestStreamReader(
-            transport="automated_data_pipeline_python_spark.sources."
-            "transports_testing:fake_bounded_feed",
-            pages_per_batch=3,
-            page_size=5,
-        )
-        start = r.initialOffset()
-        live, mid = r.read(start)
-        assert mid == {"page": 3}
-        assert list(live) == list(r.readBetweenOffsets(start, mid))
-        live2, end = r.read(mid)
-        assert end == {"page": 6}
-        assert list(live2) == list(r.readBetweenOffsets(mid, end))
-        # drained feed: offset stops advancing, no rows
-        tail, final = r.read({"page": 7})
-        assert list(tail) == [] and final == {"page": 7}
-
-    def test_partial_tail_page_is_not_crossed(self):
-        """A page below pageSize is the feed's still-filling tail: it
-        must not be ingested or crossed — advancing past it would drop
-        items appended later and make recovery replay a different row
-        set than the original batch (the exactly-once killer)."""
-        from automated_data_pipeline_python_spark.sources.rest import (
-            PaginatedRestStreamReader,
-        )
-
-        r = PaginatedRestStreamReader(
-            transport="automated_data_pipeline_python_spark.sources."
-            "transports_testing:fake_partial_tail_feed",
-            pages_per_batch=10,
-            page_size=5,
-        )
-        rows, off = r.read(r.initialOffset())
-        # pages 0-1 are full and ingested; page 2 (3 items) is the tail
-        assert off == {"page": 2}
-        assert len(list(rows)) == 10
-        # the tail stays un-crossed on every subsequent poll until full
-        again, off2 = r.read(off)
-        assert list(again) == [] and off2 == {"page": 2}

@@ -15,17 +15,11 @@ from automated_data_pipeline_python_spark.utils.status import (
 )
 
 
-def _counters(stats: FetchStats):
-    d = asdict(stats)
-    d.pop("skipped")
-    return d
-
-
 def test_interactive_rewrites_one_line():
     stats = FetchStats()
     out = io.StringIO()
     with ConsoleStatus(
-        lambda: _counters(stats), interval=0.02, out=out, interactive=True
+        lambda: asdict(stats), interval=0.02, out=out, interactive=True
     ):
         stats.pages = 3
         stats.items = 75
@@ -42,7 +36,7 @@ def test_non_interactive_prints_plain_lines_slowly():
     stats = FetchStats(errors=2, retries=5)
     out = io.StringIO()
     with ConsoleStatus(
-        lambda: _counters(stats), interval=0.01, log_interval=0.05,
+        lambda: asdict(stats), interval=0.01, log_interval=0.05,
         out=out, interactive=False,
     ):
         time.sleep(0.12)
@@ -57,7 +51,7 @@ def test_final_state_always_emitted():
     stats = FetchStats()
     out = io.StringIO()
     with ConsoleStatus(
-        lambda: _counters(stats), interval=60, out=out, interactive=False
+        lambda: asdict(stats), interval=60, out=out, interactive=False
     ):
         stats.enriched = 42  # changes after the (never-fired) first tick
     assert "Enriched: 42" in out.getvalue()
@@ -71,14 +65,12 @@ def test_format_status_shape():
 def test_observe_metrics_feed_the_status_line(spark):
     """df.observe counters plug into the same reporter the fetcher
     stats use — the engine-side twin of the reference's API counters."""
-    from automated_data_pipeline_python_spark.observability import observe_counters
+    from pyspark.sql import Observation
     from pyspark.sql import functions as F
 
-    df, obs = observe_counters(
-        spark.range(1000).withColumn("v", F.col("id") % 7),
-        "status_obs",
-        rows=F.count(F.lit(1)),
-        sum_v=F.sum("v"),
+    obs = Observation("status_obs")
+    df = spark.range(1000).withColumn("v", F.col("id") % 7).observe(
+        obs, F.count(F.lit(1)).alias("rows"), F.sum("v").alias("sum_v")
     )
     df.write.format("noop").mode("overwrite").save()  # action populates obs
     out = io.StringIO()

@@ -12,15 +12,14 @@ from __future__ import annotations
 import asyncio
 import json
 import threading
+import time
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 
 import pytest
-from pyspark.sql import functions as F
 
 from automated_data_pipeline_python_spark.ingest.fetcher import (
     RetryingFetcher,
     collect_with_enrichment,
-    paginate,
 )
 from automated_data_pipeline_python_spark.ingest.transport import (
     HttpStatusError,
@@ -33,10 +32,13 @@ PER_PAGE = 25
 
 
 class _ApiHandler(BaseHTTPRequestHandler):
-    """Cursor-paginated listing + per-item enrichment + failure routes."""
+    """Cursor-paginated listing + per-item enrichment + failure routes,
+    and a slow route that records its peak number of requests in flight."""
 
     flaky_hits: dict[str, int] = {}
-    meta_hits: dict[str, int] = {}
+    in_flight = 0
+    peak_in_flight = 0
+    lock = threading.Lock()
 
     def _json(self, status: int, payload: dict) -> None:
         body = json.dumps(payload).encode()
@@ -57,20 +59,16 @@ class _ApiHandler(BaseHTTPRequestHandler):
             self._json(200, {"items": items, "next": nxt})
         elif self.path.startswith("/meta/"):
             k = int(self.path.rsplit("/", 1)[1])
-            self.meta_hits[self.path] = self.meta_hits.get(self.path, 0) + 1
             self._json(200, {"rarity": k % 3, "family": f"fam{k}"})
-        elif self.path.startswith("/traits/"):
-            k = int(self.path.rsplit("/", 1)[1])
-            self.meta_hits[self.path] = self.meta_hits.get(self.path, 0) + 1
-            self._json(
-                200,
-                {
-                    "attributes": [
-                        {"trait_type": "color", "value": ["red", "green", "blue"][k % 3]},
-                        {"trait_type": "tier", "value": str(k % 4)},
-                    ]
-                },
-            )
+        elif self.path == "/slow":
+            cls = type(self)
+            with cls.lock:
+                cls.in_flight += 1
+                cls.peak_in_flight = max(cls.peak_in_flight, cls.in_flight)
+            time.sleep(0.1)
+            with cls.lock:
+                cls.in_flight -= 1
+            self._json(200, {"ok": True})
         elif self.path == "/moved":
             self.send_response(301)
             self.send_header("Location", "/meta/3")
@@ -90,13 +88,18 @@ class _ApiHandler(BaseHTTPRequestHandler):
         pass
 
 
+class _Server(ThreadingHTTPServer):
+    request_queue_size = 64  # a burst of connects must not overflow the listen backlog
+
+
 @pytest.fixture(scope="module")
 def api_base():
-    server = ThreadingHTTPServer(("127.0.0.1", 0), _ApiHandler)
+    server = _Server(("127.0.0.1", 0), _ApiHandler)
     thread = threading.Thread(target=server.serve_forever, daemon=True)
     thread.start()
     yield f"http://127.0.0.1:{server.server_address[1]}"
     server.shutdown()
+    server.server_close()
     thread.join(timeout=5)
 
 
@@ -105,21 +108,6 @@ def test_make_transport_binds_available_client():
     # the urllib3 pool rather than raise.
     t = make_transport()
     assert isinstance(t, PooledHttpTransport)
-
-
-def test_paginate_through_real_pool(api_base):
-    with PooledHttpTransport(headers={"X-Api-Key": "test"}) as transport:
-        fetcher = RetryingFetcher(transport, max_concurrency=8)
-        items = asyncio.run(
-            paginate(
-                fetcher,
-                f"{api_base}/collection/page/0",
-                lambda page, url: (api_base + page["next"]) if page.get("next") else None,
-            )
-        )
-    assert len(items) == N_PAGES * PER_PAGE
-    assert fetcher.stats.pages == N_PAGES
-    assert [it["identifier"] for it in items[:3]] == ["0", "1", "2"]
 
 
 def test_collect_with_enrichment_real_client(api_base):
@@ -137,9 +125,26 @@ def test_collect_with_enrichment_real_client(api_base):
                 workers=8,
             )
         )
-    assert len(out) == N_PAGES * PER_PAGE
+    assert sorted(int(item["identifier"]) for item in out) == list(range(N_PAGES * PER_PAGE))
+    assert listf.stats.pages == N_PAGES
     assert all("rarity" in item for item in out)
     assert enrichf.stats.enriched == N_PAGES * PER_PAGE
+
+
+def test_requests_in_flight_reach_the_pool_size(api_base):
+    """Every pooled connection can carry a request at once: the
+    transport's threads, not the loop's default executor
+    (min(32, cpus + 4) threads), bound the requests in flight."""
+    n = 12
+    _ApiHandler.peak_in_flight = 0
+    with PooledHttpTransport(maxsize=n) as transport:
+        fetcher = RetryingFetcher(transport, max_concurrency=n)
+
+        async def burst():
+            return await asyncio.gather(*(fetcher.get(f"{api_base}/slow") for _ in range(3 * n)))
+
+        assert all(r == {"ok": True} for r in asyncio.run(burst()))
+    assert _ApiHandler.peak_in_flight == n
 
 
 def test_retry_on_503_then_success(api_base):
@@ -169,98 +174,3 @@ def test_non_2xx_raises_with_status(api_base):
         with pytest.raises(HttpStatusError) as exc:
             asyncio.run(fetcher.get(f"{api_base}/nope"))
     assert exc.value.status == 404
-
-
-def test_distributed_enrichment_zero_driver_collect(spark, api_base):
-    """The scale path: mapInPandas over distinct-URL partitions against
-    the LIVE server. The executor-side transport is built per partition;
-    the global distinct preserves duplicate-URL-fetched-once (the
-    reference's response-cache property) — asserted via server-side hit
-    counters, which executors (separate worker processes) cannot touch
-    except through real HTTP."""
-    from automated_data_pipeline_python_spark.ingest.enrich import (
-        enrichment_join,
-        fetch_distinct_urls_distributed,
-    )
-
-    _ApiHandler.meta_hits.clear()
-    n_urls = 10
-    rows = [
-        (str(i), f"{api_base}/traits/{i % n_urls}") for i in range(40)
-    ] + [("x", None), ("y", "")]
-    nfts = spark.createDataFrame(rows, ["identifier", "metadata_url"])
-
-    meta = fetch_distinct_urls_distributed(
-        nfts,
-        transport_factory=PooledHttpTransport,
-        max_concurrency=4,
-        partitions=3,
-    )
-    got = {r.metadata_url: r.traits for r in meta.collect()}
-    assert len(got) == n_urls
-    for url, traits in got.items():
-        k = int(url.rsplit("/", 1)[1])
-        assert [t.asDict() for t in traits] == [
-            {"trait_type": "color", "value": ["red", "green", "blue"][k % 3]},
-            {"trait_type": "tier", "value": str(k % 4)},
-        ]
-    # duplicate-URL-fetched-once: every traits URL hit exactly once
-    trait_hits = {p: n for p, n in _ApiHandler.meta_hits.items() if p.startswith("/traits/")}
-    assert len(trait_hits) == n_urls
-    assert all(n == 1 for n in trait_hits.values()), trait_hits
-
-    joined = enrichment_join(nfts, meta)
-    with_traits = joined.where(F.col("traits").isNotNull()).count()
-    assert with_traits == 40  # every URL-bearing row enriched
-
-
-def test_auto_enrichment_routes_by_distinct_count(spark, api_base):
-    """fetch_distinct_urls_auto: the distributed path is the DEFAULT
-    above the threshold, the driver path below it — and both return the
-    same (url, traits) table. Path taken is observable in the plan:
-    the driver path localizes rows (LocalTableScan / ExistingRDD,
-    fetch already done), the distributed path keeps a MapInPandas
-    stage (fetch happens on executors at collect time)."""
-    from automated_data_pipeline_python_spark.ingest.enrich import (
-        fetch_distinct_urls_auto,
-    )
-
-    n_urls = 8
-    rows = [
-        (str(i), f"{api_base}/traits/{i % n_urls}") for i in range(32)
-    ] + [("x", None), ("y", "")]
-    nfts = spark.createDataFrame(rows, ["identifier", "metadata_url"])
-
-    def plan(df):
-        return df._jdf.queryExecution().executedPlan().toString()
-
-    # Above threshold -> executor-side fetch (MapInPandas stage).
-    _ApiHandler.meta_hits.clear()
-    dist = fetch_distinct_urls_auto(
-        nfts,
-        transport_factory=PooledHttpTransport,
-        max_concurrency=4,
-        driver_side_limit=3,
-        partitions=2,
-    )
-    assert "MapInPandas" in plan(dist)
-    dist_rows = {r.metadata_url: [t.asDict() for t in r.traits] for r in dist.collect()}
-    assert len(dist_rows) == n_urls
-    hits_dist = dict(_ApiHandler.meta_hits)
-
-    # Below threshold -> driver-side fetch (already localized).
-    _ApiHandler.meta_hits.clear()
-    drv = fetch_distinct_urls_auto(
-        nfts,
-        transport_factory=PooledHttpTransport,
-        max_concurrency=4,
-        driver_side_limit=10_000,
-    )
-    assert "MapInPandas" not in plan(drv)
-    drv_rows = {r.metadata_url: [t.asDict() for t in r.traits] for r in drv.collect()}
-    hits_drv = dict(_ApiHandler.meta_hits)
-
-    # Identical results across paths; each URL fetched exactly once by both.
-    assert drv_rows == dist_rows
-    assert hits_dist == hits_drv
-    assert all(n == 1 for p, n in hits_drv.items() if p.startswith("/traits/"))
