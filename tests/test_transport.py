@@ -110,6 +110,28 @@ def test_make_transport_binds_available_client():
     assert isinstance(t, PooledHttpTransport)
 
 
+def test_paginate_through_real_pool(api_base):
+    """The producer follows the page cursor to its end over a real
+    pool; items without an enrichment URL pass through unfetched."""
+    with PooledHttpTransport(headers={"X-Api-Key": "test"}) as transport:
+        listf = RetryingFetcher(transport, max_concurrency=8)
+        enrichf = RetryingFetcher(transport, max_concurrency=8)
+        items = asyncio.run(
+            collect_with_enrichment(
+                listf,
+                enrichf,
+                f"{api_base}/collection/page/0",
+                lambda page, url: (api_base + page["next"]) if page.get("next") else None,
+                lambda item: None,
+                lambda item, extra: {**item, **extra},
+                workers=8,
+            )
+        )
+    assert sorted(int(it["identifier"]) for it in items) == list(range(N_PAGES * PER_PAGE))
+    assert listf.stats.pages == N_PAGES
+    assert enrichf.stats.enriched == 0
+
+
 def test_collect_with_enrichment_real_client(api_base):
     with PooledHttpTransport() as transport:
         listf = RetryingFetcher(transport, max_concurrency=8)
