@@ -10,7 +10,8 @@ stage idiomatically:
                    (reference pipeline/collectors/nft.py, utils/api.py)
 - ``transport``  — pooled HTTP clients for the fetcher's injectable
                    fetch seam (reference utils/api.py:33-46)
-- ``normalize``  — schema application, cast, projections, trait explode
+- ``normalize``  — one Arrow table from the collected dicts, cast,
+                   projections, trait explode
                    (reference pipeline/transform/normalize.py)
 - ``store``      — parquet sink (reference pipeline/load/store.py)
 """

@@ -52,13 +52,3 @@ TRAITS_SCHEMA = T.StructType(
         T.StructField("value", T.StringType()),
     ]
 )
-
-# Driver testdata star schema (FIXTURES.md §B). Parquet timestamps are
-# isAdjustedToUTC=false → Spark reads TimestampNTZType.
-EVENT_PROPS_SCHEMA = T.StructType(
-    [
-        T.StructField("device", T.StringType()),
-        T.StructField("country", T.StringType()),
-        T.StructField("session", T.StringType()),
-    ]
-)

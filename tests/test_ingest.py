@@ -8,6 +8,7 @@ duplicate URLs, non-numeric identifier, empty input.
 from __future__ import annotations
 
 import asyncio
+import re
 
 import pytest
 
@@ -20,6 +21,7 @@ from automated_data_pipeline_python_spark.ingest.normalize import (
     normalize_nfts,
 )
 from automated_data_pipeline_python_spark.ingest.store import write_tables
+from automated_data_pipeline_python_spark.schemas import NFTS_SCHEMA, TRAITS_SCHEMA
 from automated_data_pipeline_python_spark.sources.files import write_parquet
 
 RAW_RECORDS = [
@@ -55,6 +57,29 @@ RAW_RECORDS = [
     },
 ]
 
+# Non-string JSON scalars in string fields, an int identifier, extra and
+# missing keys (top level and inside a trait), and a null trait element.
+COERCION_RECORDS = [
+    {
+        "identifier": 7,
+        "collection": "c",
+        "name": 5,
+        "rarity_rank": 12,  # extra key: dropped
+        "traits": [
+            {"trait_type": "int", "value": 5},
+            {"trait_type": "float", "value": 1e-05},
+            {"trait_type": "bool", "value": True},
+            {"trait_type": "dict", "value": {"x": 1}},
+            None,
+            {"trait_type": "extra", "value": "v", "display_type": "number"},
+            {"trait_type": "missing"},
+        ],
+    },
+    {"identifier": "8", "name": 1e-05, "traits": None},
+    {"identifier": "9", "name": True, "traits": []},
+    {"identifier": "10", "name": {"x": 1}},
+]
+
 
 class TestNormalize:
     def test_schema_applied_and_cast(self, spark):
@@ -86,6 +111,74 @@ class TestNormalize:
         tables = normalize_nfts(from_records(spark, []))
         assert tables["nfts"].count() == 0
         assert tables["traits"].columns == ["identifier", "trait_type", "value"]
+
+    def test_string_coercion_and_key_matching(self, spark):
+        # JSON scalars in string fields become their string form (bools
+        # lowercased); extra keys are dropped and missing keys read null,
+        # at the top level and inside a trait.
+        tables = normalize_nfts(from_records(spark, COERCION_RECORDS))
+        assert sorted(tuple(r) for r in tables["nfts"].collect()) == [
+            (7, "c", None, None, "5", None),
+            (8, None, None, None, "1e-05", None),
+            (9, None, None, None, "true", None),
+            (10, None, None, None, "{'x': 1}", None),
+        ]
+        assert sorted((tuple(r) for r in tables["traits"].collect()), key=repr) == sorted(
+            [
+                (7, "int", "5"),
+                (7, "float", "1e-05"),
+                (7, "bool", "true"),
+                (7, "dict", "{'x': 1}"),
+                (7, None, None),  # a null trait explodes to a null struct
+                (7, "extra", "v"),
+                (7, "missing", None),
+            ],
+            key=repr,
+        )
+
+    def test_output_schemas_match_declared(self, spark):
+        tables = normalize_nfts(from_records(spark, RAW_RECORDS))
+        assert tables["nfts"].schema == NFTS_SCHEMA
+        assert tables["traits"].schema == TRAITS_SCHEMA
+
+    @pytest.mark.parametrize(
+        "record, where",
+        [
+            ({"identifier": "1", "traits": "notalist"}, "record 1: traits "),
+            ({"identifier": "1", "traits": {"trait_type": "a"}}, "record 1: traits "),
+            ({"identifier": "1", "traits": ["abc"]}, "record 1: traits[0] "),
+            ({"identifier": "1", "traits": [None, 5]}, "record 1: traits[1] "),
+            # Divergence 3: a positional [trait_type, value] pair is not
+            # read as a struct.
+            ({"identifier": "1", "traits": [["a", "b"]]}, "record 1: traits[0] "),
+            ("abc", "record 1 "),
+        ],
+    )
+    def test_malformed_record_raises_type_error(self, spark, record, where):
+        with pytest.raises(TypeError, match=re.escape(where)):
+            from_records(spark, [RAW_RECORDS[0], record])
+
+    def test_arrow_conf_off_gives_same_rows(self, spark):
+        key = "spark.sql.execution.arrow.pyspark.enabled"
+        before = spark.conf.get(key, None)
+        records = RAW_RECORDS + COERCION_RECORDS
+
+        def rows() -> dict[str, list]:
+            tables = normalize_nfts(from_records(spark, records))
+            return {k: sorted(df.collect(), key=repr) for k, df in tables.items()}
+
+        try:
+            spark.conf.set(key, "true")
+            on = rows()
+            spark.conf.set(key, "false")
+            off = rows()
+        finally:
+            if before is None:
+                spark.conf.unset(key)
+            else:
+                spark.conf.set(key, before)
+        assert off == on
+        assert len(on["nfts"]) == 7 and len(on["traits"]) == 9
 
 
 class TestStore:
