@@ -2,5 +2,8 @@
 
 from automated_data_pipeline_python_spark.plans.inspect import (  # noqa: F401
     PlanReport,
+    executed_plan,
+    has_single_partition_window,
     plan_report,
+    subtrees,
 )

@@ -1,20 +1,18 @@
 """DuckDB-oracle comparison helper mirroring the driver's t2 gate.
 
-Canonicalization (FIXTURES.md): sort columns by name, sort rows by all
-columns, round doubles, render timestamps ISO, normalize nulls — then
-compare cell-by-cell.
+Canonicalization is `tools/verify_driver.rows_canon`, the one the
+driver-contract verifier, `tools/result_hash.py` and perfbench use:
+sort columns by name, render each cell (floats at full `%.17g`
+precision, timestamps ISO, nulls/NaN as `<null>`), sort the rows —
+then compare row by row.
 """
 
 from __future__ import annotations
 
-import math
-
 import duckdb
-import pandas as pd
 
 from automated_data_pipeline_python_spark.tables import TABLE_NAMES
-
-ROUND_DIGITS = 6
+from tools.verify_driver import rows_canon
 
 
 def duckdb_conn(sf_dir: str) -> duckdb.DuckDBPyConnection:
@@ -24,40 +22,18 @@ def duckdb_conn(sf_dir: str) -> duckdb.DuckDBPyConnection:
     return con
 
 
-def _canon_cell(v):
-    if v is None or v is pd.NaT:
-        return "<null>"
-    if isinstance(v, float):
-        if math.isnan(v):
-            return "<null>"
-        if v == 0:
-            v = 0.0
-        # Relative rounding so big doubles (sums) compare stably too.
-        return f"{v:.{ROUND_DIGITS}e}"
-    if isinstance(v, pd.Timestamp):
-        return v.isoformat()
-    if isinstance(v, (list, tuple)) or hasattr(v, "tolist"):
-        seq = v.tolist() if hasattr(v, "tolist") else v
-        return "[" + ",".join(_canon_cell(x) for x in seq) + "]"
-    return repr(v)
-
-
-def canonicalize(df: pd.DataFrame) -> list[tuple]:
-    cols = sorted(df.columns)
-    rows = [tuple(_canon_cell(v) for v in row) for row in df[cols].itertuples(index=False)]
-    return sorted(rows)
-
-
 def assert_matches_oracle(spark_df, con: duckdb.DuckDBPyConnection, sql: str, name: str = "") -> None:
-    actual = spark_df.toPandas()
-    expected = con.execute(sql).df()
-    assert sorted(actual.columns) == sorted(expected.columns), (
-        f"{name}: column mismatch spark={sorted(actual.columns)} duckdb={sorted(expected.columns)}"
+    actual = spark_df.collect()
+    cur = con.execute(sql)
+    cols = [d[0] for d in cur.description]
+    expected = cur.fetchall()
+    assert sorted(spark_df.columns) == sorted(cols), (
+        f"{name}: column mismatch spark={sorted(spark_df.columns)} duckdb={sorted(cols)}"
     )
     assert len(actual) == len(expected), (
         f"{name}: row count spark={len(actual)} duckdb={len(expected)}"
     )
-    a, e = canonicalize(actual), canonicalize(expected)
+    a, e = rows_canon(spark_df.columns, actual), rows_canon(cols, expected)
     if a != e:
         diffs = [(x, y) for x, y in zip(a, e) if x != y][:5]
         raise AssertionError(f"{name}: value mismatch; first diffs {diffs}")

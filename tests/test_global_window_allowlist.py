@@ -10,24 +10,22 @@ over provably bounded relations:
   cardinality bounded by the value grid, not the corpus);
 - fixed-size seed/vocab relations (rank-capped, e.g. `rk <= 40`).
 
-Every allowlisted query below was audited (tools/audit_global_windows.py)
-and falls in one of those classes — the justification is the comment.
-A new query that plans a single-partition window without being added
-here (with a bounded-input justification) fails this test.
+Every allowlisted query below was audited by hand and falls in one of
+those classes — the justification is the comment. A new query that
+plans a single-partition window without being added here (with a
+bounded-input justification) fails this test.
 
-Queries that eagerly materialize (localCheckpoint) at build time hide
-any window inside the materialized stage from the returned plan — the
-checkpoint spy test below closes that blind spot by intercepting
-DataFrame.localCheckpoint during build and running the same detector
-on every checkpointed stage's plan (VERDICT r6 task 4).
+The plans come from the session's one catalog sweep (`catalog_plans`
+in tests/conftest.py: every query built once at sf0.01). Queries that
+eagerly materialize (localCheckpoint) at build time hide any window
+inside the materialized stage from the returned plan; the sweep's
+localCheckpoint spy records each checkpointed stage's plan, and the
+same detector runs on those (VERDICT r6 task 4).
 """
 
 from __future__ import annotations
 
-import re
-
-from automated_data_pipeline_python_spark.queries import QUERIES
-from tests.conftest import SF_SMOKE
+from automated_data_pipeline_python_spark.plans import has_single_partition_window
 
 # query -> bounded-input justification (audited 2026-08, round 6)
 ALLOWED = {
@@ -83,54 +81,12 @@ ALLOWED = {
 }
 
 
-def _indent(line: str) -> int:
-    m = re.match(r"[\s:+\-*()0-9]*", line)
-    return m.end() if m else 0
-
-
-def _has_single_partition_window(plan_text: str) -> bool:
-    """True if a Window node's own input spine is single-partitioned.
-
-    The window's required distribution is installed by the FIRST
-    Exchange on its unary input chain (through Sort/WindowGroupLimit/
-    codegen wrappers). A SinglePartition exchange elsewhere in the
-    subtree (e.g. a scalar aggregate cross-joined below) is some other
-    operator's requirement, not the window's — walking the whole
-    subtree false-positives on those.
-    """
-    unary = re.compile(
-        r"^(\*\(\d+\)\s*)?(Sort|WindowGroupLimit|InputAdapter|"
-        r"WholeStageCodegen|Project|Filter|ColumnarToRow)\b"
+def test_no_unlisted_single_partition_windows(catalog_plans):
+    offenders = sorted(
+        name
+        for name, p in catalog_plans.items()
+        if has_single_partition_window(p.final) and name not in ALLOWED
     )
-    lines = plan_text.splitlines()
-    for i, line in enumerate(lines):
-        s = line.strip()
-        if not (s.startswith("Window") or " Window " in line):
-            continue
-        depth = _indent(line)
-        spine_ok = True
-        for nxt in lines[i + 1 :]:
-            if nxt.strip() and _indent(nxt) <= depth:
-                break
-            body = nxt.strip().lstrip(":+- ")
-            if not body:
-                continue
-            if "Exchange" in body:
-                if spine_ok and "Exchange SinglePartition" in body:
-                    return True
-                break
-            if not unary.match(body):
-                spine_ok = False
-    return False
-
-
-def test_no_unlisted_single_partition_windows(spark):
-    offenders = []
-    for name in sorted(QUERIES):
-        df = QUERIES[name].fn(spark, SF_SMOKE)
-        text = df._jdf.queryExecution().executedPlan().toString()
-        if _has_single_partition_window(text) and name not in ALLOWED:
-            offenders.append(name)
     assert offenders == [], (
         "single-partition WindowExec without a bounded-input entry in "
         f"ALLOWED: {offenders}"
@@ -160,69 +116,46 @@ CHECKPOINT_ALLOWED = {
 }
 
 
-def test_no_unlisted_windows_inside_checkpointed_stages(spark, monkeypatch):
+def _checkpoints_a_global_window(plan) -> bool:
+    return any(has_single_partition_window(t) for t in plan.checkpoints)
+
+
+def test_no_unlisted_windows_inside_checkpointed_stages(catalog_plans):
     """localCheckpoint(eager=True) during build hides the materialized
-    stage from the returned plan — spy on it and run the same
-    single-partition-window detector on every checkpointed stage."""
-    from pyspark.sql.classic.dataframe import DataFrame as ClassicDF
-
-    captured: list[str] = []
-    orig = ClassicDF.localCheckpoint
-
-    def spy(self, eager=True):
-        captured.append(
-            self._jdf.queryExecution().executedPlan().toString()
-        )
-        return orig(self, eager=eager)
-
-    monkeypatch.setattr(ClassicDF, "localCheckpoint", spy)
-    offenders = []
-    for name in sorted(QUERIES):
-        captured.clear()
-        QUERIES[name].fn(spark, SF_SMOKE)
-        if name in CHECKPOINT_ALLOWED:
-            continue
-        if any(_has_single_partition_window(t) for t in captured):
-            offenders.append(name)
+    stage from the returned plan — run the same single-partition-window
+    detector on every checkpointed stage the sweep recorded."""
+    offenders = sorted(
+        name
+        for name, p in catalog_plans.items()
+        if name not in CHECKPOINT_ALLOWED and _checkpoints_a_global_window(p)
+    )
     assert offenders == [], (
         "single-partition WindowExec inside a checkpointed stage without "
         f"a bounded-input entry in CHECKPOINT_ALLOWED: {offenders}"
     )
 
 
-def test_checkpoint_allowlist_has_no_stale_entries(spark, monkeypatch):
+def test_checkpoint_allowlist_has_no_stale_entries(catalog_plans):
     """Every CHECKPOINT_ALLOWED entry still checkpoints a stage with a
     global window — keeps the allowlist honest across redesigns."""
-    from pyspark.sql.classic.dataframe import DataFrame as ClassicDF
-
-    captured: list[str] = []
-    orig = ClassicDF.localCheckpoint
-
-    def spy(self, eager=True):
-        captured.append(
-            self._jdf.queryExecution().executedPlan().toString()
-        )
-        return orig(self, eager=eager)
-
-    monkeypatch.setattr(ClassicDF, "localCheckpoint", spy)
-    stale = []
-    for name in sorted(CHECKPOINT_ALLOWED):
-        captured.clear()
-        QUERIES[name].fn(spark, SF_SMOKE)
-        if not any(_has_single_partition_window(t) for t in captured):
-            stale.append(name)
+    stale = sorted(
+        name
+        for name in CHECKPOINT_ALLOWED
+        if name not in catalog_plans
+        or not _checkpoints_a_global_window(catalog_plans[name])
+    )
     assert stale == [], (
         f"CHECKPOINT_ALLOWED entries with no checkpointed global window: {stale}"
     )
 
 
-def test_allowlist_has_no_stale_entries(spark):
+def test_allowlist_has_no_stale_entries(catalog_plans):
     """Every ALLOWED entry still plans a global window — keeps the
     allowlist honest when a query is redesigned away from one."""
-    stale = []
-    for name in sorted(ALLOWED):
-        df = QUERIES[name].fn(spark, SF_SMOKE)
-        text = df._jdf.queryExecution().executedPlan().toString()
-        if not _has_single_partition_window(text):
-            stale.append(name)
+    stale = sorted(
+        name
+        for name in ALLOWED
+        if name not in catalog_plans
+        or not has_single_partition_window(catalog_plans[name].final)
+    )
     assert stale == [], f"ALLOWED entries that no longer global-window: {stale}"

@@ -8,19 +8,19 @@ broadcast plan at small scale and a shuffle join at large scale.
 
 Detection: with ``autoBroadcastJoinThreshold=-1`` the ONLY broadcasts
 left in a plan are hint-driven.  We then assert no BroadcastExchange
-subtree contains a raw (un-aggregated) scan of customer/supplier/part.
+subtree contains a raw (un-aggregated) scan of customer/supplier/part,
+in the returned plan or in any stage the builder localCheckpointed.
 Hints on fixed-size tables (nation: 25 rows, region: 5 rows) and on
 derived aggregates (provably shrunk) remain allowed.
 """
 
 from __future__ import annotations
 
-import re
-
 import pytest
 
+from automated_data_pipeline_python_spark.plans import executed_plan, subtrees
 from automated_data_pipeline_python_spark.queries import QUERIES
-from tests.conftest import SF_SMOKE
+from tests.conftest import SF_SMOKE, checkpointed_plans
 
 SCALING_TABLES = (
     "customer.parquet",
@@ -31,9 +31,10 @@ SCALING_TABLES = (
     "events.parquet",
 )
 
-# The relational/TPC-H families are where the star joins live; their
-# query builders are plan-pure (no localCheckpoint / execution at build
-# time), so constructing every plan is cheap.
+# The relational/TPC-H families are where the star joins live. A few of
+# their builders localCheckpoint at build time (at threshold -1:
+# dq_key_skew_report, dq_t_closeness, profile_orders_columns,
+# q15_top_supplier), so the checkpointed stages are checked too.
 FAMILIES = (
     "queries.relational",
     "queries.relational2",
@@ -61,42 +62,20 @@ def _family_queries():
     )
 
 
-def _indent(line: str) -> int:
-    """Tree depth proxy: column where the node name starts."""
-    m = re.match(r"[\s:+\-*()0-9]*", line)
-    return m.end() if m else 0
-
-
-def _broadcast_subtrees(plan_text: str) -> list[str]:
-    """Return the subtree text under each BroadcastExchange node."""
-    lines = plan_text.splitlines()
-    subtrees = []
-    for i, line in enumerate(lines):
-        if "BroadcastExchange" not in line:
-            continue
-        depth = _indent(line)
-        sub = []
-        for nxt in lines[i + 1 :]:
-            if nxt.strip() and _indent(nxt) <= depth:
-                break
-            sub.append(nxt)
-        subtrees.append("\n".join(sub))
-    return subtrees
-
-
 @pytest.mark.parametrize("name", _family_queries())
 def test_no_hinted_broadcast_of_scaling_tables(spark, name):
     prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
-        df = QUERIES[name].fn(spark, SF_SMOKE)
-        text = df._jdf.queryExecution().executedPlan().toString()
+        with checkpointed_plans() as staged:
+            final = executed_plan(QUERIES[name].fn(spark, SF_SMOKE))
     finally:
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-    for sub in _broadcast_subtrees(text):
-        for table in SCALING_TABLES:
-            if table in sub and "Aggregate" not in sub:
-                pytest.fail(
-                    f"{name}: hinted broadcast of scale-growing {table} "
-                    f"(survives autoBroadcastJoinThreshold=-1):\n{sub}"
-                )
+    for plan in (final, *staged):
+        for sub in subtrees(plan, "BroadcastExchange"):
+            for table in SCALING_TABLES:
+                if table in sub and "Aggregate" not in sub:
+                    pytest.fail(
+                        f"{name}: hinted broadcast of scale-growing {table} "
+                        f"(survives autoBroadcastJoinThreshold=-1):\n{sub}"
+                    )

@@ -23,9 +23,6 @@ def _plan(spark, name: str) -> str:
     buf = io.StringIO()
     with redirect_stdout(buf):
         df.explain("formatted")
-    for t in spark.catalog.listTables():
-        if t.isTemporary:
-            spark.catalog.dropTempView(t.name)
     return buf.getvalue()
 
 

@@ -22,7 +22,7 @@ import pytest
 from hypothesis import HealthCheck, given, settings
 from hypothesis import strategies as st
 
-from tests.oracle import canonicalize
+from tools.verify_driver import rows_canon
 
 SF = "/root/testdata/sf0.001"
 
@@ -144,6 +144,8 @@ def engines(spark):
 @given(sql=query())
 def test_generated_sql_agrees_across_engines(engines, sql):
     spark, con = engines
-    got = canonicalize(spark.sql(sql).toPandas())
-    want = canonicalize(con.execute(sql).df())
+    sdf = spark.sql(sql)
+    got = rows_canon(sdf.columns, sdf.collect())
+    cur = con.execute(sql)
+    want = rows_canon([d[0] for d in cur.description], cur.fetchall())
     assert got == want, sql

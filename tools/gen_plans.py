@@ -61,16 +61,18 @@ def main() -> None:
         "  materialize a shared subtree via `localCheckpoint` (the",
         "  dedup/ANN/LM families) carry their parquet scans inside the",
         "  checkpointed stage, which the returned plan no longer shows —",
-        "  those stages are separately audited by the checkpoint spy in",
-        "  tests/test_global_window_allowlist.py.",
+        "  those stages are recorded by the localCheckpoint spy of the",
+        "  `catalog_plans` sweep (tests/conftest.py).",
         "- *exchanges*: shuffles in the executed plan (post-AQE; reused",
         "  exchanges excluded). Star joins show low counts because every",
-        "  dimension broadcasts. For queries that localCheckpoint a",
-        "  shared subtree (the ANN eval family), exchange/codegen counts",
-        "  can shift a few units between generation sessions as exchange",
-        "  reuse kicks in or not — the load-bearing columns (scans,",
-        "  pushed filters, joins, python stages) are session-stable and",
-        "  are what tests/test_plans.py pins.",
+        "  dimension broadcasts.",
+        "- *not reproducible*: each row is read after its query runs, so",
+        "  it records AQE's run-time choices. Exchange, join and codegen",
+        "  counts can differ between two generation runs of one tree (two",
+        "  sf0.01 runs differed in 6 rows; one query planned 3 broadcast +",
+        "  0 sort-merge joins in some runs and 2 + 1 in others). Read it as",
+        "  one run's census, not a pin: tests/test_plans.py asserts most",
+        "  shapes on the plans as built, before they execute.",
         "- *python stages*: Arrow-batched Python boundaries. Only the",
         "  as-of join carries one — everything else is JVM/codegen.",
         "",

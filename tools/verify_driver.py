@@ -24,10 +24,9 @@ sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 import duckdb
 from pyspark.sql import SparkSession
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
+from automated_data_pipeline_python_spark.tables import TABLE_NAMES
+
+TABLES = list(TABLE_NAMES)
 
 
 def canon(v):
