@@ -4,18 +4,14 @@ The reference ships a pooled HTTP/2 httpx AsyncClient as its one real
 transport (reference pipeline/utils/api.py:33-46: shared client,
 connection pool, timeout, default headers). The engine keeps the seam
 injectable (``FetchFn = Callable[[str], Awaitable[dict]]``) and this
-module provides the real bindings:
-
-- :class:`HttpxTransport` — pooled HTTP/2 client, used when httpx is
-  importable (deployment image). Import-gated: this container does not
-  ship httpx.
-- :class:`PooledHttpTransport` — urllib3 ``PoolManager`` binding
-  (pooled keep-alive HTTP/1.1, stdlib-adjacent, present everywhere
-  Spark's Python is). Sync client bridged onto the event loop through
-  the transport's own ``maxsize``-thread executor so the async fetcher
-  pipeline (``RetryingFetcher`` / ``collect_with_enrichment``) drives
-  it unchanged; requests in flight are bounded by the smaller of
-  ``maxsize`` and the fetcher's ``max_concurrency``.
+module provides the one real binding, :class:`PooledHttpTransport`: a
+urllib3 ``PoolManager`` (pooled keep-alive HTTP/1.1, stdlib-adjacent,
+present everywhere Spark's Python is). The sync client is bridged onto
+the event loop through the transport's own ``maxsize``-thread executor
+so the async fetcher pipeline (``RetryingFetcher`` /
+``collect_with_enrichment``) drives it unchanged; requests in flight
+are bounded by the smaller of ``maxsize`` and the fetcher's
+``max_concurrency``.
 
 Transport contract (what ``RetryingFetcher`` expects):
 - return the decoded JSON dict on 2xx,
@@ -23,8 +19,6 @@ Transport contract (what ``RetryingFetcher`` expects):
   policy (attempts/backoff/jitter) lives in ``RetryingFetcher``
   (reference api.py:154 @retry), never in the transport,
 - no retries, no sleeps, no global state inside the transport itself.
-
-``make_transport`` picks the best available binding.
 """
 
 from __future__ import annotations
@@ -34,12 +28,7 @@ import json
 from concurrent.futures import ThreadPoolExecutor
 from typing import Any
 
-__all__ = [
-    "HttpStatusError",
-    "HttpxTransport",
-    "PooledHttpTransport",
-    "make_transport",
-]
+__all__ = ["HttpStatusError", "PooledHttpTransport"]
 
 
 class HttpStatusError(Exception):
@@ -111,54 +100,3 @@ class PooledHttpTransport:
 
     def __exit__(self, *exc: object) -> None:
         self.close()
-
-
-class HttpxTransport:
-    """httpx-backed pooled HTTP/2 transport (deployment binding).
-
-    Exact reference-parity client (api.py:33-46: http2=True, shared
-    AsyncClient, pool limits, default headers). Import-gated — raises
-    ImportError where httpx is absent; ``make_transport`` falls back to
-    :class:`PooledHttpTransport` there.
-    """
-
-    def __init__(
-        self,
-        headers: dict[str, str] | None = None,
-        timeout_s: float = 30.0,
-        max_connections: int = 15,
-    ) -> None:
-        import httpx  # deployment-only dependency
-
-        self._client = httpx.AsyncClient(
-            http2=True,
-            headers=headers or {},
-            timeout=timeout_s,
-            limits=httpx.Limits(max_connections=max_connections),
-        )
-
-    async def __call__(self, url: str) -> dict[str, Any]:
-        resp = await self._client.get(url)
-        if not 200 <= resp.status_code < 300:
-            raise HttpStatusError(url, resp.status_code, resp.text)
-        return resp.json()
-
-    async def aclose(self) -> None:
-        await self._client.aclose()
-
-
-def make_transport(
-    headers: dict[str, str] | None = None,
-    timeout_s: float = 30.0,
-    max_connections: int = 15,
-):
-    """Best available pooled transport: httpx (HTTP/2) when importable,
-    else urllib3. Returns an async callable satisfying ``FetchFn``."""
-    try:
-        return HttpxTransport(
-            headers=headers, timeout_s=timeout_s, max_connections=max_connections
-        )
-    except ImportError:
-        return PooledHttpTransport(
-            headers=headers, timeout_s=timeout_s, maxsize=max_connections
-        )

@@ -1157,14 +1157,15 @@ def _mre_round(prev: str, out: str) -> str:
 )"""
 
 
-def _mre_sql(ts: str) -> str:
-    variants = " UNION ALL ".join(
-        f"SELECT '{v}' AS variant" for v in ("base",) + _MRE_CHANNELS
-    )
-    rounds = ",\n".join(
-        _mre_round(f"v{r - 1}", f"v{r}").lstrip()
-        for r in range(1, _MRE_ROUNDS + 1)
-    )
+_MRE_VARIANTS = "variants AS ({})".format(" UNION ALL ".join(
+    f"SELECT '{v}' AS variant" for v in ("base",) + _MRE_CHANNELS
+))
+
+
+def _mre_mat_v_ctes(ts: str) -> str:
+    """The WITH list up to ``mat_v``: the snapped transition matrix of
+    the truncated journeys, one copy per variant with the removed
+    channel's inbound edges redirected to null. The only corpus pass."""
     return f"""
 WITH ordered AS (
     SELECT user_id, event_type,
@@ -1208,7 +1209,7 @@ mat AS (
     UNION ALL SELECT 'purchase', 'purchase', CAST(1000000 AS BIGINT)
     UNION ALL SELECT 'null', 'null', CAST(1000000 AS BIGINT)
 ),
-variants AS ({variants}),
+{_MRE_VARIANTS},
 mat_v AS (
     SELECT v.variant, m.from_s,
            CASE WHEN m.to_s = v.variant THEN 'null' ELSE m.to_s END
@@ -1217,7 +1218,17 @@ mat_v AS (
     FROM mat m CROSS JOIN variants v
     GROUP BY v.variant, m.from_s,
              CASE WHEN m.to_s = v.variant THEN 'null' ELSE m.to_s END
-),
+)"""
+
+
+def _mre_tail() -> str:
+    """The CTEs after ``mat_v`` and the final SELECT: the absorption
+    rounds over ``mat_v`` and the removal effects."""
+    rounds = ",\n".join(
+        _mre_round(f"v{r - 1}", f"v{r}").lstrip()
+        for r in range(1, _MRE_ROUNDS + 1)
+    )
+    return f""",
 v0 AS (
     SELECT variant, 'start' AS state, CAST(1000000 AS BIGINT) AS v_u
     FROM variants
@@ -1250,7 +1261,7 @@ ORDER BY e.channel
 
 @register(
     "events_markov_removal_attribution",
-    oracle=_mre_sql("CAST(ts AS TIMESTAMP)"),
+    oracle=_mre_mat_v_ctes("CAST(ts AS TIMESTAMP)") + _mre_tail(),
 )
 def events_markov_removal_attribution(
     spark: SparkSession, sf_dir: str
@@ -1261,10 +1272,12 @@ def events_markov_removal_attribution(
 
     Scale: the corpus passes are the per-user journey window and one
     transition count; all 5 x 12 absorption rounds run on the bounded
-    states² matrix relation.
+    states² matrix relation, materialized once: every round joins it,
+    and Spark would inline the corpus pipeline into each.
     """
     register_views(spark, sf_dir, "events")
-    return spark.sql(_mre_sql("ts"))
+    materialize(spark.sql(_mre_mat_v_ctes("ts") + "\nSELECT * FROM mat_v"), "mat_v")
+    return spark.sql(f"WITH {_MRE_VARIANTS}" + _mre_tail())
 
 
 # ---------------------------------------------------------------------------

@@ -316,58 +316,6 @@ def running_user_totals(events: DataFrame) -> DataFrame:
     )
 
 
-def running_user_totals_tws(events: DataFrame) -> DataFrame:
-    """Per-user running totals via ``transformWithStateInPandas`` (Spark 4).
-
-    The successor API to ``applyInPandasWithState`` (SPARK-49494,
-    "arbitrary stateful processing v2"): state lives in named, typed
-    handles created in ``init`` (value/list/map state, optional TTL,
-    timers), so one processor can hold several independently-evolving
-    state variables and schema-evolve them — the operator model matching
-    Flink's KeyedProcessFunction. Semantics here are identical to
-    :func:`running_user_totals`, which is exactly what the parity test
-    pins (same input -> same final per-user totals from either API).
-
-    Requires the RocksDB state-store provider (the v2 state layout is
-    implemented only there — also the backend this repo treats as the
-    production default for 100 TB state) and the ``protobuf`` package
-    (the v2 state-server wire protocol; absent in this container, so
-    the parity test import-gates on it).
-    """
-    import pandas as pd
-    from pyspark.sql.streaming.stateful_processor import (
-        StatefulProcessor,
-        StatefulProcessorHandle,
-    )
-
-    class RunningTotals(StatefulProcessor):
-        def init(self, handle: StatefulProcessorHandle) -> None:
-            self._totals = handle.getValueState(
-                "totals", "n long, total double"
-            )
-
-        def handleInputRows(self, key, rows, timerValues):
-            prev = self._totals.get() if self._totals.exists() else (0, 0.0)
-            n, total = prev
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].sum())
-            self._totals.update((n, total))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "total_value": [total]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return events.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=RunningTotals(),
-        outputStructType="user_id long, n_events long, total_value double",
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def ohlc_bars(events: DataFrame) -> DataFrame:
     """Hourly OHLC bars — works identically in batch and streaming.
 

@@ -26,15 +26,6 @@ TABLE_NAMES = (
     "embeddings",
 )
 
-# Fixed-size dimension tables (5 / 25 rows at ANY scale factor): the
-# only tables safe to hint-broadcast unconditionally. customer/supplier/
-# part grow with scale factor — joins against them stay unhinted so AQE
-# broadcasts them while small and shuffle-joins at scale
-# (tests/test_no_scaling_broadcast_hints.py pins this).
-BROADCAST_TABLES = frozenset({"region", "nation"})
-
-DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-
 
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one testdata table.

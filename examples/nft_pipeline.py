@@ -52,16 +52,16 @@ def make_env_keyed_transport():
     fetchers, so it holds a connection for each request either may
     have in flight.
     """
-    from automated_data_pipeline_python_spark.ingest.transport import make_transport
+    from automated_data_pipeline_python_spark.ingest.transport import PooledHttpTransport
 
     api_key = os.getenv("OPENSEA_API_KEY")
     headers = {"X-API-KEY": api_key} if api_key else {}
-    return make_transport(headers=headers, max_connections=LIST_CONCURRENCY + ENRICH_CONCURRENCY)
+    return PooledHttpTransport(headers=headers, maxsize=LIST_CONCURRENCY + ENRICH_CONCURRENCY)
 
 
 def demo_transport(n_pages: int = 5, per_page: int = 200):
     """Deterministic stand-in for the OpenSea API (no network in this
-    environment); swap for an httpx-backed coroutine in deployment."""
+    environment); ``make_env_keyed_transport()`` is the live binding."""
 
     async def fetch(url: str) -> dict:
         if url.startswith("api://collection/page/"):

@@ -1,23 +1,19 @@
 """Shared pytest fixtures: one SparkSession per test session, and one
-plan sweep over the whole query catalog."""
+sweep over the whole query catalog that builds and runs each query once."""
 
 from __future__ import annotations
 
 import os
 import sys
 from contextlib import contextmanager
-from dataclasses import dataclass
 
 import pytest
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
-from automated_data_pipeline_python_spark.plans import (  # noqa: E402
-    PlanReport,
-    executed_plan,
-    plan_report,
-)
+from automated_data_pipeline_python_spark.plans import executed_plan, plan_report  # noqa: E402
 from automated_data_pipeline_python_spark.session import get_spark  # noqa: E402
+from tools.verify_driver import rows_canon  # noqa: E402
 
 SF_SMOKE = "/root/testdata/sf0.001"
 SF_CORRECT = "/root/testdata/sf0.01"
@@ -33,11 +29,6 @@ def spark(tmp_path_factory):
         extra_conf={"spark.sql.warehouse.dir": warehouse},
     )
     yield spark
-
-
-@pytest.fixture(scope="session")
-def sf_dir() -> str:
-    return os.environ.get("TEST_SF_DIR", SF_CORRECT)
 
 
 @contextmanager
@@ -65,25 +56,54 @@ def checkpointed_plans():
         ClassicDF.localCheckpoint = orig
 
 
-@dataclass(frozen=True)
-class CatalogPlan:
-    final: str  # executed-plan text of the DataFrame the builder returns
-    checkpoints: tuple[str, ...]  # plan text of each stage it checkpointed
-    report: PlanReport  # plan_report of the returned DataFrame
+class CatalogRun:
+    """One registered query as the catalog sweep saw it.
+
+    - ``final``: executed-plan text of the DataFrame the builder returns;
+    - ``checkpoints``: plan text of each stage the build checkpointed;
+    - ``report``: ``plan_report`` of the returned DataFrame;
+    - ``columns``, ``rows``: the collected result's column names and its
+      ``tools/verify_driver.rows_canon`` rows.
+
+    A field the sweep could not fill, because the build or the collect
+    raised, raises on read, naming the query and chaining the exception.
+    """
+
+    def __init__(self, name: str) -> None:
+        self.name = name
+        self.error: Exception | None = None
+
+    def __getattr__(self, attr: str):
+        # Reached only for fields that were never set.
+        if vars(self).get("error") is None:
+            raise AttributeError(attr)
+        raise RuntimeError(f"{self.name}: the catalog sweep raised {self.error!r}") from self.error
+
+
+def _sweep_one(spark, name: str, fn) -> CatalogRun:
+    run = CatalogRun(name)
+    try:
+        with checkpointed_plans() as staged:
+            df = fn(spark, SF_CORRECT)
+            rep = plan_report(df)
+        run.final, run.checkpoints, run.report = rep.text, tuple(staged), rep
+        run.rows = rows_canon(df.columns, df.collect())
+        run.columns = tuple(df.columns)
+    except Exception as exc:  # noqa: BLE001 - kept, raised when read
+        run.error = exc
+    return run
 
 
 @pytest.fixture(scope="session")
-def catalog_plans(spark) -> dict[str, CatalogPlan]:
-    """Every registered query built once at sf0.01, as plan text only.
+def catalog_plans(spark) -> dict[str, CatalogRun]:
+    """Every registered query built once at sf0.01, its plan recorded
+    before any action runs, then its result collected once.
 
-    No DataFrame is kept: a live frame keeps its checkpoint blocks
-    reachable for the rest of the session.
+    The plan guardrails and the oracle parity tests all read this. Only
+    strings are kept, no DataFrame: a live frame keeps its checkpoint
+    blocks reachable for the rest of the session. A query whose build
+    or collect raises does not stop the sweep (see ``CatalogRun``).
     """
     from automated_data_pipeline_python_spark.queries import QUERIES
 
-    plans = {}
-    for name, q in QUERIES.items():
-        with checkpointed_plans() as staged:
-            rep = plan_report(q.fn(spark, SF_CORRECT))
-        plans[name] = CatalogPlan(rep.text, tuple(staged), rep)
-    return plans
+    return {name: _sweep_one(spark, name, q.fn) for name, q in QUERIES.items()}

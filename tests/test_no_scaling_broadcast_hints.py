@@ -10,8 +10,9 @@ Detection: with ``autoBroadcastJoinThreshold=-1`` the ONLY broadcasts
 left in a plan are hint-driven.  We then assert no BroadcastExchange
 subtree contains a raw (un-aggregated) scan of customer/supplier/part,
 in the returned plan or in any stage the builder localCheckpointed.
-Hints on fixed-size tables (nation: 25 rows, region: 5 rows) and on
-derived aggregates (provably shrunk) remain allowed.
+Hints on nation (25 rows) and region (5 rows), the only tables whose
+size is fixed at every scale factor, and on derived aggregates
+(provably shrunk) remain allowed.
 """
 
 from __future__ import annotations

@@ -1,6 +1,8 @@
-"""Every catalog query with an oracle hash-matches DuckDB at sf0.01.
+"""Every catalog query with an oracle matches DuckDB at sf0.01.
 
-This mirrors the driver's t2 correctness gate.
+This mirrors the driver's t2 correctness gate. The Spark side is the
+session's one catalog sweep (`catalog_plans` in tests/conftest.py),
+which built and collected every query once; these tests build nothing.
 """
 
 from __future__ import annotations
@@ -8,30 +10,32 @@ from __future__ import annotations
 import pytest
 
 from automated_data_pipeline_python_spark.queries import QUERIES
-from tests.oracle import assert_matches_oracle, duckdb_conn
+from tests.conftest import SF_CORRECT
+from tools.verify_driver import duckdb_conn, oracle_mismatch
 
 WITH_ORACLE = sorted(name for name, q in QUERIES.items() if q.oracle is not None)
 ROWS_ONLY = sorted(name for name, q in QUERIES.items() if q.oracle is None)
 
 
 @pytest.fixture(scope="module")
-def oracle(sf_dir):
-    con = duckdb_conn(sf_dir)
+def oracle():
+    con = duckdb_conn(SF_CORRECT)
     yield con
     con.close()
 
 
 @pytest.mark.parametrize("name", WITH_ORACLE)
-def test_matches_duckdb(name, spark, sf_dir, oracle):
-    q = QUERIES[name]
-    assert_matches_oracle(q.fn(spark, sf_dir), oracle, q.oracle, name=name)
+def test_matches_duckdb(name, catalog_plans, oracle):
+    run = catalog_plans[name]
+    diff = oracle_mismatch(run.columns, run.rows, oracle, QUERIES[name].oracle)
+    assert diff is None, f"{name}: {diff}"
 
 
 @pytest.mark.parametrize("name", ROWS_ONLY)
-def test_rows_only_queries_run(name, spark, sf_dir):
-    df = QUERIES[name].fn(spark, sf_dir)
-    assert df.count() >= 0
-    assert len(df.schema.fields) > 0
+def test_rows_only_queries_run(name, catalog_plans):
+    # columns is set only once the collect succeeded; reading it raises
+    # what the sweep's build or collect raised.
+    assert len(catalog_plans[name].columns) > 0
 
 
 def test_no_engine_dependent_round_in_any_oracle():

@@ -765,3 +765,24 @@ def test_catalog_cartesian_audit(catalog_plans):
         if "CartesianProduct" in p.final and name not in CARTESIAN_ALLOWED
     )
     assert offenders == []
+
+
+# Spark inlines CTEs and views, so a corpus subtree referenced N times
+# is scanned N times unless the builder materializes it (CLAUDE.md:
+# materialize multiply-referenced expensive subtrees). The bound sits
+# well above every plan that reads each corpus subtree once.
+MAX_PARQUET_SCANS = 100
+
+
+def test_catalog_parquet_scan_audit(catalog_plans):
+    """Catalog-wide gate: no query's as-built plan, and no stage its
+    builder checkpointed, holds more than MAX_PARQUET_SCANS parquet
+    scans. An offender re-reads the corpus once per reference to an
+    unmaterialized subtree."""
+    offenders = {
+        name: scans
+        for name, p in catalog_plans.items()
+        if (scans := max(t.count("Scan parquet") for t in (p.final, *p.checkpoints)))
+        > MAX_PARQUET_SCANS
+    }
+    assert offenders == {}

@@ -446,65 +446,6 @@ def test_checkpoint_restart_exactly_once(spark, tmp_path):
     assert got.agg(F.sum("event_id")).first()[0] == ev.agg(F.sum("event_id")).first()[0]
 
 
-def test_transform_with_state_running_totals(spark, events_dir):
-    """transformWithState (arbitrary-state v2) computes the same final
-    per-user totals as the batch aggregate — and therefore the same as
-    the applyInPandasWithState v1 operator pinned above. Needs the
-    RocksDB provider (the only backend implementing the v2 state
-    layout) AND protobuf (the v2 state-server wire protocol) — gated
-    like the Kafka-jar and PIL tests, runs wherever protobuf exists.
-
-    Why the gate can't be lifted in THIS container (audited round 6):
-    no google.protobuf runtime exists anywhere on disk (only typeshed
-    stubs), the environment prohibits pip/apt installs, and the wire
-    protocol serializes real StateMessage protos between the Python
-    worker and the JVM state server — it cannot be stubbed without
-    reimplementing protobuf encoding. The operator itself
-    (running_user_totals_tws) is import-clean and plan-builds; only
-    the end-to-end state exchange needs the runtime."""
-    pytest.importorskip(
-        "google.protobuf",
-        reason="transformWithState state protocol needs protobuf",
-    )
-    from pyspark.sql import functions as F
-    from automated_data_pipeline_python_spark.streaming.events import (
-        running_user_totals_tws,
-    )
-
-    prev = spark.conf.get(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider",
-    )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    try:
-        stream = read_events_stream(spark, events_dir)
-        got = run_to_memory(
-            running_user_totals_tws(stream), "t_tws", output_mode="update"
-        )
-        final = (
-            got.groupBy("user_id")
-            .agg(F.max("n_events").alias("n"), F.max("total_value").alias("v"))
-            .collect()
-        )
-        ev = load(spark, SF_DIR, "events")
-        want = {
-            r.user_id: (r.n, r.v)
-            for r in ev.groupBy("user_id")
-            .agg(F.count(F.lit(1)).alias("n"), F.sum("value").alias("v"))
-            .collect()
-        }
-        got_map = {r.user_id: (r.n, r.v) for r in final}
-        assert set(got_map) == set(want)
-        for k, (n, v) in want.items():
-            assert got_map[k][0] == n, k
-            assert abs(got_map[k][1] - v) < 1e-6, k
-    finally:
-        spark.conf.set("spark.sql.streaming.stateStore.providerClass", prev)
-
-
 def test_ohlc_stream_equals_batch_and_catalog_twin(spark, events_dir):
     """The struct-min/max OHLC formulation streams; it must match both
     its own batch run and the rank-based catalog query row-for-row."""

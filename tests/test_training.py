@@ -10,14 +10,15 @@ import pytest
 
 from automated_data_pipeline_python_spark.queries import QUERIES
 from automated_data_pipeline_python_spark.queries.training import _PACK_LEN
+from tests.conftest import SF_CORRECT
 
 
 @pytest.fixture(scope="module")
-def packed(spark, sf_dir):
-    return QUERIES["pack_sequences_chunked"].fn(spark, sf_dir).collect()
+def packed(spark):
+    return QUERIES["pack_sequences_chunked"].fn(spark, SF_CORRECT).collect()
 
 
-def test_packing_conserves_tokens(spark, sf_dir, packed):
+def test_packing_conserves_tokens(spark, packed):
     """Every document's tokens land somewhere: per-doc contributions sum
     to its token count (no token lost or duplicated by the chunking)."""
     from pyspark.sql import functions as F
@@ -25,7 +26,7 @@ def test_packing_conserves_tokens(spark, sf_dir, packed):
     from automated_data_pipeline_python_spark.tables import load
 
     docs = (
-        load(spark, sf_dir, "documents")
+        load(spark, SF_CORRECT, "documents")
         .select(
             "doc_id",
             F.size(F.split(F.trim("text"), r"\s+")).cast("long").alias("n_tok"),
@@ -64,11 +65,11 @@ def test_packing_spans_are_contiguous(packed):
         assert ids == list(range(ids[0], ids[-1] + 1)), doc_id
 
 
-def test_stratified_sample_rates(spark, sf_dir):
+def test_stratified_sample_rates(spark):
     """Observed per-language rates sit near the configured quotas, and
     the sample is a deterministic function of doc_id (stable re-run)."""
-    rows = QUERIES["sample_stratified_deterministic"].fn(spark, sf_dir).collect()
-    again = QUERIES["sample_stratified_deterministic"].fn(spark, sf_dir).collect()
+    rows = QUERIES["sample_stratified_deterministic"].fn(spark, SF_CORRECT).collect()
+    again = QUERIES["sample_stratified_deterministic"].fn(spark, SF_CORRECT).collect()
     assert {r.doc_id for r in rows} == {r.doc_id for r in again}
     assert all(r.bucket < 50 for r in rows if r.lang == "en")
     assert all(r.bucket < 30 for r in rows if r.lang == "de")
@@ -77,19 +78,19 @@ def test_stratified_sample_rates(spark, sf_dir):
     )
 
 
-def test_mixture_weights_equalize(spark, sf_dir):
+def test_mixture_weights_equalize(spark):
     """weight × share ≈ target for every language; shares sum to ~1."""
-    rows = QUERIES["mixture_domain_weights"].fn(spark, sf_dir).collect()
+    rows = QUERIES["mixture_domain_weights"].fn(spark, SF_CORRECT).collect()
     total_share = sum(r.token_share for r in rows)
     assert abs(total_share - 1.0) < 1e-3
     for r in rows:
         assert abs(r.resample_weight * r.token_share - r.target_share) < 1e-3
 
 
-def test_contamination_flags_eval_overlap(spark, sf_dir):
+def test_contamination_flags_eval_overlap(spark):
     """Benchmark docs are excluded from the report; ratios are in [0,1]
     and docs sharing the benchmark's shared vocabulary score > 0."""
-    rows = QUERIES["contamination_ngram_overlap"].fn(spark, sf_dir).collect()
+    rows = QUERIES["contamination_ngram_overlap"].fn(spark, SF_CORRECT).collect()
     assert all(r.doc_id % 19 != 0 for r in rows)
     assert all(0.0 <= r.contamination_ratio <= 1.0 for r in rows)
     assert all(r.n_contaminated <= r.n_shingles for r in rows)

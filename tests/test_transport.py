@@ -24,7 +24,6 @@ from automated_data_pipeline_python_spark.ingest.fetcher import (
 from automated_data_pipeline_python_spark.ingest.transport import (
     HttpStatusError,
     PooledHttpTransport,
-    make_transport,
 )
 
 N_PAGES = 4
@@ -101,13 +100,6 @@ def api_base():
     server.shutdown()
     server.server_close()
     thread.join(timeout=5)
-
-
-def test_make_transport_binds_available_client():
-    # httpx is absent in this container; the factory must fall back to
-    # the urllib3 pool rather than raise.
-    t = make_transport()
-    assert isinstance(t, PooledHttpTransport)
 
 
 def test_paginate_through_real_pool(api_base):

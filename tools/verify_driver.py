@@ -2,7 +2,8 @@
 
 Vanilla SparkSession (NOT the session factory) + `import __spark_entry__`
 + DuckDB views over the same parquet. Compares sorted column names, row
-count, and canonicalized sorted rows per query.
+count, and canonicalized sorted rows per query (``oracle_mismatch``,
+the one comparison the test suite's oracle checks use too).
 
 Usage: python tools/verify_driver.py [sf_dir] [name_substring ...]
        (default /root/testdata/sf0.01, all queries)
@@ -52,6 +53,35 @@ def rows_canon(cols, rows):
     return sorted(tuple(canon(r[i]) for i in order) for r in rows)
 
 
+def duckdb_conn(sf: str) -> duckdb.DuckDBPyConnection:
+    """A DuckDB connection with one view per table over ``sf``'s parquet."""
+    con = duckdb.connect()
+    for t in TABLES:
+        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
+    return con
+
+
+def oracle_mismatch(columns, rows, con, sql: str) -> str | None:
+    """Compare one Spark result with DuckDB's result of ``sql``.
+
+    The Spark side comes as its column names and its ``rows_canon``
+    rows. Checks the column set, then the row count, then the canonical
+    rows; returns None when all match, else the first difference.
+    """
+    cur = con.execute(sql)
+    ocols = [d[0] for d in cur.description]
+    orows = cur.fetchall()
+    if sorted(columns) != sorted(ocols):
+        return f"columns {sorted(columns)} != {sorted(ocols)}"
+    if len(rows) != len(orows):
+        return f"rowcount {len(rows)} != {len(orows)}"
+    expected = rows_canon(ocols, orows)
+    if rows != expected:
+        diffs = [(a, e) for a, e in zip(rows, expected) if a != e][:5]
+        return f"values mismatch ({len(rows)} rows); first diffs {diffs}"
+    return None
+
+
 def main(sf: str, only: list[str] | None = None) -> int:
     spark = SparkSession.builder.master("local[8]").getOrCreate()
     import __spark_entry__ as E
@@ -61,9 +91,7 @@ def main(sf: str, only: list[str] | None = None) -> int:
         assert n > 0, "entry() returned 0 rows"
         print(f"entry() ok: {n} rows")
 
-    con = duckdb.connect()
-    for t in TABLES:
-        con.execute(f"CREATE VIEW {t} AS SELECT * FROM '{sf}/{t}.parquet'")
+    con = duckdb_conn(sf)
 
     queries = E.queries()
     oracles = E.oracle_sql()
@@ -76,8 +104,7 @@ def main(sf: str, only: list[str] | None = None) -> int:
             continue
         try:
             sdf = fn(spark, sf)
-            srows = sdf.collect()
-            scols = sorted(sdf.columns)
+            srows = rows_canon(sdf.columns, sdf.collect())
         except Exception as exc:  # noqa: BLE001
             print(f"FAIL {name}: spark raised {exc}")
             failed.append(name)
@@ -88,21 +115,13 @@ def main(sf: str, only: list[str] | None = None) -> int:
             print(f"ok   {name}: rows-only ({len(srows)} rows)")
             continue
         try:
-            cur = con.execute(oracles[name])
-            ocols = sorted(d[0] for d in cur.description)
-            orows = cur.fetchall()
+            diff = oracle_mismatch(sdf.columns, srows, con, oracles[name])
         except Exception as exc:  # noqa: BLE001
             print(f"FAIL {name}: duckdb raised {exc}")
             failed.append(name)
             continue
-        if scols != ocols:
-            print(f"FAIL {name}: columns {scols} != {ocols}")
-            failed.append(name)
-        elif len(srows) != len(orows):
-            print(f"FAIL {name}: rowcount {len(srows)} != {len(orows)}")
-            failed.append(name)
-        elif rows_canon(sdf.columns, srows) != rows_canon([d[0] for d in cur.description], orows):
-            print(f"FAIL {name}: values mismatch ({len(srows)} rows)")
+        if diff:
+            print(f"FAIL {name}: {diff}")
             failed.append(name)
         else:
             print(f"ok   {name}: {len(srows)} rows match oracle")
