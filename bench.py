@@ -6,8 +6,10 @@
 
 ``python bench.py --point SF_DIR QUERY...``
     The named queries in this process (hence one fresh JVM). Prints one
-    JSON line: ``rev``, ``sf_dir``, ``cpus``, ``repeats``, per-cycle
-    ``walls`` and their ``min``, each keyed by query.
+    JSON line: ``rev``, ``sf_dir``, ``cpus``, ``repeats``,
+    ``driver_memory``, per-cycle ``walls`` and their ``min``, and the
+    codegen compilations of the warm-up (``warmup_compiles``) and of
+    each timed cycle (``compiles``), each keyed by query.
 
 ``python bench.py --ab TREE SF_DIR QUERY...``
     For each query, ``TREE/bench.py --point`` (before) and this tree's
@@ -89,7 +91,11 @@ def time_queries(
       1. One UNTIMED warm-up cycle: the cold cycle's JIT/codegen/first
          -scan penalty otherwise lands on the queries in list order and
          survives min-of-N (the r9 "LSH cap overhead" was exactly this
-         first-slot penalty).
+         first-slot penalty). It absorbs codegen only while Spark's
+         compiled-class cache holds the whole set's classes
+         (``spark.sql.codegen.cache.maxEntries``, sized in
+         ``session.get_spark``); a set that overflows it recompiles in
+         every cycle, which ``--point``'s ``compiles`` shows.
       2. Round-robin cycles with a deterministic md5-keyed
          RE-PERMUTATION per cycle: a fixed order gives each query the
          same predecessor every cycle, and a predecessor with heavy
@@ -142,14 +148,27 @@ def _noop(df) -> None:
 
 
 def _time_catalog(spark, sf_dir: str, names: list[str], repeats: int):
+    """``time_queries`` over catalog queries. Returns the walls and, per
+    query, the codegen compilations of every cycle, warm-up first; they
+    are counted in the GC step, outside the timed region."""
     from automated_data_pipeline_python_spark.queries import QUERIES
 
-    return time_queries(
-        lambda name: _noop(QUERIES[name].fn(spark, sf_dir)),
-        names,
-        repeats,
-        spark.sparkContext._jvm.System.gc,
-    )
+    jvm = spark.sparkContext._jvm
+    compilations = jvm.org.apache.spark.metrics.source.CodegenMetrics.METRIC_COMPILATION_TIME()
+    compiles: dict[str, list[int]] = {name: [] for name in names}
+    last = {"name": None, "count": compilations.getCount()}
+
+    def run(name: str) -> None:
+        last["name"] = name
+        _noop(QUERIES[name].fn(spark, sf_dir))
+
+    def gc() -> None:
+        count = compilations.getCount()
+        compiles[last["name"]].append(count - last["count"])
+        last["count"] = count
+        jvm.System.gc()
+
+    return time_queries(run, names, repeats, gc), compiles
 
 
 def main() -> None:
@@ -176,7 +195,7 @@ def main() -> None:
 
     repeats = _repeats()
     runnable = [n for n in HEADLINE if n in QUERIES]
-    cycle_times = _time_catalog(spark, sf_dir, runnable, repeats)
+    cycle_times, _ = _time_catalog(spark, sf_dir, runnable, repeats)
     timings = {name: round(min(ts), 3) for name, ts in cycle_times.items()}
     # Level-comparable view vs BENCH_r11 (min-of-3): min over the first
     # three cycles only — identical permutations, identical warm-up.
@@ -234,6 +253,24 @@ def _rev() -> str | None:
     return proc.stdout.strip() or None
 
 
+# A --point JVM's heap when SPARK_DRIVER_MEMORY is unset, as a share of
+# the host's MemTotal. The rest is for what lives outside the heap: the
+# JVM's metaspace, direct buffers and thread stacks, one Python worker
+# per core for Arrow and pandas UDFs, and the page cache the parquet
+# scans read through. A heap larger than the host lets a 100x query
+# grow until the OS kills the JVM instead of spilling.
+HEAP_SHARE = 0.5
+
+
+def _driver_memory(meminfo: str = "/proc/meminfo") -> str:
+    """``$SPARK_DRIVER_MEMORY`` if set, else ``HEAP_SHARE`` of MemTotal."""
+    if "SPARK_DRIVER_MEMORY" in os.environ:
+        return os.environ["SPARK_DRIVER_MEMORY"]
+    with open(meminfo) as fh:
+        kib = next(int(line.split()[1]) for line in fh if line.startswith("MemTotal:"))
+    return f"{int(kib * HEAP_SHARE) // 1024}m"
+
+
 def point(sf_dir: str, names: list[str]) -> None:
     """``--point``: time ``names`` in this process's (fresh) JVM.
 
@@ -248,11 +285,11 @@ def point(sf_dir: str, names: list[str]) -> None:
     unknown = [n for n in names if n not in QUERIES]
     if unknown:
         sys.exit(f"unknown queries: {' '.join(unknown)}")
-    # 100x points need the heap; an explicit setting still wins.
-    os.environ.setdefault("SPARK_DRIVER_MEMORY", "48g")
+    os.environ["SPARK_DRIVER_MEMORY"] = _driver_memory()
     cpus, repeats = _cpus(), _repeats()
     spark = _session(cpus)
-    walls = _time_catalog(spark, sf_dir, names, repeats)
+    heap = spark.sparkContext.getConf().get("spark.driver.memory")
+    walls, compiles = _time_catalog(spark, sf_dir, names, repeats)
     spark.stop()
     print(
         json.dumps(
@@ -261,8 +298,11 @@ def point(sf_dir: str, names: list[str]) -> None:
                 "sf_dir": sf_dir,
                 "cpus": cpus,
                 "repeats": repeats,
+                "driver_memory": heap,
                 "walls": {n: [round(w, 3) for w in ws] for n, ws in walls.items()},
                 "min": {n: round(min(ws), 3) for n, ws in walls.items()},
+                "warmup_compiles": {n: cs[0] for n, cs in compiles.items()},
+                "compiles": {n: cs[1:] for n, cs in compiles.items()},
             }
         )
     )

@@ -16,8 +16,11 @@ import duckdb
 from tools.verify_driver import oracle_mismatch, rows_canon
 
 
-def assert_matches_oracle(spark_df, con: duckdb.DuckDBPyConnection, sql: str, name: str = "") -> None:
-    """Collect ``spark_df`` and assert it matches DuckDB's result of ``sql``."""
+def assert_matches_oracle(spark_df, con: duckdb.DuckDBPyConnection, sql: str, name: str = "") -> list:
+    """Collect ``spark_df``, assert it matches DuckDB's result of ``sql``
+    and return the canonical rows, so a caller checks them without
+    running the query again."""
     rows = rows_canon(spark_df.columns, spark_df.collect())
     diff = oracle_mismatch(spark_df.columns, rows, con, sql)
     assert diff is None, f"{name}: {diff}"
+    return rows

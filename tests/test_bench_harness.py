@@ -83,3 +83,12 @@ def test_first_three_cycles_equal_a_min_of_3_run(monkeypatch, repeats):
     _, longer = _drive(monkeypatch, repeats)
     _, three = _drive(monkeypatch, 3)
     assert longer[: len(three)] == three
+
+
+def test_point_heap_is_a_share_of_the_host(monkeypatch, tmp_path):
+    meminfo = tmp_path / "meminfo"
+    meminfo.write_text("MemTotal:       16000000 kB\nMemFree:         9000000 kB\n")
+    monkeypatch.delenv("SPARK_DRIVER_MEMORY", raising=False)
+    assert bench._driver_memory(str(meminfo)) == f"{int(16000000 * bench.HEAP_SHARE) // 1024}m"
+    monkeypatch.setenv("SPARK_DRIVER_MEMORY", "3g")
+    assert bench._driver_memory(str(meminfo)) == "3g"
