@@ -13,8 +13,6 @@ Layout:
 - ``functions``   portable column expressions (hashing, text, vectors)
 - ``operators``   composite operators (as-of join, dedup, similarity, ...)
 - ``ingest``      the reference's ETL surface (normalize/store/fetch)
-- ``streaming``   Structured Streaming surface over the events table
-- ``multimodal``  binary-column (image/audio) plumbing with stubbed decoders
 - ``queries``     the query catalog exported through __spark_entry__.py
 """
 

@@ -10,8 +10,8 @@ snapshot, produce the next state:
 - keys absent from the snapshot optionally close (hard-delete capture).
 
 Pure DataFrame ops — one full-outer join per merge, no driver loops. At
-100 TB both sides partition by the business key; with bucketed dim
-storage (see storage.py) the join is shuffle-free. On lakehouse tables
+100 TB both sides partition by the business key; with a dimension
+bucketed on that key the join is shuffle-free. On lakehouse tables
 (Delta/Iceberg) the same logic runs through MERGE INTO; this is the
 engine-native formulation.
 

@@ -47,10 +47,9 @@ _Z = (
     " + 0.5 * (mean_len - 4.0) - 0.005 * n_tok"
 )
 
-# Stage expressions shared by the catalog SQL and the batch/stream-
-# agnostic DataFrame form (quality_gate) — one source of truth, so the
-# streaming twin is arithmetically identical to the oracle-checked
-# query.
+# Stage expressions shared by the catalog SQL and the DataFrame form
+# (quality_gate) — one source of truth, so the gate the examples run is
+# arithmetically identical to the oracle-checked query.
 _S_FEAT_EXPRS = [
     "size(toks) AS n_tok",
     "size(array_distinct(toks)) AS n_uniq",

@@ -582,9 +582,8 @@ def dq_dp_noisy_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
 _DOREMI_ETA = "5e-1"
 
 # Report tail downstream of the per-source (n_tok, loss_u) stats, as a
-# {per_source}-parameterized template so streaming/monitors.py can apply
-# the identical multiplicative-weights algebra to its incrementally-
-# maintained stats (stream==batch parity by construction).
+# {per_source}-parameterized template: the multiplicative-weights
+# algebra runs over any relation with the stats' columns.
 _DOREMI_REPORT_TAIL = f"""means AS (
     SELECT source, n_tok,
            floor(CAST(loss_u AS DOUBLE) / n_tok + 0.5) / 1e6 AS mean_loss

@@ -178,7 +178,7 @@ def profile_orders_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
 # ---------------------------------------------------------------------------
 # The report you run BEFORE a big join: per candidate key, row/key
 # cardinalities, the hottest key's share, and the max/avg skew ratio —
-# the inputs to the salt-or-not decision (operators/skew.py). One
+# the inputs to the salt-or-not decision. One
 # grouped count per key column (a single map-side-combined shuffle over
 # the fact table); the moment stats and the top-10 rollup then read the
 # key-cardinality-sized count relation. The top-10 share deliberately

@@ -623,9 +623,8 @@ def feature_quantile_normalize(spark: SparkSession, sf_dir: str) -> DataFrame:
 # 2·exp(−2D²·n1n2/(n1+n2)) are single float expressions, snapped.
 
 # Everything downstream of the per-cents (cx, cy) count grid, as a
-# {grid}-parameterized template so streaming/monitors.py can apply the
-# identical CDF/sup-gap algebra to its incrementally-maintained grid
-# (stream==batch parity by construction).
+# {grid}-parameterized template: the CDF/sup-gap algebra runs over any
+# relation with the grid's columns.
 _KS_TAIL = """cdf AS (
     SELECT cents,
            CAST(sum(cx) OVER (ORDER BY cents) AS BIGINT) AS fx,
@@ -926,9 +925,8 @@ def events_kuiper_two_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
 # sanctioned class (same shape the KS/CvM/Kuiper queries pin).
 
 # Everything downstream of the per-cents (cx, cy) count grid, as a
-# {grid}-parameterized template: streaming/monitors.py applies it to
-# the SAME merged histogram state the KS monitor keeps (one state
-# relation, two drift reports).
+# {grid}-parameterized template over the SAME grid the KS query builds
+# (one count relation, two drift reports).
 _W1_TAIL = """cdf AS (
     SELECT cents,
            CAST(sum(cx) OVER (ORDER BY cents) AS BIGINT) AS fx,

@@ -1,10 +1,8 @@
 """Event-time windowing over ``events`` (SURVEY §2.7 batch equivalents).
 
-These are the batch twins of the streaming surface in
-``streaming/``: identical window semantics (``F.window`` /
-``F.session_window`` work in batch too), validated against
-gaps-and-islands / time_bucket oracles. The streaming module reuses the
-same transformations over ``readStream`` with watermarks.
+``F.window`` / ``F.session_window`` give the same window semantics in
+batch as in Structured Streaming; the queries here are validated
+against gaps-and-islands / time_bucket oracles.
 """
 
 from __future__ import annotations
@@ -265,26 +263,33 @@ def events_hierarchical_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def events_interval_join(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Batch twin of the stream-stream interval join.
+    """Interval join: purchases within 30 minutes of a click by the same
+    user.
 
-    Runs the EXACT code path used by streaming
-    (``streaming.events.click_purchase_stream_join`` — watermarks are
-    no-ops in batch), so the oracle hash-check covers the stream-stream
-    join semantics too; tests/test_streaming.py separately asserts
-    stream == batch on the same function.
+    The same DataFrame code runs on streaming inputs, where each side
+    would also need a watermark; the range bound on event time is what
+    would then let Spark evict buffered join state.
 
     Scale: equi-key on user_id carries the shuffle; the time-range
-    predicate is a post-join filter in batch and the state-eviction
-    bound in streaming.
+    predicate is a post-join filter.
     """
-    from automated_data_pipeline_python_spark.streaming.events import (
-        click_purchase_stream_join,
-    )
-
     ev = load(spark, sf_dir, "events")
-    joined = click_purchase_stream_join(
-        ev.filter(F.col("event_type") == "click"),
-        ev.filter(F.col("event_type") == "purchase"),
+    c = ev.filter(F.col("event_type") == "click").select(
+        F.col("user_id"),
+        F.col("ts").cast("timestamp").alias("click_ts"),
+        F.col("event_id").alias("click_id"),
+    )
+    p = ev.filter(F.col("event_type") == "purchase").select(
+        F.col("user_id").alias("p_user_id"),
+        F.col("ts").cast("timestamp").alias("purchase_ts"),
+        F.col("event_id").alias("purchase_id"),
+        F.col("value").alias("purchase_value"),
+    )
+    joined = c.join(
+        p,
+        (F.col("user_id") == F.col("p_user_id"))
+        & (F.col("purchase_ts") >= F.col("click_ts"))
+        & (F.col("purchase_ts") <= F.col("click_ts") + F.expr("INTERVAL 30 minutes")),
     )
     return joined.select(
         "user_id",

@@ -1,9 +1,8 @@
 """Multimodal planning queries for the driver catalog.
 
 The corpus has no binary table, so media blobs are derived from document
-text bytes (payload-agnostic plumbing — see multimodal/binary_ops.py for
-the mapInPandas decode/feature/frame passes, which have no SQL oracle and
-are covered by tests/test_multimodal.py). Everything UPSTREAM of the
+text bytes (payload-agnostic plumbing; no codec is installed, so
+decoding itself is out of scope). Everything UPSTREAM of the
 codec boundary is JVM-side and oracle-checkable, and that is where the
 100 TB leverage lives: a video/audio/image pipeline never materializes
 decoded media across a shuffle — it computes a PLAN of (blob,
@@ -99,9 +98,9 @@ def _duck_dialect() -> dict[str, object]:
 # ---------------------------------------------------------------------------
 # The planning half of video frame extraction: k uniformly-spaced sample
 # timestamps per clip, mapped to frame indices at the clip's fps. The
-# decode half (seek + decode at those indices) is the mapInPandas codec
-# pass in multimodal/binary_ops.py (frame_sample), which consumes exactly
-# this (media_id, frame_idx) plan. duration/fps stand in for container
+# decode half (seek + decode at those indices) is a codec pass that
+# would consume exactly this (media_id, frame_idx) plan. duration/fps
+# stand in for container
 # header fields; all downstream arithmetic is exact BIGINT.
 #
 # Scale: map-only explode of a constant-8 sequence — no shuffle at any
@@ -257,8 +256,8 @@ def multimodal_image_tile_plan(spark: SparkSession, sf_dir: str) -> DataFrame:
 # upstream of the codec boundary and therefore oracle-checkable. Media
 # attributes (modality, duration, fps, dimensions) and content features
 # (frame/segment hashes, segment energy) derive deterministically from
-# blob bytes/ids exactly as in family 1 — stand-ins for what the
-# mapInPandas codec stage (multimodal/binary_ops.py) would emit — so the
+# blob bytes/ids exactly as in family 1 — stand-ins for what a codec
+# stage would emit — so the
 # real operator under test is the engine-side arithmetic: mixture
 # reports, robust DQ gates, hash-blocked frame dedup, scene/utterance
 # segmentation (gaps-and-islands), resize planning, and storage packing.

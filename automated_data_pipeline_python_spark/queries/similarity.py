@@ -1707,9 +1707,7 @@ def _centroid_tail() -> str:
     """Everything downstream of the per-(label, half, dim) snapped-sum
     grid, as a ``{sums}``-parameterized template (columns: label,
     late ∈ {{0=reference, 1=live}}, d, sx = 1e9-grid snapped component
-    sum, c = vector count): streaming/monitors.py applies the identical
-    mean/cosine/norm algebra to its incrementally-maintained state
-    (stream==batch parity by construction; labels × dims rows, bounded).
+    sum, c = vector count); labels × dims rows, bounded.
     """
     return f"""means AS (
     SELECT label, late, d,

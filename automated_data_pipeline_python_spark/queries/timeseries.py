@@ -2122,9 +2122,8 @@ def events_haar_wavelet_energy(spark: SparkSession, sf_dir: str) -> DataFrame:
 # windows (never a single-partition exchange).
 
 # Everything downstream of the per-(type, day) count grid, as a
-# {daily}-parameterized template so streaming/monitors.py can apply the
-# identical algebra to its incrementally-maintained grid (stream==batch
-# parity by construction, no post-hoc string surgery).
+# {daily}-parameterized template: the algebra runs over any relation
+# with the grid's columns, with no post-hoc string surgery.
 _CUSUM_TAIL = """idx AS (
     SELECT event_type, d, n,
            CAST(row_number() OVER (PARTITION BY event_type ORDER BY d)
@@ -2581,9 +2580,7 @@ def events_runs_test(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def _ph_tail(fmt_day: str) -> str:
     """Everything downstream of the per-(type, day) count grid, with a
-    {daily} placeholder so streaming/monitors.py can apply the identical
-    algebra to its incrementally-maintained grid (the same template
-    discipline as _CUSUM_TAIL — stream==batch parity by construction)."""
+    {daily} placeholder (the same template discipline as _CUSUM_TAIL)."""
     return f"""stat AS (
     SELECT event_type,
            CAST(count(*) AS BIGINT) AS nd,
@@ -3073,10 +3070,8 @@ def events_var_cvar_daily(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _slo_tail(gap: str) -> str:
-    """{daily}-parameterized burn-rate algebra (columns d, n, e) —
-    shared verbatim by the catalog query and the streaming monitor
-    (streaming/monitors.py slo_burn_report), the _CUSUM_TAIL
-    discipline: stream==batch parity by construction."""
+    """{daily}-parameterized burn-rate algebra (columns d, n, e), the
+    _CUSUM_TAIL discipline."""
     r1 = "floor(CAST(e1 AS DOUBLE) / n1 * 1e6 + 0.5) / 1e6"
     r7 = "floor(CAST(e7 AS DOUBLE) / n7 * 1e6 + 0.5) / 1e6"
     r28 = "floor(CAST(e28 AS DOUBLE) / n28 * 1e6 + 0.5) / 1e6"

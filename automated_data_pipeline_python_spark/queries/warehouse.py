@@ -49,8 +49,8 @@ FROM cur WHERE c_acctbal < 0
 def scd2_customer_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SCD2 merge: delinquent customers change segment, others pass.
 
-    Scale: one full-outer join on the business key; with bucketed
-    dimension storage (storage.py) the join is shuffle-free. Lakehouse
+    Scale: one full-outer join on the business key; with a dimension
+    bucketed on that key the join is shuffle-free. Lakehouse
     deployments express the same logic as MERGE INTO.
     """
     cust = load(spark, sf_dir, "customer")

@@ -142,10 +142,10 @@ def read_binary_files(
     """Whole-file binary reader: (path, modificationTime, length, content).
 
     The ingest edge for multimodal columns — media files land as opaque
-    ``binary`` content plus metadata, then flow through
-    ``multimodal/binary_ops.py``. Files are NOT splittable (one row per
-    file), so at 100 TB the parallelism unit is the file: shard media
-    into object-store prefixes and let the file listing distribute.
+    ``binary`` content plus metadata, ready for a codec stage. Files are
+    NOT splittable (one row per file), so at 100 TB the parallelism unit
+    is the file: shard media into object-store prefixes and let the file
+    listing distribute.
     """
     reader = spark.read.format("binaryFile")
     if glob is not None:

@@ -15,14 +15,12 @@ _NOISY_LOGGERS = ("py4j", "pyspark", "urllib3", "asyncio")
 
 _CONSOLE_FMT = "%(levelname)s %(name)s: %(message)s"
 _FILE_FMT = "%(asctime)s %(levelname)s %(name)s [%(filename)s:%(lineno)d] %(message)s"
+_CONSOLE_LEVEL = logging.INFO
+_MAX_BYTES = 5 * 1024 * 1024
+_BACKUP_COUNT = 2
 
 
-def setup_logging(
-    logfile: str | None = None,
-    console_level: int = logging.INFO,
-    max_bytes: int = 5 * 1024 * 1024,
-    backup_count: int = 2,
-) -> logging.Logger:
+def setup_logging(logfile: str | None = None) -> logging.Logger:
     """Configure the root logger; returns it. Idempotent per handler type."""
     root = logging.getLogger()
     root.setLevel(logging.DEBUG)
@@ -33,7 +31,7 @@ def setup_logging(
         for h in root.handlers
     ):
         console = logging.StreamHandler()
-        console.setLevel(console_level)
+        console.setLevel(_CONSOLE_LEVEL)
         console.setFormatter(logging.Formatter(_CONSOLE_FMT))
         root.addHandler(console)
 
@@ -41,7 +39,7 @@ def setup_logging(
         isinstance(h, RotatingFileHandler) for h in root.handlers
     ):
         fileh = RotatingFileHandler(
-            logfile, maxBytes=max_bytes, backupCount=backup_count
+            logfile, maxBytes=_MAX_BYTES, backupCount=_BACKUP_COUNT
         )
         fileh.setLevel(logging.DEBUG)
         fileh.setFormatter(logging.Formatter(_FILE_FMT))

@@ -3,7 +3,7 @@
 The pipeline a mixed media corpus runs before any codec spends a GPU
 cycle, at test scale — every stage an oracle-checked catalog operator
 over the stand-in media catalog (blob bytes/ids → deterministic media
-attributes; the decode seams live in multimodal/binary_ops.py):
+attributes; no codec runs):
 
 1. CARD     modality mix report (what is this corpus?)
 2. DQ       bitrate Tukey fences per fps group (corrupt containers out)

@@ -15,7 +15,8 @@ README.md:145-155):
 Run: ``python examples/nft_pipeline.py [output_dir]`` — serves the demo
 API over a loopback HTTP server and drives the COLLECT stage through
 the real pooled transport (``ingest.transport.PooledHttpTransport``);
-pass ``--in-process`` to skip HTTP and use the coroutine stand-in.
+pass ``--in-process`` to skip HTTP and use the coroutine stand-in, and
+``--logfile=PATH`` to add a rotating DEBUG log file to the console log.
 """
 
 from __future__ import annotations
@@ -38,6 +39,7 @@ from automated_data_pipeline_python_spark.ingest.normalize import (
 )
 from automated_data_pipeline_python_spark.ingest.store import write_tables
 from automated_data_pipeline_python_spark.session import get_spark
+from automated_data_pipeline_python_spark.utils.logs import setup_logging
 
 LIST_CONCURRENCY = 2  # reference api_clients.py:10
 ENRICH_CONCURRENCY = 15  # reference api_clients.py:17
@@ -198,6 +200,9 @@ def run_pipeline(spark, output_dir: str, transport=None, first_url=None) -> dict
 
 
 if __name__ == "__main__":
+    # logging first, as the reference main.py:19-29 does
+    logfile = next((a.split("=", 1)[1] for a in sys.argv if a.startswith("--logfile=")), None)
+    setup_logging(logfile=logfile)
     args = [a for a in sys.argv[1:] if not a.startswith("--")]
     out = args[0] if args else "/tmp/nft_pipeline_demo"
     spark = get_spark(app_name="nft-pipeline-demo")

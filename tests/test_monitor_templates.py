@@ -1,11 +1,11 @@
-"""Structural pin for the monitor/catalog shared-SQL discipline.
+"""Structural pin for the drift/changepoint shared-SQL discipline.
 
-The streaming monitors' stream==batch parity is *by construction*: the
-catalog query and the monitor report execute the SAME
-{placeholder}-parameterized template. These tests pin that construction
-so a future edit cannot quietly fork the two sides (the failure mode
-the round-7 string-surgery refactor removed). Pure string checks — no
-Spark session needed.
+Each monitor-style catalog query is its count grid followed by a
+{placeholder}-parameterized report template. These tests pin that the
+catalog SQL IS the template applied to its grid, so a future edit
+cannot quietly fork the algebra into hand-edited copies (the failure
+mode the round-7 string-surgery refactor removed). Pure string checks —
+no Spark session needed.
 """
 
 from __future__ import annotations

@@ -1,51 +1,21 @@
-"""End-to-end codec integration on REAL image bytes (VERDICT r11 task 5).
+"""Scene segmentation over frame hashes computed from real rasters.
 
-The curation family derives content features from deterministic
-stand-in hashes, and tests/test_multimodal_pil.py can only prove the
-codec seam where Pillow exists (it is absent in this container, hence
-that module's documented skip). This module closes the loop WITHOUT
-Pillow, using the engine's one dependency-free real codec
-(multimodal/pgm.py — binary PGM, pure Python + numpy): real encoded
-bytes flow through the SAME injected seams production would use —
-
-    encode → decode_images(decode=...)          (header parse)
-           → average_hash(pixels=...)           (Arrow-batched aHash)
-           → _scene_sql tail                    (JVM bit_count scene cuts)
-           → phash_near_dup_pairs               (chunk-blocked hamming)
-
-— and the resulting cut/pair counts are pinned, with an independent
-numpy popcount loop confirming every hamming distance the SQL computes.
-No stand-in hashes anywhere: every bit here originates from decoded
-raster pixels of a real container format.
+The multimodal catalog derives frame hashes from deterministic
+stand-ins. This module feeds the catalog's own scene SQL
+(``queries/multimodal._scene_sql``) average hashes of structurally
+distinct 64x64 images, computed here in numpy, and pins the resulting
+cut/scene counts; an independent popcount loop confirms every hamming
+distance the SQL thresholds.
 """
 
 from __future__ import annotations
 
 import numpy as np
-import pytest
 
-from automated_data_pipeline_python_spark.multimodal.binary_ops import (
-    average_hash,
-    decode_images,
-    phash_near_dup_pairs,
-)
-from automated_data_pipeline_python_spark.multimodal.pgm import (
-    pgm_bytes,
-    pgm_decode,
-    pgm_pixels,
-)
 from automated_data_pipeline_python_spark.queries.multimodal import (
     _CUT_HAMMING,
     _scene_sql,
 )
-
-
-def test_pgm_codec_rejects_non_pgm_bytes():
-    for bad in (b"P6\n2 2\n255\n" + b"x" * 12, b"P5\n4 4\n65535\n",
-                b"P5\n8 8\n255\nshort"):
-        with pytest.raises(ValueError):
-            pgm_decode(bad)
-
 
 # ---------------------------------------------------------------------------
 # Test images (64x64 grayscale, visually distinct structure)
@@ -68,8 +38,8 @@ def _checker() -> np.ndarray:  # 16-px checkerboard
 
 
 def _ahash64(arr: np.ndarray) -> int:
-    """Independent aHash reimplementation (row-major 8x8 block means,
-    bit = cell > global mean) used to cross-check the pipeline."""
+    """64-bit average hash: row-major 8x8 block means, bit = cell >
+    global mean. Unsigned; ``_signed`` maps it into LongType."""
     cells = arr.astype(np.float64).reshape(8, _N // 8, 8, _N // 8).mean(
         axis=(1, 3)
     )
@@ -79,31 +49,24 @@ def _ahash64(arr: np.ndarray) -> int:
     return v
 
 
+def _signed(v: int) -> int:
+    return v - (1 << 64) if v >= 1 << 63 else v
+
+
 def _hamming(a: int, b: int) -> int:
     return bin((a ^ b) & ((1 << 64) - 1)).count("1")
 
 
-def test_real_bytes_decode(spark):
-    """Header parse of real PGM bytes through the decode seam."""
-    df = spark.createDataFrame(
-        [(1, pgm_bytes(_grad_lr())), (2, pgm_bytes(_checker()[:32, :16]))],
-        ["media_id", "data"],
-    )
-    got = {r.media_id: r for r in decode_images(df, decode=pgm_decode).collect()}
-    assert (got[1].width, got[1].height, got[1].mode) == (64, 64, "L")
-    assert (got[2].width, got[2].height, got[2].mode) == (16, 32, "L")
-
-
 def test_scene_cuts_from_decoded_pixels(spark):
-    """decode → aHash → JVM bit_count scene segmentation on real bytes,
-    counts pinned and every hamming confirmed by a numpy popcount loop.
+    """aHash of real rasters → JVM bit_count scene segmentation, counts
+    pinned and every hamming confirmed by a numpy popcount loop.
 
     Three 8-frame clips: [A x3, B x5] (one hard cut), [A x8] (none),
     [A x2, B x3, C x3] (two hard cuts). A/B/C are structurally distinct
     images, so their pairwise aHash distances clear the same
     _CUT_HAMMING threshold the catalog query uses."""
     a, b, c = _grad_lr(), _grad_tb(), _checker()
-    # precondition: the real images are far apart in aHash space, and
+    # precondition: the images are far apart in aHash space, and
     # identical frames are at distance zero
     for x, y in ((a, b), (a, c), (b, c)):
         assert _hamming(_ahash64(x), _ahash64(y)) >= _CUT_HAMMING
@@ -113,20 +76,17 @@ def test_scene_cuts_from_decoded_pixels(spark):
         103: [a] * 2 + [b] * 3 + [c] * 3,
     }
     rows = [
-        (mid * 1000 + i, pgm_bytes(frame))
+        (mid, i, _signed(_ahash64(frame)))
         for mid, frames in clips.items()
         for i, frame in enumerate(frames)
     ]
-    hashed = average_hash(
-        spark.createDataFrame(rows, ["media_id", "data"]), pixels=pgm_pixels
-    )
-    # (uid -> clip, sample) + the constant 8 s clip duration, then the
-    # catalog family's own scene SQL tail over the REAL frame hashes
-    hashed.selectExpr(
-        "CAST(media_id div 1000 AS BIGINT) AS media_id",
-        "CAST(media_id % 1000 AS BIGINT) AS sample_id",
+    # (clip, sample, hash) + the constant 8 s clip duration, then the
+    # catalog family's own scene SQL tail over the frame hashes
+    spark.createDataFrame(rows, "media_id BIGINT, sample_id BIGINT, fh BIGINT").selectExpr(
+        "media_id",
+        "sample_id",
         "CAST(8000 AS BIGINT) AS duration_ms",
-        "ahash AS fh",
+        "fh",
     ).createOrReplaceTempView("codec_frames")
     try:
         got = {
@@ -144,7 +104,7 @@ def test_scene_cuts_from_decoded_pixels(spark):
     }
     assert got[101].mean_scene_ms == 4000.0
     assert got[103].n_frames == 8
-    # independent popcount sweep over the same decoded-pixel hashes
+    # independent popcount sweep over the same hashes
     for mid, frames in clips.items():
         hs = [_ahash64(f) for f in frames]
         cuts = sum(
@@ -153,38 +113,3 @@ def test_scene_cuts_from_decoded_pixels(spark):
             if _hamming(p, q) >= _CUT_HAMMING
         )
         assert got[mid].n_cuts == cuts, mid
-
-
-def test_near_dup_pairs_from_decoded_pixels(spark):
-    """decode → aHash → chunk-blocked near-dup join on real bytes: a
-    2-pixel-region perturbation lands within the hamming budget, while
-    distinct structures stay out; the pinned pair set is confirmed by
-    an independent numpy hash of the same rasters."""
-    base = _grad_lr()
-    near = base.copy()
-    # push one 8x8 block's mean across the global mean: exactly one
-    # aHash bit flips — a genuine near-duplicate raster
-    near[0:8, 24:32] = 255
-    far_1, far_2 = _grad_tb(), _checker()
-    imgs = {1: base, 2: near, 3: far_1, 4: far_2}
-    # precondition, computed independently of the pipeline
-    h = {k: _ahash64(v) for k, v in imgs.items()}
-    assert 1 <= _hamming(h[1], h[2]) <= 3
-    assert all(
-        _hamming(h[i], h[j]) > 3
-        for i in imgs
-        for j in imgs
-        if i < j and (i, j) != (1, 2)
-    )
-    hashed = average_hash(
-        spark.createDataFrame(
-            [(k, pgm_bytes(v)) for k, v in imgs.items()], ["media_id", "data"]
-        ),
-        pixels=pgm_pixels,
-    )
-    pairs = {
-        (r.id_a, r.id_b): r.hamming
-        for r in phash_near_dup_pairs(hashed, max_hamming=3).collect()
-    }
-    assert set(pairs) == {(1, 2)}
-    assert pairs[(1, 2)] == _hamming(h[1], h[2])

@@ -1,10 +1,9 @@
-"""No driver-side collection in any query or streaming module.
+"""No driver-side collection in any query module.
 
 An operator that iterates `.collect()` results is not distributed; a
 `.toPandas()` in a query path drags the corpus through the driver. The
-catalog's contract is that every query returns a lazy DataFrame and
-every streaming monitor stays inside the engine, so the gate is
-zero-exemption.
+catalog's contract is that every query returns a lazy DataFrame, so
+the gate is zero-exemption.
 
 AST-based, not grep: SQL strings like `collect_list(...)` and comments
 must not trip it, and `F.count`/`GroupedData.count` aggregations make
@@ -20,7 +19,7 @@ import pathlib
 PKG = pathlib.Path(__file__).resolve().parent.parent / (
     "automated_data_pipeline_python_spark"
 )
-WALKED = ("queries", "streaming")
+WALKED = ("queries",)
 ACTIONS = {"collect", "toPandas", "toLocalIterator"}
 
 

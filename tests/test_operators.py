@@ -1,4 +1,4 @@
-"""Unit tests: skew-salted join, connected components, logs."""
+"""Unit tests: connected components, logs, and composite operators."""
 
 from __future__ import annotations
 
@@ -9,53 +9,10 @@ from pyspark.sql import functions as F
 from automated_data_pipeline_python_spark.operators.clusters import (
     connected_components,
 )
-from automated_data_pipeline_python_spark.operators.skew import salted_join
 from automated_data_pipeline_python_spark.tables import load
 from automated_data_pipeline_python_spark.utils.logs import setup_logging
 
 SF = "/root/testdata/sf0.001"
-
-
-class TestSaltedJoin:
-    def test_inner_matches_plain_join(self, spark):
-        # Skewed fact: customer key 7 repeated heavily.
-        orders = load(spark, SF, "orders")
-        skewed = orders.withColumn(
-            "o_custkey", F.when(F.col("o_orderkey") % 3 == 0, 7).otherwise(F.col("o_custkey"))
-        )
-        cust = load(spark, SF, "customer")
-        plain = skewed.join(cust, skewed.o_custkey == cust.c_custkey).select(
-            "o_orderkey", "c_custkey"
-        )
-        cust2 = load(spark, SF, "customer").withColumnRenamed("c_custkey", "o_custkey")
-        salted = salted_join(skewed, cust2, on="o_custkey", num_salts=4).select(
-            "o_orderkey", F.col("o_custkey").alias("c_custkey")
-        )
-        assert sorted(map(tuple, plain.collect())) == sorted(map(tuple, salted.collect()))
-
-    def test_salt_spreads_hot_key_over_shuffle_keys(self, spark):
-        """The mechanism under test: a key carried by 90% of the fact
-        rows maps to num_salts distinct (key, salt) shuffle keys, so no
-        single reducer partition receives the whole hot key."""
-        from pyspark.sql import functions as F
-
-        hot = spark.range(900).select(F.lit(7).alias("k"), "id")
-        cold = spark.range(100).select((F.col("id") % 50).alias("k"), "id")
-        fact = hot.unionByName(cold)
-        salted = fact.withColumn(
-            "__salt", F.pmod(F.monotonically_increasing_id(), F.lit(8))
-        )
-        spread = (
-            salted.filter("k = 7").select("__salt").distinct().count()
-        )
-        assert spread == 8
-
-    def test_left_preserves_unmatched(self, spark):
-        orders = load(spark, SF, "orders").limit(100)
-        ghost = spark.range(0).selectExpr("id AS o_custkey", "id AS extra")
-        out = salted_join(orders, ghost, on="o_custkey", how="left")
-        assert out.count() == 100
-        assert out.filter("extra IS NULL").count() == 100
 
 
 class TestConnectedComponents:

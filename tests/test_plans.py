@@ -708,8 +708,8 @@ def test_round10_additions_python_free(catalog_plans):
 
 def test_round11_additions_python_free(catalog_plans):
     """The second multimodal family is pure DataFrame/SQL: content
-    features are deterministic stand-ins computed JVM-side (the codec
-    boundary stays in multimodal/binary_ops.py); scene/VAD windows are
+    features are deterministic stand-ins computed JVM-side (no codec
+    runs); scene/VAD windows are
     keyed by clip and the shard-packing window by (modality,
     id-bucket), never corpus-global."""
     from tests.test_registry_order import ROUND11_NEW

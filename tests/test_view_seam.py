@@ -1,5 +1,4 @@
-"""Query and streaming modules register views only through the two
-shared seams.
+"""Query modules register views only through the two shared seams.
 
 A table is exposed to spark.sql(...) with ``tables.register_views`` and
 a computed-once intermediate with ``catalog.materialize``; each seam is
@@ -21,7 +20,7 @@ PACKAGE = (
     pathlib.Path(__file__).resolve().parent.parent
     / "automated_data_pipeline_python_spark"
 )
-SEAM_USERS = ("queries", "streaming")
+SEAM_USERS = ("queries",)
 LOADERS = {"load", "load_scaled"}
 
 
